@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.queries.{Curation, Llm, Mining}
+import graft.streaming.Maintainer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,13 +60,13 @@ import org.apache.spark.sql.functions._
   *
   * Commit protocol: all four children are deterministic functions of
   * (manifest, frozen sidecars) written as idempotent overwrites of
-  * `b<updateId>`, and the commit MARKER (`cdc/_committed`,
-  * [[graft.streaming.StreamIndex]]'s sidecar) advances LAST — a crash
+  * `b<updateId>`, and the commit MARKER (guarded at `cdc`, read and
+  * written through [[graft.streaming.Maintainer]]) advances LAST — a crash
   * anywhere mid-apply replays to bit-identical children, an updateId
   * at or below the marker skips entirely, and [[compact]] bounds its
   * folds by the marker so a crashed attempt's own child is never
   * absorbed where the replay's overwrite could no longer reach it
-  * (the [[WinnowState.compactStream]] discipline). During the
+  * ([[graft.streaming.Maintainer.foldBound]]). During the
   * crash-to-replay window the state may hold additions without the
   * matching removals — candidate probes are briefly a SUPERSET
   * (callers verify candidates exactly anyway); they never miss new
@@ -199,7 +200,7 @@ object CdcDedupState {
         "skip the other families' deltas; rebuild with CdcDedupState.save " +
         "at the geometry you intend to maintain")
     val guard = s"$dir/cdc"
-    if (updateId <= graft.streaming.StreamIndex.committedBatch(spark, guard))
+    if (updateId <= Maintainer.committedBatch(spark, guard))
       return -1L
     val m = manifest.localCheckpoint()
     try {
@@ -254,7 +255,7 @@ object CdcDedupState {
       }
 
       // marker LAST — the commit point
-      graft.streaming.StreamIndex.writeCommitted(spark, guard, updateId)
+      Maintainer.writeCommitted(spark, guard, updateId)
       n
     } finally Checkpoints.release(m)
   }
@@ -321,8 +322,7 @@ object CdcDedupState {
     * unfolded so the replay's overwrite reaches them.
     */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val bound = Some(
-      graft.streaming.StreamIndex.committedBatch(spark, s"$dir/cdc") + 1)
+    val bound = Maintainer.foldBound(spark, s"$dir/cdc")
     val deadRoot = s"$dir/band_dead"
     val applied = Layouts.liveChildrenBefore(spark, deadRoot, bound).map(_.getName)
     val dead = deadRanks(spark, dir, bound).localCheckpoint()

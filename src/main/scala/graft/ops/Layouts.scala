@@ -76,9 +76,10 @@ object Layouts {
   }
 
   /** Repair a partitionBy layout that holds replayed duplicates — the
-    * reconcile path for [[graft.streaming.StreamIndex]]'s documented
-    * crash window (a failure between a batch's data append and its
-    * commit-marker write leaves that batch's rows twice). One row per
+    * reconcile path for the append-layout crash window
+    * [[graft.streaming.Maintainer]] documents (a failure between a
+    * batch's data append and its commit-marker write leaves that
+    * batch's rows twice). One row per
     * `idCol` survives (duplicates are bit-identical by construction:
     * same frozen model → same cell/code), rewritten one file per
     * partition directory and published by the same staged rename as
@@ -136,7 +137,7 @@ object Layouts {
     * micro-batch commits by OVERWRITING its own b<id> child —
     * idempotent, so a replayed trigger rewrites bit-identical content
     * instead of double-appending (the flat-append crash window
-    * [[graft.streaming.StreamIndex]] documents). Readers take the
+    * [[graft.streaming.Maintainer]] documents). Readers take the
     * union of [[liveChildren]]; [[foldChildren]] compacts many
     * children into one with a crash-safe protocol.
     */
@@ -380,7 +381,7 @@ object Layouts {
     * leaves the target absent but the COMPLETE `.tmp` present
     * (written and closed before the delete), and reads fall back to
     * it — a lost marker would otherwise reset commit state (e.g.
-    * [[graft.streaming.StreamIndex]]'s committedBatch to −1, inviting
+    * [[graft.streaming.Maintainer]]'s committedBatch to −1, inviting
     * a double-append) or wedge a ladder-rung reader entirely.
     */
   def writeSidecar(fs: org.apache.hadoop.fs.FileSystem, p: Path, content: String): Unit = {

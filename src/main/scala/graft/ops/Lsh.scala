@@ -239,7 +239,9 @@ object Lsh {
     * band frame is localCheckpoint'ed so the self-join sides read
     * materialized partitions instead of re-executing the signature
     * pipeline (AQE does not reuse exchanges across identical self-join
-    * inputs).
+    * inputs). The result reads that checkpoint: a per-trigger caller
+    * (StreamPhash) releases it with [[Checkpoints.release]] on the
+    * result after materializing.
     *
     * Returns distinct (d1, d2, s1, s2), d1 < d2.
     */
@@ -248,21 +250,7 @@ object Lsh {
       bandBits: Int,
       subBands: Int,
       subBits: Int,
-      maxBucket: Int): DataFrame =
-    simhashCandidatesManaged(bands, bandBits, subBands, subBits, maxBucket)._1
-
-  /** [[simhashCandidates]] plus the cleanup hook for the internal
-    * localCheckpoint — per-trigger callers (StreamPhash) must release
-    * after materializing or the keyed blocks accumulate until GC (the
-    * GlobalRank.withRankManaged discipline); one-shot queries use the
-    * plain form.
-    */
-  def simhashCandidatesManaged(
-      bands: DataFrame,
-      bandBits: Int,
-      subBands: Int,
-      subBits: Int,
-      maxBucket: Int): (DataFrame, () => Unit) = {
+      maxBucket: Int): DataFrame = {
     // Exactness precondition. The remaining-bits compaction below relies
     // on Java/Spark shift semantics masking the shift count mod 64: for
     // the TOP band ((b+1)*bandBits == 64 on a 64-bit signature),
@@ -306,14 +294,13 @@ object Lsh {
     val keyed = subBandKeyed(
       b0.join(sizes, Seq("b", "band")), bandBits, subBands, subBits, maxBucket)
       .localCheckpoint()
-    val out = keyed.as("x").join(keyed.as("y"),
+    keyed.as("x").join(keyed.as("y"),
         col("x.b") === col("y.b") && col("x.band") === col("y.band") &&
           col("x.__j") === col("y.__j") && col("x.__sub") === col("y.__sub") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
         col("x.simhash").as("s1"), col("y.simhash").as("s2"))
       .distinct()
-    (out, () => Checkpoints.release(keyed))
   }
 
   /** The shared sub-band keying of [[simhashCandidates]]: a sized band

@@ -159,27 +159,12 @@ object WinnowState {
   }
 
   /** Fold the per-batch streaming children into one — the small-file
-    * compaction for stream-maintained state, with
-    * [[Layouts.foldChildren]]'s crash-safe single-rename protocol,
-    * BOUNDED by the stream's commit marker when one exists
-    * ([[graft.streaming.StreamWinnow]] keeps it at this very root): a
-    * crashed attempt's own b<id> child must stay unfolded, or the
-    * replay's own-batch exclusion cannot see it inside a fold_ name
-    * and the batch double-counts against itself (the round-9 review
-    * finding). Without a marker (batch-mode state) every child folds.
+    * compaction for stream-maintained state, bounded by the commit
+    * marker [[graft.streaming.StreamWinnow]] keeps at this very root
+    * ([[graft.streaming.Maintainer.foldCommitted]]).
     */
-  def compactStream(spark: SparkSession, dir: String): Unit = {
-    val committed =
-      graft.streaming.StreamIndex.committedBatch(spark, s"$dir/fps")
-    // Some(committed + 1) UNCONDITIONALLY (Some(0) when no marker
-    // exists yet): a first-trigger crash can leave b0 written with
-    // the marker never created, and an unbounded fold would absorb
-    // that uncommitted child into a fold_ name — defeating the
-    // replay's own-batch exclusion (the exact hazard foldChildren's
-    // contract documents; StreamCuration.compactState does the same).
-    Layouts.foldChildren(spark, s"$dir/fps",
-      beforeBatch = Some(committed + 1))
-  }
+  def compactStream(spark: SparkSession, dir: String): Unit =
+    graft.streaming.Maintainer.foldCommitted(spark, s"$dir/fps", s"$dir/fps")
 
   private def ladderPath(dir: String) = new Path(s"$dir/_ladder")
 

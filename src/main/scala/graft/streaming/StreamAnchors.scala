@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -27,12 +27,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * dedup (StreamFrontier) first, which is how the stage-zero arc is
   * composed anyway.
   *
-  * Exactly-once: replays at/below the marker skip; an in-flight batch
-  * writes its delta as an idempotent per-batch child OVERWRITE
-  * (`stateDir/agg/b<id>`), then advances the marker LAST — a crash
-  * between the two replays to a bit-identical child. No state READ
-  * happens inside the trigger at all (pure delta append), so there is
-  * no own-child exclusion to get wrong.
+  * Exactly-once: [[Maintainer]], the delta landing in
+  * `stateDir/agg/b<id>`. No state READ happens inside the trigger at
+  * all (pure delta append), so there is no own-child exclusion to get
+  * wrong.
   *
   * Scale shape per trigger: the in-row extraction pass, then ONE
   * map-side-combinable aggregation keyed by dst_url — batch-sized
@@ -48,12 +46,9 @@ object StreamAnchors {
   /** Start the stream: micro-batches of `source` (doc_id, lang,
     * source) — fetched pages — flow through [[processBatch]]. */
   def start(source: DataFrame, stateDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), stateDir, id): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, id)
+    }
 
   /** The live anchor table: committed deltas merged — one row per
     * canonical target, counts exact, sets sorted-distinct. */
@@ -77,14 +72,8 @@ object StreamAnchors {
       stateDir: String,
       batchId: Long): Boolean = {
     val guard = s"$stateDir/agg"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchDocs.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
-    }
-    val b = batchDocs.localCheckpoint()
-    try {
-      val delta = graft.queries.Crawl.withOutlinks(b)
+    Maintainer.once(batchDocs, guard, batchId) { t =>
+      val delta = graft.queries.Crawl.withOutlinks(t.pin(batchDocs))
         .filter(col("kind") =!= "skip")
         .withColumn("src_host",
           expr("regexp_extract(src_url, '^https?://([^/]+)', 1)"))
@@ -96,9 +85,6 @@ object StreamAnchors {
           expr("array_sort(collect_set(src_host))").as("hosts"),
           expr("array_sort(collect_set(anchor))").as("anchors"))
       delta.write.mode("overwrite").parquet(s"$guard/b$batchId")
-      // marker LAST — the commit point
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      true
-    } finally graft.ops.Checkpoints.release(b)
+    }
   }
 }

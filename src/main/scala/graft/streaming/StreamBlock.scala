@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.ops.{BlockState, Checkpoints}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import graft.ops.BlockState
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -20,19 +20,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * row (StreamBlockSpec), which BlockStateSpec in turn proves ≡ the
   * full q110 recompute restricted to each batch.
   *
-  * Exactly-once, the [[StreamWinnow]] protocol verbatim: cleaned
-  * output overwrites `outDir/batch_<id>`, the state commit overwrites
-  * the per-batch child `blocks/b<id>` ([[BlockState.probe]]'s batchId
-  * mode — which also excludes children at/above the id from the
-  * probed state, so a crashed attempt's own commit never counts the
-  * batch against itself), and a batch id at or below the commit
-  * marker (the [[StreamIndex]] sidecar, beside the blocks dir) skips
-  * entirely.
+  * Exactly-once: [[Maintainer]], guarded beside the blocks dir.
+  * Cleaned output overwrites `outDir/batch_<id>`, the state commit
+  * overwrites the per-batch child `blocks/b<id>` ([[BlockState.probe]]'s
+  * batchId mode, which also excludes children at/above the id from the
+  * probed state).
   *
-  * Maintenance: [[compactStream]] folds the per-batch children,
-  * bounded by the commit marker (`Some(committed + 1)`
-  * unconditionally — the [[graft.ops.WinnowState.compactStream]]
-  * first-trigger-crash rule).
+  * Maintenance: [[compactStream]] folds the per-batch children below
+  * [[Maintainer.foldBound]].
   */
 object StreamBlock {
 
@@ -47,12 +42,9 @@ object StreamBlock {
       checkpoint: String,
       minDocs: Int = 3,
       blockTokens: Int = 10): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        cleanBatch(batch.toDF(), stateDir, outDir, id, minDocs, blockTokens): Unit
-      }
-      .start()
+    Maintainer.start(source, checkpoint) { (batch, id) =>
+      cleanBatch(batch, stateDir, outDir, id, minDocs, blockTokens)
+    }
 
   /** One micro-batch: clean + commit unless `batchId` is already
     * committed. Returns whether the batch was processed (false =
@@ -64,37 +56,22 @@ object StreamBlock {
       outDir: String,
       batchId: Long,
       minDocs: Int = 3,
-      blockTokens: Int = 10): Boolean = {
-    val spark = batch.sparkSession
-    val guard = s"$stateDir/blocks"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    val wrote =
-      if (batch.isEmpty) false
-      else {
-        val cleaned = BlockState.probe(batch, stateDir,
+      blockTokens: Int = 10): Boolean =
+    Maintainer.once(batch, s"$stateDir/blocks", batchId) { t =>
+      // probe localCheckpoints its output — owned by the trigger
+      t.own(BlockState.probe(batch, stateDir,
           minDocs = minDocs, blockTokens = blockTokens,
-          commit = true, batchId = Some(batchId))
-        cleaned.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        // probe localCheckpoints its output; the sink materialized it —
-        // release the blocks or a long stream leaks one batch per
-        // trigger (the StreamWinnow/StreamSemDedup discipline)
-        Checkpoints.release(cleaned)
-        true
-      }
-    // the marker advances even for empty batches (StreamIndex rule)
-    StreamIndex.writeCommitted(spark, guard, batchId)
-    wrote
-  }
+          commit = true, batchId = Some(batchId)))
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }
 
-  /** Fold the accumulated per-batch state children, bounded by the
-    * commit marker so a crashed trigger's uncommitted child never
-    * folds (see [[graft.ops.WinnowState.compactStream]]).
+  /** Fold the accumulated per-batch state children below the commit
+    * marker ([[Maintainer.foldBound]]).
     */
-  def compactStream(spark: SparkSession, stateDir: String): Unit = {
-    val committed = StreamIndex.committedBatch(spark, s"$stateDir/blocks")
-    BlockState.compact(spark, stateDir, beforeBatch = Some(committed + 1))
-  }
+  def compactStream(spark: SparkSession, stateDir: String): Unit =
+    BlockState.compact(spark, stateDir,
+      beforeBatch = Maintainer.foldBound(spark, s"$stateDir/blocks"))
 
   /** All cleaned batches as one frame (the read side of `outDir`). */
   def cleaned(spark: SparkSession, outDir: String): DataFrame =

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.CmsState
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING point-frequency counting — [[CmsState.add]] driven by
@@ -29,13 +29,10 @@ object StreamCms {
       stateDir: String,
       keyCol: String,
       valCol: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty)
-          CmsState.add(batch.toDF(), stateDir, keyCol, valCol, batchId = Some(id))
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      if (!batch.isEmpty)
+        CmsState.add(batch, stateDir, keyCol, valCol, batchId = Some(id))
+    }
 
   /** Current point estimates for `items` (key, v) — the read side. */
   def estimates(spark: SparkSession, stateDir: String, items: DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -24,10 +24,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * an audit row with domain='') rather than silently dropped — an
   * unjudgeable fetch is itself a compliance finding.
   *
-  * Exactly-once is the [[StreamWinnow]] protocol verbatim: idempotent
-  * per-batch child OVERWRITE, marker LAST, replays at/below the marker
-  * skip. No own-child exclusion read is needed on the write path (the
-  * delta depends only on the batch + the static verdict frame), which
+  * Exactly-once: [[Maintainer]]. No own-child exclusion read is
+  * needed on the write path (the delta depends only on the batch +
+  * the static verdict frame), which
   * makes this the catalog's simplest maintainer — the demonstration
   * that state DESIGN (grain choice) is what buys exactly-once, not
   * protocol complexity.
@@ -50,12 +49,9 @@ object StreamCompliance {
       source: DataFrame,
       verdicts: DataFrame,
       stateDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), verdicts, stateDir, id): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, verdicts, stateDir, id)
+    }
 
   /** The merged per-domain report across all committed batches —
     * q234's columns plus the unjudged-event count. */
@@ -95,36 +91,25 @@ object StreamCompliance {
       stateDir: String,
       batchId: Long): Boolean = {
     val guard = s"$stateDir/audit"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchFetches.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
-    }
     import spark.implicits._
-    val b = batchFetches.localCheckpoint()
-    try {
-      val judged = b.join(
-          verdicts.select($"url", $"domain", $"allowed"), Seq("url"), "left")
+    Maintainer.once(batchFetches, guard, batchId) { t =>
+      val b = t.pin(batchFetches)
       // judged feeds two aggregates (delta + unjudged trailer) —
-      // materialize once, release in this trigger
-      val j = judged.localCheckpoint()
-      try {
-        val delta = j.filter($"domain".isNotNull)
-          .groupBy($"domain", $"url", $"allowed")
-          .agg(count(lit(1)).cast("long").as("n_add"))
-          .select($"domain", $"url", $"n_add", $"allowed".cast("long"),
-            lit(0L).as("n_unjudged"))
-        val unj = j.filter($"domain".isNull)
-          .agg(count(lit(1)).cast("long").as("n"))
-          .select(lit("").as("domain"), lit("").as("url"), lit(0L).as("n_add"),
-            lit(1L).as("allowed"), $"n".as("n_unjudged"))
-          .filter($"n_unjudged" > 0)
-        delta.unionByName(unj)
-          .write.mode("overwrite").parquet(s"$guard/b$batchId")
-        // marker LAST — the commit point
-        StreamIndex.writeCommitted(spark, guard, batchId)
-        true
-      } finally graft.ops.Checkpoints.release(j)
-    } finally graft.ops.Checkpoints.release(b)
+      // materialize once
+      val j = t.pin(b.join(
+        verdicts.select($"url", $"domain", $"allowed"), Seq("url"), "left"))
+      val delta = j.filter($"domain".isNotNull)
+        .groupBy($"domain", $"url", $"allowed")
+        .agg(count(lit(1)).cast("long").as("n_add"))
+        .select($"domain", $"url", $"n_add", $"allowed".cast("long"),
+          lit(0L).as("n_unjudged"))
+      val unj = j.filter($"domain".isNull)
+        .agg(count(lit(1)).cast("long").as("n"))
+        .select(lit("").as("domain"), lit("").as("url"), lit(0L).as("n_add"),
+          lit(1L).as("allowed"), $"n".as("n_unjudged"))
+        .filter($"n_unjudged" > 0)
+      delta.unionByName(unj)
+        .write.mode("overwrite").parquet(s"$guard/b$batchId")
+    }
   }
 }

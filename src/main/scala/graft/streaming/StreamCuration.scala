@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ops.{CurationPipeline, Lsh}
 import graft.queries.Llm
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -54,17 +54,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * visible-hot bucket.
   *
   * Exactly-once, everywhere: the state roots and the output are
-  * [[graft.ops.Layouts.liveChildren]] child-dir layouts — every write
-  * of a trigger OVERWRITES that batch's own `b<id>` child, and reads
-  * during the trigger exclude children at or above the current id
-  * ([[graft.ops.Layouts.liveChildrenBefore]]) — so a replay after a
-  * crash anywhere mid-batch sees exactly the pre-crash state view,
-  * makes identical decisions, and rewrites bit-identical children; a
-  * batch id at or below the commit marker skips entirely (the
-  * [[StreamIndex]] sidecar). Per-batch children are the small-file
-  * tax; [[compactState]] folds them with
-  * [[graft.ops.Layouts.foldChildren]]'s crash-safe protocol on the
-  * same schedule as the index layouts.
+  * [[graft.ops.Layouts.liveChildren]] child-dir layouts under
+  * [[Maintainer]]'s protocol. Per-batch children are the small-file
+  * tax; [[compactState]] folds them on the same schedule as the index
+  * layouts.
   */
 object StreamCuration {
 
@@ -80,12 +73,9 @@ object StreamCuration {
       stateDir: String,
       outDir: String,
       maxBucket: Int = Llm.lshMaxBucket): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch, stateDir, outDir, id, maxBucket): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, outDir, id, maxBucket)
+    }
 
   /** The curated output across all committed batches. */
   def curated(spark: SparkSession, outDir: String): DataFrame =
@@ -103,119 +93,100 @@ object StreamCuration {
       batchId: Long,
       maxBucket: Int = Llm.lshMaxBucket): Boolean = {
     import spark.implicits._
-    val guard = s"$stateDir/state"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchDocs.isEmpty) {
-      // the marker advances even for empty batches (StreamIndex rule)
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
+    Maintainer.once(batchDocs, s"$stateDir/state", batchId) { t =>
+      val docs = t.pin(batchDocs)
+      // in-batch signature frames, each consumed more than once
+      val sets = t.pin(Llm.shingleSets(docs))
+      val bands = t.pin(Llm.bandsOf(sets)
+        .withColumn("bkey", concat_ws("|", col("band"), col("bsig"))))
+
+      // 1. gate → fingerprint → exact dedup (batch-local min + state).
+      // The fps state carries DOC-LEVEL PROVENANCE — one (fp, doc_id)
+      // row per gated doc, including docs the batch itself drops as
+      // exact dups — so a deletion request propagates with the same
+      // idempotent doc_id anti-join as every other root (Forget.exclude
+      // here, Forget.compact physically), and a forgotten doc's
+      // fingerprint stops suppressing future identical text IMMEDIATELY
+      // while a LIVING doc sharing the fp keeps suppressing through its
+      // own row. The refcounted (fp, ndocs) alternative was rejected:
+      // negative-delta decrements double-apply under a replayed or
+      // duplicated forget request (provenance anti-joins are idempotent
+      // by construction) and the live set would need a corpus-wide
+      // sum-per-fp aggregation on EVERY batch read, where the
+      // provenance rows feed the existing anti-join unchanged — at
+      // ~1/(1−duprate)× the rows, signature-sized either way. A
+      // PRE-provenance state dir (children holding fp only) fails this
+      // read's projection on the first post-upgrade trigger — run
+      // Layouts.adoptSchema(s"$stateDir/fps", "fp STRING, doc_id
+      // BIGINT") once to migrate; its null-doc_id rows keep suppressing
+      // duplicates but cannot be selectively forgotten (rebuild the
+      // root for full forget coverage of pre-upgrade docs).
+      val fp = t.pin(CurationPipeline.qualityGate(docs)
+        .withColumn("fp", md5(trim(regexp_replace(lower(col("text")), "[ \\t\\n\\x0B\\f\\r]+", " ")))))
+      val seenFps = graft.ops.Forget.exclude(
+        readState(spark, s"$stateDir/fps", "fp STRING, doc_id BIGINT", batchId),
+        spark, stateDir)
+      val keep = fp.groupBy($"fp").agg(min($"doc_id").as("doc_id"))
+      val exact = fp
+        .join(keep, Seq("fp", "doc_id"), "left_semi")
+        .join(seenFps.select($"fp"), Seq("fp"), "left_anti")
+
+      // 2. near-dup: candidates from both sides, then exact verify
+      val inBatch = Lsh.expandPairsCapped(bands, Seq("band", "bsig"), "doc_id", maxBucket)
+        .select($"d1", $"d2")
+      // forget tombstones are honored AT PROBE TIME: a deletion request
+      // (ops.Forget.tombstone) stops the near-dup pass — and, via the
+      // provenance-carrying fps layout above, the exact-dup pass — from
+      // matching against the forgotten docs immediately; physical
+      // removal waits for Forget.compact's cadence over all THREE roots
+      // (bands, sets, fps).
+      val seenBands = graft.ops.Forget.exclude(
+        readState(spark, s"$stateDir/bands",
+          "bkey STRING, doc_id BIGINT", batchId), spark, stateDir)
+      val cross = Lsh.incrementalCandidatesFrom(spark, seenBands, bands, maxBucket)
+        .select(col("corpus_doc").as("d1"), col("batch_doc").as("d2"))
+      val seenSets = graft.ops.Forget.exclude(
+        readState(spark, s"$stateDir/sets",
+          "doc_id BIGINT, gs ARRAY<STRING>", batchId), spark, stateDir)
+      val verified = inBatch.union(cross).distinct()
+        .join(seenSets.union(sets).select($"doc_id".as("d1"), $"gs".as("gs1")), "d1")
+        .join(sets.select($"doc_id".as("d2"), $"gs".as("gs2")), "d2")
+        .withColumn("inter", size(array_intersect($"gs1", $"gs2")))
+        .withColumn("jac",
+          $"inter".cast("double") / (size($"gs1") + size($"gs2") - $"inter"))
+        .filter($"jac" >= 0.35)
+      // in-batch pairs drop the higher id (q100's rule); cross pairs drop
+      // the batch side — first-wins, ≡ q100 under ordered arrival
+      val dropSet = verified.select($"d2".as("doc_id")).distinct()
+
+      val survivors = exact.join(dropSet, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("lang"), col("source"),
+          length(col("text")).cast("long").as("n_chars"),
+          size(filter(split(col("text"), "[ \\t\\n\\x0B\\f\\r]+"), x => x =!= "")).cast("long").as("n_tokens"),
+          col("text"))
+      survivors.write.mode("overwrite").parquet(s"$outDir/b$batchId")
+
+      // 3. state commits AFTER the decisions, each an idempotent
+      // overwrite of this batch's child. Bands/sets ingest EVERY batch
+      // doc (q100 computes pairs on the pre-gate corpus); fps ingest
+      // gated docs (q100's exact-dedup domain).
+      bands.select($"bkey", $"doc_id")
+        .write.mode("overwrite").parquet(s"$stateDir/bands/b$batchId")
+      sets.write.mode("overwrite").parquet(s"$stateDir/sets/b$batchId")
+      fp.select($"fp", $"doc_id")
+        .write.mode("overwrite").parquet(s"$stateDir/fps/b$batchId")
     }
-    val docs = batchDocs.localCheckpoint()
-    // in-batch signature frames, each consumed more than once
-    val sets = Llm.shingleSets(docs).localCheckpoint()
-    val bands = Llm.bandsOf(sets)
-      .withColumn("bkey", concat_ws("|", col("band"), col("bsig")))
-      .localCheckpoint()
-
-    // 1. gate → fingerprint → exact dedup (batch-local min + state).
-    // The fps state carries DOC-LEVEL PROVENANCE — one (fp, doc_id)
-    // row per gated doc, including docs the batch itself drops as
-    // exact dups — so a deletion request propagates with the same
-    // idempotent doc_id anti-join as every other root (Forget.exclude
-    // here, Forget.compact physically), and a forgotten doc's
-    // fingerprint stops suppressing future identical text IMMEDIATELY
-    // while a LIVING doc sharing the fp keeps suppressing through its
-    // own row. The refcounted (fp, ndocs) alternative was rejected:
-    // negative-delta decrements double-apply under a replayed or
-    // duplicated forget request (provenance anti-joins are idempotent
-    // by construction) and the live set would need a corpus-wide
-    // sum-per-fp aggregation on EVERY batch read, where the
-    // provenance rows feed the existing anti-join unchanged — at
-    // ~1/(1−duprate)× the rows, signature-sized either way. A
-    // PRE-provenance state dir (children holding fp only) fails this
-    // read's projection on the first post-upgrade trigger — run
-    // Layouts.adoptSchema(s"$stateDir/fps", "fp STRING, doc_id
-    // BIGINT") once to migrate; its null-doc_id rows keep suppressing
-    // duplicates but cannot be selectively forgotten (rebuild the
-    // root for full forget coverage of pre-upgrade docs).
-    val fp = CurationPipeline.qualityGate(docs)
-      .withColumn("fp", md5(trim(regexp_replace(lower(col("text")), "[ \\t\\n\\x0B\\f\\r]+", " "))))
-      .localCheckpoint()
-    val seenFps = graft.ops.Forget.exclude(
-      readState(spark, s"$stateDir/fps", "fp STRING, doc_id BIGINT", batchId),
-      spark, stateDir)
-    val keep = fp.groupBy($"fp").agg(min($"doc_id").as("doc_id"))
-    val exact = fp
-      .join(keep, Seq("fp", "doc_id"), "left_semi")
-      .join(seenFps.select($"fp"), Seq("fp"), "left_anti")
-
-    // 2. near-dup: candidates from both sides, then exact verify
-    val inBatch = Lsh.expandPairsCapped(bands, Seq("band", "bsig"), "doc_id", maxBucket)
-      .select($"d1", $"d2")
-    // forget tombstones are honored AT PROBE TIME: a deletion request
-    // (ops.Forget.tombstone) stops the near-dup pass — and, via the
-    // provenance-carrying fps layout above, the exact-dup pass — from
-    // matching against the forgotten docs immediately; physical
-    // removal waits for Forget.compact's cadence over all THREE roots
-    // (bands, sets, fps).
-    val seenBands = graft.ops.Forget.exclude(
-      readState(spark, s"$stateDir/bands",
-        "bkey STRING, doc_id BIGINT", batchId), spark, stateDir)
-    val cross = Lsh.incrementalCandidatesFrom(spark, seenBands, bands, maxBucket)
-      .select(col("corpus_doc").as("d1"), col("batch_doc").as("d2"))
-    val seenSets = graft.ops.Forget.exclude(
-      readState(spark, s"$stateDir/sets",
-        "doc_id BIGINT, gs ARRAY<STRING>", batchId), spark, stateDir)
-    val verified = inBatch.union(cross).distinct()
-      .join(seenSets.union(sets).select($"doc_id".as("d1"), $"gs".as("gs1")), "d1")
-      .join(sets.select($"doc_id".as("d2"), $"gs".as("gs2")), "d2")
-      .withColumn("inter", size(array_intersect($"gs1", $"gs2")))
-      .withColumn("jac",
-        $"inter".cast("double") / (size($"gs1") + size($"gs2") - $"inter"))
-      .filter($"jac" >= 0.35)
-    // in-batch pairs drop the higher id (q100's rule); cross pairs drop
-    // the batch side — first-wins, ≡ q100 under ordered arrival
-    val dropSet = verified.select($"d2".as("doc_id")).distinct()
-
-    val survivors = exact.join(dropSet, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("lang"), col("source"),
-        length(col("text")).cast("long").as("n_chars"),
-        size(filter(split(col("text"), "[ \\t\\n\\x0B\\f\\r]+"), x => x =!= "")).cast("long").as("n_tokens"),
-        col("text"))
-    survivors.write.mode("overwrite").parquet(s"$outDir/b$batchId")
-
-    // 3. state commits AFTER the decisions, each an idempotent
-    // overwrite of this batch's child. Bands/sets ingest EVERY batch
-    // doc (q100 computes pairs on the pre-gate corpus); fps ingest
-    // gated docs (q100's exact-dedup domain).
-    bands.select($"bkey", $"doc_id")
-      .write.mode("overwrite").parquet(s"$stateDir/bands/b$batchId")
-    sets.write.mode("overwrite").parquet(s"$stateDir/sets/b$batchId")
-    fp.select($"fp", $"doc_id")
-      .write.mode("overwrite").parquet(s"$stateDir/fps/b$batchId")
-    StreamIndex.writeCommitted(spark, guard, batchId)
-    Seq(docs, sets, bands, fp).foreach(graft.ops.Checkpoints.release)
-    true
   }
 
-  /** Fold each state root's per-batch children (one lands per batch) —
-    * run on the same schedule as the index layouts' compaction;
-    * decisions are state-CONTENT functions, so a fold never changes
-    * them (StreamCurationSpec), and
-    * [[graft.ops.Layouts.foldChildren]]'s protocol is crash-safe at
-    * every step. The fold is BOUNDED BY THE COMMIT MARKER: a crashed
-    * attempt's own `b<id>` child (committed before the marker
-    * advanced) must stay unfolded, or the replay's own-batch
-    * exclusion cannot see it inside a `fold_` name and the batch
-    * would be judged against itself — the round-9 review finding.
+  /** Fold each state root's per-batch children (one lands per batch)
+    * below the commit marker ([[Maintainer.foldCommitted]]) — run on
+    * the same schedule as the index layouts' compaction; decisions are
+    * state-CONTENT functions, so a fold never changes them
+    * (StreamCurationSpec).
     */
-  def compactState(spark: SparkSession, stateDir: String): Unit = {
-    val bound = StreamIndex.committedBatch(spark, s"$stateDir/state") + 1
-    Seq("bands", "sets", "fps").foreach { d =>
-      graft.ops.Layouts.foldChildren(spark, s"$stateDir/$d",
-        beforeBatch = Some(bound))
-    }
-  }
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    Maintainer.foldCommitted(spark, s"$stateDir/state",
+      Seq("bands", "sets", "fps").map(d => s"$stateDir/$d"): _*)
 
   /** Accumulated state below the current batch id, or a typed empty
     * frame on first batch.

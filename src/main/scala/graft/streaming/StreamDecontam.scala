@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Decontam
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -45,12 +45,9 @@ object StreamDecontam {
       outDir: String,
       checkpoint: String,
       gramTokens: Int = 8): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        probeBatch(batch.toDF(), stateDir, outDir, id, gramTokens): Unit
-      }
-      .start()
+    Maintainer.start(source, checkpoint) { (batch, id) =>
+      probeBatch(batch, stateDir, outDir, id, gramTokens)
+    }
 
   /** One micro-batch: probe + overwrite the per-batch report.
     * Returns whether a report was written (false = empty batch; an

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.HllState
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING distinct counting — [[HllState.add]] driven by document
@@ -28,13 +28,10 @@ object StreamDistinct {
       stateDir: String,
       keyCol: String,
       valCol: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty)
-          HllState.add(batch.toDF(), stateDir, keyCol, valCol, batchId = Some(id))
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      if (!batch.isEmpty)
+        HllState.add(batch, stateDir, keyCol, valCol, batchId = Some(id))
+    }
 
   /** Current per-key estimates (the read side). */
   def estimates(spark: SparkSession, stateDir: String): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,13 +28,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * this protocol). Compaction is [[graft.ops.Layouts.foldChildren]]'s
   * job on the usual schedule.
   *
-  * Exactly-once is the [[StreamWinnow]] protocol verbatim: both
-  * writes are idempotent per-batch child OVERWRITES, the commit
-  * marker advances LAST, replays at/below the marker skip, and the
-  * in-flight batch reads state via own-child EXCLUSION
-  * (`readChildren(beforeBatch)`) so a crash between the state write
-  * and the marker replays to bit-identical children instead of
-  * suppressing its own rows.
+  * Exactly-once: [[Maintainer]] — the in-flight batch reads state via
+  * own-child EXCLUSION (`readChildren(beforeBatch)`), so a replay
+  * cannot suppress its own rows.
   *
   * Scale shape per trigger: canonicalization in-row; ONE exchange for
   * the within-batch window (batch-sized); the anti-join against seen
@@ -50,12 +46,9 @@ object StreamFrontier {
   /** Start the stream: micro-batches of `source` (doc_id, url) flow
     * through [[processBatch]]. */
   def start(source: DataFrame, stateDir: String, outDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), stateDir, outDir, id): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, outDir, id)
+    }
 
   /** Frontier entries across all committed batches — one row per
     * canonical page, ever. */
@@ -75,20 +68,14 @@ object StreamFrontier {
       outDir: String,
       batchId: Long): Boolean = {
     val guard = s"$stateDir/seen"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchUrls.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
-    }
     import spark.implicits._
-    val b = batchUrls.localCheckpoint()
-    try {
+    Maintainer.once(batchUrls, guard, batchId) { t =>
       // within-batch alias collapse: ONE row per canonical key — a
       // row_number, not a min-url filter, because the same url string
       // discovered twice in one batch (two referrer pages) would pass
       // a min filter twice and enter the frontier twice (the r15
       // self-review catch); (url, doc_id) makes the pick deterministic
-      val kept = graft.queries.Mining.withCanonUrl(b)
+      val kept = graft.queries.Mining.withCanonUrl(t.pin(batchUrls))
         .withColumn("rn", row_number().over(
           Window.partitionBy($"canon_url").orderBy($"url".asc, $"doc_id".asc)))
         .filter($"rn" === 1)
@@ -97,19 +84,12 @@ object StreamFrontier {
       // b<id> — reading it would suppress this batch's own rows
       val seenBefore = graft.ops.Layouts.readChildren(
         spark, guard, seenDdl, beforeBatch = Some(batchId))
-      // fresh is consumed twice (output + state) — materialize once,
-      // release in the same trigger (the StreamWinnow discipline)
-      val fresh = kept.join(seenBefore, Seq("canon_url"), "left_anti")
-        .select($"doc_id", $"url", $"canon_url")
-        .localCheckpoint()
-      try {
-        fresh.write.mode("overwrite").parquet(s"$outDir/new/b$batchId")
-        fresh.select($"canon_url")
-          .write.mode("overwrite").parquet(s"$guard/b$batchId")
-        // marker LAST — the commit point
-        StreamIndex.writeCommitted(spark, guard, batchId)
-        true
-      } finally graft.ops.Checkpoints.release(fresh)
-    } finally graft.ops.Checkpoints.release(b)
+      // fresh is consumed twice (output + state) — materialize once
+      val fresh = t.pin(kept.join(seenBefore, Seq("canon_url"), "left_anti")
+        .select($"doc_id", $"url", $"canon_url"))
+      fresh.write.mode("overwrite").parquet(s"$outDir/new/b$batchId")
+      fresh.select($"canon_url")
+        .write.mode("overwrite").parquet(s"$guard/b$batchId")
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.ops.IvfIndex
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING index maintenance — [[IvfIndex.appendSaved]] driven by a
@@ -10,26 +9,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * vector index (new documents are embedded upstream and must become
   * searchable within a trigger, not at the next nightly rebuild).
   *
-  * Shape: `readStream → foreachBatch(appendBatch)`. Each micro-batch
+  * Shape: `readStream → foreachBatch(append)`. Each micro-batch
   * assigns + appends under the FROZEN centroids (cost O(|batch|), the
   * q74/appendSaved posture); probes of the live layout see every
   * committed batch with partition pruning intact (IndexAppendSpec's
   * contract — append ≡ rebuild under the same model).
   *
-  * Exactly-once: foreachBatch is AT-LEAST-once on restart (the sink
-  * checkpoint replays the last uncommitted trigger), and a blind
-  * append would duplicate the replayed batch's vectors in the layout.
-  * A batch-id commit marker beside the layout
-  * (`path + "__commits"`, the [[graft.ops.IndexDrift.statsPath]]
-  * sidecar convention — NOT inside the directory, so a
-  * [[IvfIndex.compactSaved]] republish cannot drop it) makes replays
-  * no-ops: a batch id at or below the marker returns without writing.
-  * Remaining window: a crash BETWEEN the data append and the marker
-  * write replays one batch's files — run
-  * [[graft.ops.Layouts.dedupPartitioned]] to reconcile (one row per
-  * vec_id survives; duplicates are bit-identical under the frozen
-  * model), or use a transactional table format in production (the
-  * same honest caveat as [[StreamCuration.start]]).
+  * Exactly-once: [[Maintainer.once]] with the marker beside the
+  * layout (`path + "__commits"`, the [[graft.ops.IndexDrift.statsPath]]
+  * sidecar convention, so an [[IvfIndex.compactSaved]] republish
+  * cannot drop it), including its append-layout crash-window caveat.
   *
   * Maintenance cadence composes with the batch operators unchanged:
   * [[IvfIndex.compactSaved]] for the small-file tax,
@@ -66,49 +55,7 @@ object StreamIndex {
       path: String,
       checkpoint: String,
       append: DataFrame => Unit): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        appendBatch(batch.toDF(), path, id, append): Unit
-      }
-      .start()
-
-  /** One micro-batch: run `append` unless `batchId` is already
-    * committed. Returns whether data was written (false = replayed
-    * batch skipped, or empty batch).
-    */
-  private[graft] def appendBatch(
-      batch: DataFrame,
-      path: String,
-      batchId: Long,
-      append: DataFrame => Unit): Boolean = {
-    val spark = batch.sparkSession
-    if (batchId <= committedBatch(spark, path)) return false
-    val wrote =
-      if (batch.isEmpty) false
-      else { append(batch); true }
-    // the marker advances even for empty batches: a replayed empty
-    // trigger must not block later ids behind a stale marker
-    writeCommitted(spark, path, batchId)
-    wrote
-  }
-
-  private def markerPath(path: String) = new Path(path + "__commits")
-
-  private[graft] def committedBatch(spark: SparkSession, path: String): Long = {
-    val p = markerPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.ops.Layouts.readSidecar(fs, p).map(_.trim.toLong).getOrElse(-1L)
-  }
-
-  // atomic temp+rename (Layouts.writeSidecar): the marker is the
-  // replay guard, so a torn in-place overwrite would wedge every
-  // subsequent trigger behind a NumberFormatException — or worse,
-  // invite a manual delete that resets committed to -1 and lets the
-  // replayed batch double-append
-  private[graft] def writeCommitted(spark: SparkSession, path: String, id: Long): Unit = {
-    val p = markerPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.ops.Layouts.writeSidecar(fs, p, s"$id\n")
-  }
+    Maintainer.start(source, checkpoint) { (batch, id) =>
+      Maintainer.once(batch, path, id)(_ => append(batch))
+    }
 }

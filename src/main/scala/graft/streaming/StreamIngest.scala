@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.{Html, Warc}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -37,11 +37,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the same files — ingestion is embarrassingly per-file, so
   * micro-batching cannot change the answer, and the spec pins that.
   *
-  * Exactly-once: the [[StreamIndex]] protocol verbatim — output and
-  * quarantine children are idempotent `b<id>` overwrites, the marker
-  * advances LAST, replays at/below the marker skip. A crash between
-  * the two child writes replays to bit-identical children (both are
-  * deterministic functions of the batch).
+  * Exactly-once: [[Maintainer]] — output and quarantine children are
+  * both deterministic functions of the batch.
   */
 object StreamIngest {
 
@@ -54,12 +51,9 @@ object StreamIngest {
   /** Start the stream: micro-batches of `source` (file, bytes) flow
     * through [[processBatch]]. */
   def start(source: DataFrame, stateDir: String, outDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch, stateDir, outDir, id): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, outDir, id)
+    }
 
   /** Clean pages across all committed batches. */
   def pages(spark: SparkSession, outDir: String): DataFrame =
@@ -71,21 +65,19 @@ object StreamIngest {
 
   /** The batch parse+extract — ONE shape shared by the per-trigger
     * path and the spec's one-shot equivalence run. Returns (pages,
-    * quarantine, handle) for the given (file, bytes) corpus; `handle`
-    * is the materialized one-pass parse BOTH frames read — the caller
-    * must Checkpoints.release it after consuming them.
+    * quarantine) for the given (file, bytes) corpus; both read the
+    * one-pass parse pinned in `t`.
     */
-  private[graft] def ingest(batch: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def ingest(
+      t: Maintainer.Trigger, batch: DataFrame): (DataFrame, DataFrame) = {
     val s = batch.sparkSession
     import s.implicits._
     // ONE decompress+frame pass for both consumers: records and the
     // per-file audit trailers come out of the SAME cursor
     // (Warc.recordsAudited) — on gzipped crawls inflation dominates,
     // so a separate audit pass would double ingest CPU. The combined
-    // frame is materialized once and handed back to the caller, who
-    // releases it in the same trigger (the StreamWinnow discipline —
-    // nothing outlives the batch).
-    val combined = Warc.recordsAudited(batch).localCheckpoint()
+    // frame is materialized once, owned by the caller's trigger.
+    val combined = t.pin(Warc.recordsAudited(batch))
     // envelope strip via Warc.http*Col — the guarded form (a record
     // body without an HTTP envelope passes through whole; a naked
     // locate()+substring drops its first 3 chars on no-match)
@@ -101,7 +93,7 @@ object StreamIngest {
     val quarantine = combined.filter($"is_audit" === 1)
       .filter($"n_bytes" > 0L && ($"n_records" === 0L || $"truncated" === 1L))
       .select($"file", $"n_bytes", $"n_records", $"truncated")
-    (pages, quarantine, combined)
+    (pages, quarantine)
   }
 
   /** One micro-batch through ingestion — directly drivable (the
@@ -112,23 +104,10 @@ object StreamIngest {
       stateDir: String,
       outDir: String,
       batchId: Long): Boolean = {
-    val guard = s"$stateDir/state"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchFiles.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
-    }
-    val b = batchFiles.localCheckpoint()
-    val (pages, quarantine, handle) = ingest(b)
-    try {
+    Maintainer.once(batchFiles, s"$stateDir/state", batchId) { t =>
+      val (pages, quarantine) = ingest(t, t.pin(batchFiles))
       pages.write.mode("overwrite").parquet(s"$outDir/pages/b$batchId")
       quarantine.write.mode("overwrite").parquet(s"$outDir/quar/b$batchId")
-      // marker LAST — the commit point
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      true
-    } finally {
-      graft.ops.Checkpoints.release(handle)
-      graft.ops.Checkpoints.release(b)
     }
   }
 }

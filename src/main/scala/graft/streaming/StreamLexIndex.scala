@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.LexIndex
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING lexical-index maintenance — [[LexIndex.append]] driven by
@@ -28,12 +28,9 @@ object StreamLexIndex {
     * `indexPath`.
     */
   def start(source: DataFrame, indexPath: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$indexPath/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) LexIndex.append(batch.toDF(), indexPath, id)
-      }
-      .start()
+    Maintainer.start(source, s"$indexPath/ckpt") { (batch, id) =>
+      if (!batch.isEmpty) LexIndex.append(batch, indexPath, id)
+    }
 
   /** Index-served BM25 for `terms` over everything folded so far —
     * the read side, bit-identical to a rebuild over the same corpus.

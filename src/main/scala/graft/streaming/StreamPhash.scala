@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.{Lsh, Multimodal}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -53,10 +53,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ingested (a later copy must match through it), so an RTBF request
   * names the content's copies, not just the canonical.
   *
-  * Exactly-once: the [[StreamIndex]] protocol verbatim — per-batch
-  * idempotent child overwrite, reads exclude children at/above the
-  * current id, marker advances last, replays at/below the marker
-  * skip. [[compactState]] folds bounded by the marker.
+  * Exactly-once: [[Maintainer]]; [[compactState]] folds bounded by
+  * the marker.
   */
 object StreamPhash {
 
@@ -78,13 +76,10 @@ object StreamPhash {
       outDir: String,
       maxBucket: Int = 256,
       fingerprint: DataFrame => DataFrame = Multimodal.imagePhash): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch, stateDir, outDir, id, maxBucket,
-          fingerprint): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, outDir, id, maxBucket,
+        fingerprint)
+    }
 
   /** [[Multimodal.audioFingerprint]] in [[start]]'s fingerprint
     * contract (the ahash column renamed to the maintainer's phash). */
@@ -108,58 +103,47 @@ object StreamPhash {
       maxBucket: Int = 256,
       fingerprint: DataFrame => DataFrame = Multimodal.imagePhash): Boolean = {
     import spark.implicits._
-    val guard = s"$stateDir/state"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchMedia.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
+    Maintainer.once(batchMedia, s"$stateDir/state", batchId) { t =>
+      val ph = t.pin(fingerprint(batchMedia))
+      // forget tombstones honored at probe time
+      val seenPh = graft.ops.Forget.exclude(
+        graft.ops.Layouts.readChildren(
+          spark, s"$stateDir/ph", outDdl, beforeBatch = Some(batchId)),
+        spark, stateDir)
+
+      // the candidate frame reads the keyed band checkpoint
+      // simhashCandidates materializes — owned by the trigger
+      val inBatch = t.own(Lsh.simhashCandidates(
+        Multimodal.phashBands(ph),
+        bandBits = Multimodal.PhashBandBits,
+        subBands = Multimodal.PhashSubBands,
+        subBits = Multimodal.PhashSubBits, maxBucket = maxBucket))
+      val cross = Lsh.incrementalSimhashCandidates(
+        seenPh.select($"doc_id", $"phash".as("simhash")),
+        ph.select($"doc_id", $"phash".as("simhash")),
+        numBands = Multimodal.PhashNumBands,
+        bandBits = Multimodal.PhashBandBits,
+        subBands = Multimodal.PhashSubBands,
+        subBits = Multimodal.PhashSubBits, maxBucket = maxBucket)
+      // exact verify on the candidate-carried signatures; in-batch pairs
+      // drop d2 (higher id), cross pairs drop the batch side — both are
+      // the pair's second column, so one drop rule covers both streams
+      val dropSet = inBatch.select($"d2", $"s1", $"s2")
+        .unionByName(cross.select($"batch_doc".as("d2"), $"s1", $"s2"))
+        .filter(expr("bit_count(s1 ^ s2) <= 5"))
+        .select($"d2".as("doc_id")).distinct()
+
+      ph.join(dropSet, Seq("doc_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+
+      // state commits AFTER the decisions — EVERY batch blob ingests
+      // (a later dup of a dropped dup must still match through it)
+      ph.write.mode("overwrite").parquet(s"$stateDir/ph/b$batchId")
     }
-    val ph = fingerprint(batchMedia).localCheckpoint()
-    // forget tombstones honored at probe time
-    val seenPh = graft.ops.Forget.exclude(
-      graft.ops.Layouts.readChildren(
-        spark, s"$stateDir/ph", outDdl, beforeBatch = Some(batchId)),
-      spark, stateDir)
-
-    val (inBatch, releaseKeyed) = Lsh.simhashCandidatesManaged(
-      Multimodal.phashBands(ph),
-      bandBits = Multimodal.PhashBandBits,
-      subBands = Multimodal.PhashSubBands,
-      subBits = Multimodal.PhashSubBits, maxBucket = maxBucket)
-    val cross = Lsh.incrementalSimhashCandidates(
-      seenPh.select($"doc_id", $"phash".as("simhash")),
-      ph.select($"doc_id", $"phash".as("simhash")),
-      numBands = Multimodal.PhashNumBands,
-      bandBits = Multimodal.PhashBandBits,
-      subBands = Multimodal.PhashSubBands,
-      subBits = Multimodal.PhashSubBits, maxBucket = maxBucket)
-    // exact verify on the candidate-carried signatures; in-batch pairs
-    // drop d2 (higher id), cross pairs drop the batch side — both are
-    // the pair's second column, so one drop rule covers both streams
-    val dropSet = inBatch.select($"d2", $"s1", $"s2")
-      .unionByName(cross.select($"batch_doc".as("d2"), $"s1", $"s2"))
-      .filter(expr("bit_count(s1 ^ s2) <= 5"))
-      .select($"d2".as("doc_id")).distinct()
-
-    ph.join(dropSet, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-
-    // state commits AFTER the decisions — EVERY batch blob ingests
-    // (a later dup of a dropped dup must still match through it)
-    ph.write.mode("overwrite").parquet(s"$stateDir/ph/b$batchId")
-    StreamIndex.writeCommitted(spark, guard, batchId)
-    releaseKeyed()
-    graft.ops.Checkpoints.release(ph)
-    true
   }
 
-  /** Fold the per-batch state children, bounded by the commit marker
-    * (a crashed attempt's own child must stay unfolded — the
-    * [[StreamCuration.compactState]] rule).
-    */
-  def compactState(spark: SparkSession, stateDir: String): Unit = {
-    val bound = StreamIndex.committedBatch(spark, s"$stateDir/state") + 1
-    graft.ops.Layouts.foldChildren(spark, s"$stateDir/ph",
-      beforeBatch = Some(bound))
-  }
+  /** Fold the per-batch state children below the commit marker
+    * ([[Maintainer.foldCommitted]]). */
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    Maintainer.foldCommitted(spark, s"$stateDir/state", s"$stateDir/ph")
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -30,11 +30,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * merging ambiguous days would corrupt the boundary comparison, and
   * quiet corruption is the one thing a maintainer may never do.
   *
-  * Exactly-once is the [[StreamWinnow]] protocol verbatim: idempotent
-  * per-batch child OVERWRITES (state delta + schedule output), the
-  * commit marker advances LAST, replays at/below the marker skip, and
-  * the in-flight batch reads state via own-child EXCLUSION so a crash
-  * between child write and marker replays to bit-identical children.
+  * Exactly-once: [[Maintainer]] over two children per batch (state
+  * delta + schedule output); the in-flight batch reads state via
+  * own-child EXCLUSION.
   *
   * Scale shape per trigger: ONE url-keyed window over the batch, one
   * batch-sized agg, one hash join against the state restricted to the
@@ -52,12 +50,9 @@ object StreamRecrawl {
   /** Start the stream: micro-batches of `source` (url, day, fp) flow
     * through [[processBatch]]. */
   def start(source: DataFrame, stateDir: String, outDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), stateDir, outDir, id): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, outDir, id)
+    }
 
   /** The merged per-URL fetch state across all committed batches —
     * q229's aggregate columns (url, n_fetches, n_changes, span_days,
@@ -98,14 +93,9 @@ object StreamRecrawl {
       outDir: String,
       batchId: Long): Boolean = {
     val guard = s"$stateDir/fetch"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchFetches.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
-    }
     import spark.implicits._
-    val b = batchFetches.localCheckpoint()
-    try {
+    Maintainer.once(batchFetches, guard, batchId) { t =>
+      val b = t.pin(batchFetches)
       // arrival-contract guard, WITHIN-batch leg: two fetches of one
       // url on the same day make the LAG order (and so n_changes /
       // last_fp) nondeterministic and can produce span=0 with
@@ -145,43 +135,37 @@ object StreamRecrawl {
           ($"last_day" - $"span_days").as("s_first"),
           $"last_fp".as("s_last_fp"))
       // delta is consumed three times (guard count + state child +
-      // schedule output) — materialize once, release in this trigger
-      val delta = bagg.join(prior, Seq("url"), "left")
+      // schedule output) — materialize once
+      val delta = t.pin(bagg.join(prior, Seq("url"), "left")
         .withColumn("chg_add", expr(
           "CAST(internal + CASE WHEN s_last_fp IS NOT NULL" +
-            " AND first_fp <> s_last_fp THEN 1 ELSE 0 END AS BIGINT)"))
-        .localCheckpoint()
-      try {
-        // arrival-contract guard BEFORE any write: out-of-order days
-        // would corrupt the boundary comparison — fail loudly instead
-        val bad = delta
-          .filter($"s_last_day".isNotNull && $"first_day" <= $"s_last_day")
-          .count()
-        if (bad > 0) throw new IllegalStateException(
-          s"[StreamRecrawl] batch $batchId: $bad url(s) arrived with" +
-            " day <= committed last_day — fetch days must move forward" +
-            " per url across batches; route re-stamped backfills through" +
-            " a batch rebuild instead")
-        delta
-          .select($"url", $"n_add", $"chg_add", $"first_day", $"last_day",
-            $"last_fp")
-          .write.mode("overwrite").parquet(s"$guard/b$batchId")
-        // per-batch output: the UPDATED schedule for touched urls —
-        // merged prior + this delta through the oracle-checked q229
-        // estimator (downstream sees only what changed)
-        val merged = delta.select(
-          $"url",
-          expr("n_add + coalesce(s_n, 0)").cast("long").as("n_fetches"),
-          expr("chg_add + coalesce(s_chg, 0)").cast("long").as("n_changes"),
-          expr("last_day - least(first_day, coalesce(s_first, first_day))")
-            .cast("long").as("span_days"),
-          $"last_day")
-        graft.queries.Maintenance.scheduleCols(merged)
-          .write.mode("overwrite").parquet(s"$outDir/sched/b$batchId")
-        // marker LAST — the commit point
-        StreamIndex.writeCommitted(spark, guard, batchId)
-        true
-      } finally graft.ops.Checkpoints.release(delta)
-    } finally graft.ops.Checkpoints.release(b)
+            " AND first_fp <> s_last_fp THEN 1 ELSE 0 END AS BIGINT)")))
+      // arrival-contract guard BEFORE any write: out-of-order days
+      // would corrupt the boundary comparison — fail loudly instead
+      val bad = delta
+        .filter($"s_last_day".isNotNull && $"first_day" <= $"s_last_day")
+        .count()
+      if (bad > 0) throw new IllegalStateException(
+        s"[StreamRecrawl] batch $batchId: $bad url(s) arrived with" +
+          " day <= committed last_day — fetch days must move forward" +
+          " per url across batches; route re-stamped backfills through" +
+          " a batch rebuild instead")
+      delta
+        .select($"url", $"n_add", $"chg_add", $"first_day", $"last_day",
+          $"last_fp")
+        .write.mode("overwrite").parquet(s"$guard/b$batchId")
+      // per-batch output: the UPDATED schedule for touched urls —
+      // merged prior + this delta through the oracle-checked q229
+      // estimator (downstream sees only what changed)
+      val merged = delta.select(
+        $"url",
+        expr("n_add + coalesce(s_n, 0)").cast("long").as("n_fetches"),
+        expr("chg_add + coalesce(s_chg, 0)").cast("long").as("n_changes"),
+        expr("last_day - least(first_day, coalesce(s_first, first_day))")
+          .cast("long").as("span_days"),
+        $"last_day")
+      graft.queries.Maintenance.scheduleCols(merged)
+        .write.mode("overwrite").parquet(s"$outDir/sched/b$batchId")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,11 +24,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Per batch: upserts are CONTENT-COMPARED against the current state
   * (digest equality) so a no-op upsert writes nothing — the record
   * log grows with CHANGE volume, not ingest volume; deletes are
-  * accepted only for docs with a live current row. Exactly-once is
-  * the [[StreamIndex]] discipline: the batch's records land as an
-  * idempotent OVERWRITE of its own child, reads during the trigger
-  * exclude children at or above the batch id, and the commit marker
-  * gates replays. Deletion propagation: the record log is
+  * accepted only for docs with a live current row. Exactly-once:
+  * [[Maintainer]]. Deletion propagation: the record log is
   * doc_id-keyed, so [[graft.ops.Forget]]'s tombstone/exclude/compact
   * apply verbatim ([[history]]'s `excludeForgotten` wires the probe-
   * time exclusion).
@@ -47,12 +44,9 @@ object StreamScd2 {
     * version stamp.
     */
   def start(source: DataFrame, stateDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), stateDir, id): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, id)
+    }
 
   /** One CDC micro-batch; returns false when the replay guard or an
     * empty batch skipped it. Contract: at most ONE operation per doc
@@ -65,17 +59,8 @@ object StreamScd2 {
       stateDir: String,
       batchId: Long): Boolean = {
     import spark.implicits._
-    val guard = s"$stateDir/state"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batch.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
-    }
-    val b = batch.localCheckpoint()
-    // finally: the loud one-op-per-doc guard (and any write failure)
-    // must not leak the pinned blocks — a retrying trigger would
-    // checkpoint-and-throw per attempt until the block store fills
-    try {
+    Maintainer.once(batch, s"$stateDir/state", batchId) { t =>
+      val b = t.pin(batch)
       require(b.groupBy($"doc_id").count().filter($"count" > 1).isEmpty,
         s"StreamScd2 batch $batchId carries multiple operations for one " +
           "doc_id — compact the CDC feed to one op per doc per batch, or " +
@@ -102,9 +87,7 @@ object StreamScd2 {
           lit(batchId).as("ver"), lit("delete").as("op"))
       changedOrNew.unionAll(dels)
         .write.mode("overwrite").parquet(s"$stateDir/records/b$batchId")
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      true
-    } finally graft.ops.Checkpoints.release(b)
+    }
   }
 
   /** The raw change log (all committed records below `beforeBatch`). */
@@ -154,14 +137,10 @@ object StreamScd2 {
         when(col("ver_to").isNull, 1L).otherwise(0L).as("is_current"))
   }
 
-  /** Fold the per-batch record children — bounded by the commit
-    * marker (the [[StreamCuration.compactState]] replay-hygiene
-    * contract). Records are append-only facts: the fold is a pure
-    * union, no merge transform.
+  /** Fold the per-batch record children below the commit marker
+    * ([[Maintainer.foldCommitted]]). Records are append-only facts: the
+    * fold is a pure union, no merge transform.
     */
-  def compactState(spark: SparkSession, stateDir: String): Unit = {
-    val bound = StreamIndex.committedBatch(spark, s"$stateDir/state") + 1
-    graft.ops.Layouts.foldChildren(spark, s"$stateDir/records",
-      beforeBatch = Some(bound))
-  }
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    Maintainer.foldCommitted(spark, s"$stateDir/state", s"$stateDir/records")
 }

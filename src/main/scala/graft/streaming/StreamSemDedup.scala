@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.{IvfIndex, SemDedup}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -25,9 +25,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * one-pass prune — the difference is the documented contract, not
   * drift.
   *
-  * Exactly-once: [[StreamIndex.appendBatch]]'s batch-id commit marker
-  * (replays at or below the marker are no-ops; same crash-window
-  * caveat and `Layouts.dedupPartitioned` reconcile).
+  * Exactly-once: [[Maintainer.once]] guarded at the layout path, the
+  * [[StreamIndex]] arrangement (same append-layout crash window).
   */
 object StreamSemDedup {
 
@@ -41,35 +40,29 @@ object StreamSemDedup {
       path: String,
       checkpoint: String,
       tau: Double): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        StreamIndex.appendBatch(batch.toDF(), path, id,
-          b => appendSurvivors(b, model, path, tau)): Unit
-      }
-      .start()
+    Maintainer.start(source, checkpoint) { (batch, id) =>
+      Maintainer.once(batch, path, id)(t => appendSurvivors(t, batch, model, path, tau))
+    }
 
   /** One trigger's work: verdicts against the live layout, survivors
     * appended into their cell directories. The verdict frame already
-    * carries the cell assignment — no second assignment pass.
+    * carries the cell assignment — no second assignment pass; the
+    * batch assignment pruneIncremental checkpointed is owned by `t`.
     */
   private[graft] def appendSurvivors(
+      t: Maintainer.Trigger,
       batch: DataFrame,
       model: IvfIndex.IvfModel,
       path: String,
       tau: Double): Unit = {
     val spark = batch.sparkSession
-    val verdicts = SemDedup.pruneIncremental(spark, path, model, batch, tau)
+    val verdicts = t.own(SemDedup.pruneIncremental(spark, path, model, batch, tau))
     val keep = verdicts
       .filter(col("keep") === 1L)
       .select(col("vec_id"), col("cell"))
     batch.join(keep, "vec_id")
       .select(col("cell"), col("vec_id"), col("embedding"))
       .write.partitionBy("cell").mode("append").parquet(path)
-    // the write fully materialized the verdict plan — release the
-    // batch assignment pruneIncremental checkpointed, or a long
-    // stream leaks one batch of blocks per trigger
-    graft.ops.Checkpoints.release(verdicts)
   }
 
   /** The curated corpus (the read side). */

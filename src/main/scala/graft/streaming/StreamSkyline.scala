@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.SkyState
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING Pareto-frontier maintenance — [[SkyState.add]] driven by
@@ -19,12 +19,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object StreamSkyline {
 
   def start(source: DataFrame, stateDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) SkyState.add(batch.toDF(), stateDir)
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, _) =>
+      if (!batch.isEmpty) SkyState.add(batch, stateDir)
+    }
 
   /** The maintained frontier (read side). */
   def frontier(spark: SparkSession, stateDir: String): DataFrame =

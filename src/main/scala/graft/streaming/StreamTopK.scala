@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -42,12 +42,9 @@ object StreamTopK {
       source: DataFrame,
       stateDir: String,
       k: Int = 512): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch, stateDir, k, id)
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, k, id)
+    }
 
   /** One micro-batch: summarize → merge → MG-compress → publish this
     * batch's state generation. Directly drivable (the spec's
@@ -66,21 +63,22 @@ object StreamTopK {
       .filter($"tok" =!= "").as[String]
     val summary = graft.queries.Stats.heavyHitters(toks, k)
     val state = readState(spark, stateDir, beforeBatch = Some(batchId))
-    val merged = state.union(summary)
-      .groupBy($"tok").agg(sum($"est").cast("long").as("est"))
-      .localCheckpoint() // two consumers (threshold probe, compress filter)
-    // (k+1)-th largest count = the MG decrement; 0 when ≤ k survivors.
-    // k+1 rows to the driver — k-bounded by contract, like probe cell
-    // lists.
-    val top = merged.orderBy($"est".desc, $"tok".asc).limit(k + 1)
-      .select($"est").as[Long].collect()
-    val t = if (top.length <= k) 0L else top.last
-    val next = merged.filter($"est" > t)
-      .select($"tok", ($"est" - t).as("est"))
-    // publish as THIS batch's generation — an idempotent overwrite
-    next.coalesce(1).write.mode("overwrite")
-      .parquet(s"$stateDir/topk/b$batchId")
-    graft.ops.Checkpoints.release(merged)
+    Maintainer.scope { trig =>
+      // two consumers (threshold probe, compress filter)
+      val merged = trig.pin(state.union(summary)
+        .groupBy($"tok").agg(sum($"est").cast("long").as("est")))
+      // (k+1)-th largest count = the MG decrement; 0 when ≤ k survivors.
+      // k+1 rows to the driver — k-bounded by contract, like probe cell
+      // lists.
+      val top = merged.orderBy($"est".desc, $"tok".asc).limit(k + 1)
+        .select($"est").as[Long].collect()
+      val t = if (top.length <= k) 0L else top.last
+      val next = merged.filter($"est" > t)
+        .select($"tok", ($"est" - t).as("est"))
+      // publish as THIS batch's generation — an idempotent overwrite
+      next.coalesce(1).write.mode("overwrite")
+        .parquet(s"$stateDir/topk/b$batchId")
+    }
     // retain the newest two generations (replay depth is one trigger)
     val gens = generations(spark, stateDir)
     if (gens.length > 2) {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.Multimodal
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -39,10 +39,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * match through it). Media bytes never enter the state. The root is
   * doc_id-keyed, so [[graft.ops.Forget]] applies verbatim.
   *
-  * Exactly-once: the [[StreamIndex]] protocol verbatim — per-batch
-  * idempotent child overwrite, reads exclude children at/above the
-  * current id, marker advances last, replays at/below the marker
-  * skip. [[compactState]] folds bounded by the marker.
+  * Exactly-once: [[Maintainer]]; [[compactState]] folds bounded by
+  * the marker.
   */
 object StreamVideoDup {
 
@@ -58,13 +56,10 @@ object StreamVideoDup {
       p: Int = 4,
       q: Int = 5,
       chunkBytes: Int = 64): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", s"$stateDir/ckpt")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.sparkSession, batch, stateDir, outDir, id,
-          p, q, chunkBytes): Unit
-      }
-      .start()
+    Maintainer.start(source, s"$stateDir/ckpt") { (batch, id) =>
+      processBatch(batch.sparkSession, batch, stateDir, outDir, id,
+        p, q, chunkBytes)
+    }
 
   /** The kept (first-wins) videos across all committed batches. */
   def kept(spark: SparkSession, outDir: String): DataFrame =
@@ -83,47 +78,36 @@ object StreamVideoDup {
       q: Int = 5,
       chunkBytes: Int = 64): Boolean = {
     import spark.implicits._
-    val guard = s"$stateDir/state"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    if (batchMedia.isEmpty) {
-      StreamIndex.writeCommitted(spark, guard, batchId)
-      return false
+    Maintainer.once(batchMedia, s"$stateDir/state", batchId) { t =>
+      val sets = t.pin(Multimodal.videoFrameHashes(batchMedia, chunkBytes)
+        .groupBy($"doc_id")
+        .agg(array_distinct(collect_list($"fhash")).as("gs")))
+      val statePosts = graft.ops.Forget.exclude(
+        graft.ops.Layouts.readChildren(
+          spark, s"$stateDir/post", postDdl, beforeBatch = Some(batchId)),
+        spark, stateDir)
+
+      val inBatch = graft.queries.Llm.setSimJoinSets(sets, p, q)
+        .select($"d2".as("doc_id")) // drop the higher id
+      val cross = graft.queries.Llm.setSimProbePostings(
+          statePosts.select($"doc_id", $"n", $"fhash".as("g")), sets, p, q)
+        .select($"batch_doc".as("doc_id")) // drop the batch side
+      val dropSet = inBatch.unionByName(cross).distinct()
+
+      sets.join(dropSet, Seq("doc_id"), "left_anti")
+        .select($"doc_id", size($"gs").cast("long").as("n_frames"))
+        .write.mode("overwrite").parquet(s"$outDir/b$batchId")
+
+      // state commits AFTER the decisions — EVERY batch video ingests
+      sets.select($"doc_id", explode($"gs").as("fhash"),
+          size($"gs").cast("long").as("n"))
+        .select($"doc_id", $"fhash", $"n")
+        .write.mode("overwrite").parquet(s"$stateDir/post/b$batchId")
     }
-    val sets = Multimodal.videoFrameHashes(batchMedia, chunkBytes)
-      .groupBy($"doc_id")
-      .agg(array_distinct(collect_list($"fhash")).as("gs"))
-      .localCheckpoint()
-    val statePosts = graft.ops.Forget.exclude(
-      graft.ops.Layouts.readChildren(
-        spark, s"$stateDir/post", postDdl, beforeBatch = Some(batchId)),
-      spark, stateDir)
-
-    val inBatch = graft.queries.Llm.setSimJoinSets(sets, p, q)
-      .select($"d2".as("doc_id")) // drop the higher id
-    val cross = graft.queries.Llm.setSimProbePostings(
-        statePosts.select($"doc_id", $"n", $"fhash".as("g")), sets, p, q)
-      .select($"batch_doc".as("doc_id")) // drop the batch side
-    val dropSet = inBatch.unionByName(cross).distinct()
-
-    sets.join(dropSet, Seq("doc_id"), "left_anti")
-      .select($"doc_id", size($"gs").cast("long").as("n_frames"))
-      .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-
-    // state commits AFTER the decisions — EVERY batch video ingests
-    sets.select($"doc_id", explode($"gs").as("fhash"),
-        size($"gs").cast("long").as("n"))
-      .select($"doc_id", $"fhash", $"n")
-      .write.mode("overwrite").parquet(s"$stateDir/post/b$batchId")
-    StreamIndex.writeCommitted(spark, guard, batchId)
-    graft.ops.Checkpoints.release(sets)
-    true
   }
 
-  /** Fold the per-batch state children, bounded by the commit marker
-    * (a crashed attempt's own child must stay unfolded). */
-  def compactState(spark: SparkSession, stateDir: String): Unit = {
-    val bound = StreamIndex.committedBatch(spark, s"$stateDir/state") + 1
-    graft.ops.Layouts.foldChildren(spark, s"$stateDir/post",
-      beforeBatch = Some(bound))
-  }
+  /** Fold the per-batch state children below the commit marker
+    * ([[Maintainer.foldCommitted]]). */
+  def compactState(spark: SparkSession, stateDir: String): Unit =
+    Maintainer.foldCommitted(spark, s"$stateDir/state", s"$stateDir/post")
 }

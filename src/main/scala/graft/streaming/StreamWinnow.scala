@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.WinnowState
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -15,19 +15,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `probe(commit = true)` calls row for row (StreamWinnowSpec), which
   * WinnowStateSpec in turn proves ≡ a full q102 recompute.
   *
-  * Exactly-once, both sides: foreachBatch replays the last
-  * uncommitted trigger on restart, and here BOTH writes are
-  * idempotent per batch — scores overwrite `outDir/batch_<id>`, and
-  * the state commit overwrites the per-batch dir
-  * `fps_stream/b<id>` ([[WinnowState.probe]]'s batchId mode) instead
-  * of appending flat files. A replayed trigger therefore rewrites
-  * bit-identical content (same frozen ladder, same prior state — the
-  * replay runs before any later batch commits) rather than
-  * double-counting, and a batch id at or below the commit marker
-  * (the [[StreamIndex]] sidecar, beside the fps dir) skips entirely.
-  * This closes the append-vs-marker crash window StreamIndex
-  * documents — the winnow state has no partitionBy layout to
-  * interleave batches into, so per-batch directories come free.
+  * Exactly-once: [[Maintainer]], guarded beside the fps dir. Scores
+  * overwrite `outDir/batch_<id>` and the state commit overwrites the
+  * per-batch dir `fps/b<id>` ([[WinnowState.probe]]'s batchId mode)
+  * instead of appending flat files — the winnow state has no
+  * partitionBy layout to interleave batches into, so per-batch
+  * directories come free and StreamIndex's append crash window does
+  * not apply.
   *
   * Maintenance: the per-batch dirs are the small-file tax;
   * [[WinnowState.compactStream]] folds them into the flat fps dir on
@@ -46,12 +40,9 @@ object StreamWinnow {
       outDir: String,
       checkpoint: String,
       w: Int = 8): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        scoreBatch(batch.toDF(), stateDir, outDir, id, w): Unit
-      }
-      .start()
+    Maintainer.start(source, checkpoint) { (batch, id) =>
+      scoreBatch(batch, stateDir, outDir, id, w)
+    }
 
   /** One micro-batch: score + commit unless `batchId` is already
     * committed. Returns whether the batch was processed (false =
@@ -62,27 +53,15 @@ object StreamWinnow {
       stateDir: String,
       outDir: String,
       batchId: Long,
-      w: Int): Boolean = {
-    val spark = batch.sparkSession
-    val guard = s"$stateDir/fps"
-    if (batchId <= StreamIndex.committedBatch(spark, guard)) return false
-    val wrote =
-      if (batch.isEmpty) false
-      else {
-        val scored = WinnowState.probe(batch, stateDir, w, commit = true,
-          batchId = Some(batchId),
-          sink = out => out.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId"))
-        // the sink already materialized the scored frame — release its
-        // localCheckpoint blocks, or a long stream leaks one batch of
-        // blocks per trigger (the StreamSemDedup discipline)
-        graft.ops.Checkpoints.release(scored)
-        true
-      }
-    // the marker advances even for empty batches (StreamIndex rule)
-    StreamIndex.writeCommitted(spark, guard, batchId)
-    wrote
-  }
+      w: Int): Boolean =
+    Maintainer.once(batch, s"$stateDir/fps", batchId) { t =>
+      // the scored frame is checkpointed: the trigger owns it before
+      // the sink writes it
+      WinnowState.probe(batch, stateDir, w, commit = true,
+        batchId = Some(batchId),
+        sink = out => t.own(out).withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId"))
+    }
 
   /** All scored batches as one frame (the read side of `outDir`). */
   def scores(spark: SparkSession, outDir: String): DataFrame =

@@ -1,20 +1,20 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
 import graft.core.{KeyValue, MapReduce, WorkloadRegistry}
 
-/** Byte-level workload parity against the reference's own test corpora
-  * (`/root/reference/testcases/`, read-only inputs — the reference ships
+/** Byte-level workload parity over seeded corpora in the shapes of the
+  * reference's test corpora ([[ReferenceFixtures]]; the reference ships
   * no golden outputs, so expectations are computed independently here:
   * SURVEY.md §5).
   */
 class MapReduceParitySpec extends SparkSuite {
 
-  private val testcases = Paths.get("/root/reference/testcases")
+  private val testcases = ReferenceFixtures.root
 
   private def readFiles(dir: Path): Map[String, String] =
     Files.list(dir).iterator().asScala
@@ -35,7 +35,6 @@ class MapReduceParitySpec extends SparkSuite {
   }
 
   test("wc over books matches an independent single-threaded count") {
-    assume(Files.isDirectory(testcases))
     val lines = runNamed("wc", testcases.resolve("books").toString + "/*.txt")
     val got = lines.map { l =>
       val i = l.lastIndexOf(' '); l.substring(0, i) -> l.substring(i + 1).toLong
@@ -51,7 +50,6 @@ class MapReduceParitySpec extends SparkSuite {
   }
 
   test("grep matches line-level contains filter, ordered by line number") {
-    assume(Files.isDirectory(testcases))
     val term = "whale"
     val lines = runNamed("grep", testcases.resolve("books").toString + "/*.txt", Seq(term))
     // every emitted line really contains the term and is formatted file:no:: text
@@ -81,7 +79,6 @@ class MapReduceParitySpec extends SparkSuite {
   }
 
   test("vertex-degree: degree sum equals 2x edge count") {
-    assume(Files.isDirectory(testcases))
     val lines = runNamed("vertex-degree", testcases.resolve("graph-edges").toString + "/*.txt")
     val degs = lines.map { l =>
       val Array(v, d) = l.split(", deg="); v.toLong -> d.toLong
@@ -98,7 +95,6 @@ class MapReduceParitySpec extends SparkSuite {
   }
 
   test("matrix-multiply two-phase chain matches dense multiply on mm testcase") {
-    assume(Files.isDirectory(testcases))
     val tmp = Files.createTempDirectory("graft-mm").toString
     // phase 1 writes partial products; phase 2 reads them back (job
     // chaining parity, SURVEY.md §2.2 F7 / workload_test.sh:24-29)
@@ -130,7 +126,6 @@ class MapReduceParitySpec extends SparkSuite {
   }
 
   test("wc result is invariant to reduce partition count (1 vs 7)") {
-    assume(Files.isDirectory(testcases))
     import MapReduce._
     val input = MapReduce.wholeFileRecords(
       spark, testcases.resolve("books").toString + "/p.txt")

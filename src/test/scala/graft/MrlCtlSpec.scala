@@ -15,7 +15,7 @@ class MrlCtlSpec extends SparkSuite {
     MrlCtl.main(Array(
       "submit",
       "--workload", "grep",
-      "--input", "/root/reference/testcases/books/t.txt",
+      "--input", ReferenceFixtures.books.resolve("t.txt").toString,
       "--output", out,
       "--", "whale"))
     val lines = spark.read.text(out).collect().map(_.getString(0))
@@ -28,7 +28,7 @@ class MrlCtlSpec extends SparkSuite {
     val out = Files.createTempDirectory("graft-ctl2").toString + "/out"
     val e = intercept[IllegalArgumentException] {
       MrlCtl.main(Array("submit", "--workload", "nope",
-        "--input", "/root/reference/testcases/books/p.txt", "--output", out))
+        "--input", ReferenceFixtures.books.resolve("p.txt").toString, "--output", out))
     }
     assert(e.getMessage.contains("unknown workload"))
     assert(e.getMessage.contains("wc"))

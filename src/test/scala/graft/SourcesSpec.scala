@@ -32,7 +32,7 @@ class SourcesSpec extends SparkSuite {
 
   test("binaryFile source frames whole files as records (reference S4 parity)") {
     val books = spark.read.format("binaryFile")
-      .load("/root/reference/testcases/books/*.txt")
+      .load(s"${ReferenceFixtures.books}/*.txt")
       .select(col("path"), col("length"), col("content"))
     val rows = books.collect()
     assert(rows.length === 6)

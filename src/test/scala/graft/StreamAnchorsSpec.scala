@@ -57,7 +57,7 @@ class StreamAnchorsSpec extends SparkSuite {
 
     // crash: delta b1 written but the marker never advanced — the
     // replay must overwrite bit-identically
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$state/agg", 0L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$state/agg", 0L)
     assert(StreamAnchors.processBatch(spark, docsSlice(1), state, 1L))
     assert(merged(state) === got, "crash replay must converge")
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.BlockState
-import graft.streaming.{StreamBlock, StreamIndex}
+import graft.streaming.{Maintainer, StreamBlock}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -123,7 +123,7 @@ class StreamBlockSpec extends SparkSuite {
     assert(!fs.exists(new Path(s"$dir/blocks/b0")), "committed b0 must fold")
     assert(stateAgg(dir) == before, "fold changed state contents")
     // once committed, the next compact folds it too
-    StreamIndex.writeCommitted(spark, s"$dir/blocks", 1L)
+    Maintainer.writeCommitted(spark, s"$dir/blocks", 1L)
     StreamBlock.compactStream(spark, dir)
     assert(!fs.exists(new Path(s"$dir/blocks/b1")))
     assert(stateAgg(dir) == before)

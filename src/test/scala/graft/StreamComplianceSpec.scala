@@ -48,7 +48,7 @@ class StreamComplianceSpec extends SparkSuite {
 
     // crash: batch 2's child written but the marker never advanced —
     // the replay must converge bit-identically (idempotent overwrite)
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$stateDir/audit", 1L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$stateDir/audit", 1L)
     assert(StreamCompliance.processBatch(spark, b2, verdicts, stateDir, 2L))
     assert(got() === want)
 

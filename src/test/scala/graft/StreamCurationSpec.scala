@@ -99,7 +99,7 @@ class StreamCurationSpec extends SparkSuite {
     // crashed attempt of batch 1: every state child committed, but the
     // marker never advanced (rewind it to simulate the crash point)
     assert(StreamCuration.processBatch(spark, b1, crashState, crashOut, batchId = 1L))
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$crashState/state", 0L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$crashState/state", 0L)
     // the replayed trigger must not anti-join b1 against its own
     // crashed fps/bands commits — that would suppress the whole batch
     assert(StreamCuration.processBatch(spark, b1, crashState, crashOut, batchId = 1L))

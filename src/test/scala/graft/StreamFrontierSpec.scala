@@ -65,7 +65,7 @@ class StreamFrontierSpec extends SparkSuite {
     assert(newRows(outDir) === want)
 
     // crash: batch 1's children written but the marker never advanced
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$stateDir/seen", 0L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$stateDir/seen", 0L)
     assert(StreamFrontier.processBatch(spark, df(batch1), stateDir, outDir, 1L))
     assert(newRows(outDir) === want, "crash replay must converge bit-identically")
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{IndexDrift, IvfIndex}
-import graft.streaming.StreamIndex
+import graft.streaming.{Maintainer, StreamIndex}
 import org.apache.spark.sql.functions._
 
 /** Streaming index maintenance: micro-batch appends into the saved IVF
@@ -64,8 +64,8 @@ class StreamIndexSpec extends SparkSuite {
 
     // a replayed batch id is a no-op even with data aboard
     val replay = all.filter($"vec_id" >= 400)
-    assert(!StreamIndex.appendBatch(replay, dir, batchId = 0L,
-        b => IvfIndex.appendSaved(b, cents, dir)),
+    assert(!Maintainer.once(replay, dir, batchId = 0L)(
+        _ => IvfIndex.appendSaved(replay, cents, dir)),
       "replayed batch id must be skipped")
     assert(spark.read.parquet(dir).count() == all.count(),
       "replayed batch appended anyway")

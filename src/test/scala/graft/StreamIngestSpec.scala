@@ -55,27 +55,30 @@ class StreamIngestSpec extends SparkSuite {
       assert(StreamIngest.processBatch(spark, df(b), stateDir, outDir, i.toLong))
     }
     // one-shot equivalence
-    val (wantPages, wantQuar, handle) = StreamIngest.ingest(df(files))
-    val want = wantPages.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(3), r.getLong(5))).toSet
-    assert(pageRows(outDir) === want)
-    assert(want.size === 10,
-      "every wellformed page extracts exactly once (incl. the partial file's whole record)")
-    // extraction really ran: titles decoded, prose kept, nav dropped
-    val sample = StreamIngest.pages(spark, outDir)
-      .filter(org.apache.spark.sql.functions.col("file") === "crawl-3.warc")
-      .collect().head
-    assert(sample.getAs[String]("title") === "Page 3")
-    assert(sample.getAs[String]("content").startsWith("Article 3 body"))
-    assert(sample.getAs[String]("http_status") === "HTTP/1.1 200 OK")
-    // the broken file AND the partially-parsed file are quarantined,
-    // not silently dropped/shortened
-    val quar = StreamIngest.quarantined(spark, outDir).collect()
-      .map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSet
-    assert(quar === Set(("broken.warc", 0L, 1L), ("partial.warc", 2L, 1L)))
-    assert(wantQuar.collect()
-      .map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSet === quar)
-    graft.ops.Checkpoints.release(handle)
+    // the one-shot parse is pinned in its own trigger scope
+    val want = graft.streaming.Maintainer.scope { t =>
+      val (wantPages, wantQuar) = StreamIngest.ingest(t, df(files))
+      val want = wantPages.collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(3), r.getLong(5))).toSet
+      assert(pageRows(outDir) === want)
+      assert(want.size === 10,
+        "every wellformed page extracts exactly once (incl. the partial file's whole record)")
+      // extraction really ran: titles decoded, prose kept, nav dropped
+      val sample = StreamIngest.pages(spark, outDir)
+        .filter(org.apache.spark.sql.functions.col("file") === "crawl-3.warc")
+        .collect().head
+      assert(sample.getAs[String]("title") === "Page 3")
+      assert(sample.getAs[String]("content").startsWith("Article 3 body"))
+      assert(sample.getAs[String]("http_status") === "HTTP/1.1 200 OK")
+      // the broken file AND the partially-parsed file are quarantined,
+      // not silently dropped/shortened
+      val quar = StreamIngest.quarantined(spark, outDir).collect()
+        .map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSet
+      assert(quar === Set(("broken.warc", 0L, 1L), ("partial.warc", 2L, 1L)))
+      assert(wantQuar.collect()
+        .map(r => (r.getString(0), r.getLong(2), r.getLong(3))).toSet === quar)
+      want
+    }
     // replayed batch is a no-op
     assert(!StreamIngest.processBatch(spark, df(batches.head), stateDir, outDir, 0L))
     assert(pageRows(outDir) === want)
@@ -89,7 +92,7 @@ class StreamIngestSpec extends SparkSuite {
     assert(StreamIngest.processBatch(spark, df(batches(1)), stateDir, outDir, 1L))
     val want = pageRows(outDir)
     // crash: batch 1's children written but the marker never advanced
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$stateDir/state", 0L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$stateDir/state", 0L)
     assert(StreamIngest.processBatch(spark, df(batches(1)), stateDir, outDir, 1L))
     assert(pageRows(outDir) === want, "replay after crash must converge")
   }

@@ -81,7 +81,7 @@ class StreamPhashSpec extends SparkSuite {
     val want = keptIds(outDir)
     // crash: batch 1's children committed but the marker never
     // advanced — rewind the marker and replay
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$stateDir/state", 0L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$stateDir/state", 0L)
     assert(StreamPhash.processBatch(spark, df(batches(1)), stateDir, outDir, 1L))
     assert(keptIds(outDir) === want, "replay after crash must converge")
   }

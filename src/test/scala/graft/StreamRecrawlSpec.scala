@@ -63,7 +63,7 @@ class StreamRecrawlSpec extends SparkSuite {
 
     // crash: batch 2's children written but the marker never advanced —
     // the replay must converge bit-identically
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$stateDir/fetch", 1L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$stateDir/fetch", 1L)
     assert(StreamRecrawl.processBatch(spark, df(b2), stateDir, outDir, 2L))
     assert(got() === want)
 

@@ -77,7 +77,7 @@ class StreamScd2Spec extends SparkSuite {
     // not advance — rewind the marker and re-run; the replay must
     // read only pre-batch state (own-child exclusion) and republish
     // bit-identical decisions
-    graft.streaming.StreamIndex.writeCommitted(spark, s"$state/state", 1L)
+    graft.streaming.Maintainer.writeCommitted(spark, s"$state/state", 1L)
     val dels = v1.select("doc_id").exceptAll(v2.select("doc_id"))
       .select(col("doc_id"), lit("").as("text"), lit("").as("lang"),
         lit("").as("source"), lit("delete").as("op"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Layouts, WinnowState}
-import graft.streaming.{StreamIndex, StreamWinnow}
+import graft.streaming.{Maintainer, StreamWinnow}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -121,7 +121,7 @@ class StreamWinnowSpec extends SparkSuite {
     // advance the commit marker as scoreBatch would: compactStream
     // bounds its fold by it, and an uncommitted child must never fold
     // (first-trigger-crash hygiene)
-    StreamIndex.writeCommitted(spark, s"$dir/fps", 1L)
+    Maintainer.writeCommitted(spark, s"$dir/fps", 1L)
     val before = stateAgg(dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -144,7 +144,7 @@ class StreamWinnowSpec extends SparkSuite {
     // count), and recovery finishes the deletions
     val b3 = docs.filter($"doc_id" >= 200 && $"doc_id" < 250)
     WinnowState.probe(b3, dir, w = 8, commit = true, batchId = Some(2L))
-    StreamIndex.writeCommitted(spark, s"$dir/fps", 2L)
+    Maintainer.writeCommitted(spark, s"$dir/fps", 2L)
     val withB3 = stateAgg(dir)
     val stage = s"$dir/fps/__stage"
     WinnowState.stateFps(spark, dir).write.mode("overwrite").parquet(stage)
@@ -181,7 +181,7 @@ class StreamWinnowSpec extends SparkSuite {
       "uncommitted b0 was folded — the replayed trigger's own-batch " +
         "exclusion can no longer see it inside a fold_ child")
     // once the trigger's replay commits the marker, the child folds
-    StreamIndex.writeCommitted(spark, s"$dir/fps", 0L)
+    Maintainer.writeCommitted(spark, s"$dir/fps", 0L)
     val before = stateAgg(dir)
     WinnowState.compactStream(spark, dir)
     assert(!fs.exists(new Path(s"$dir/fps/b0")))
