@@ -1,6 +1,9 @@
 package graft.core
 
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,17 +26,33 @@ object KeyValue {
   * `common/src/lib.rs:21-34`) and a reduce function (key + value iterator
   * → one output blob — `common/src/lib.rs:39-43`). `aux` carries the
   * CLI's trailing `-- args` (`mrl-ctl/src/args.rs:50-52`).
+  *
+  * `combineFn`, when set, folds two values of one key into one on the
+  * map side before the shuffle (Dean & Ghemawat §4.3). It must be
+  * associative and commutative, and `reduceFn(k, vs)` must equal
+  * `reduceFn(k, vs')` where `vs'` is `vs` combined in any grouping:
+  * the runtime folds an arbitrary subset of a key's values per map
+  * task, in arbitrary order, and may leave several partial values.
   */
 final case class Workload(
     mapFn: (KeyValue, Seq[String]) => Iterator[KeyValue],
-    reduceFn: (Array[Byte], Iterator[Array[Byte]], Seq[String]) => Array[Byte])
+    reduceFn: (Array[Byte], Iterator[Array[Byte]], Seq[String]) => Array[Byte],
+    combineFn: Option[(Array[Byte], Array[Byte]) => Array[Byte]] = None)
 
 /** Spark-native MapReduce runtime with the reference's dataflow
   * (`source → map → hash-partition → group-by-key → reduce → sink`,
   * SURVEY.md §2.2) expressed as a typed Dataset pipeline:
   *
-  *   wholetext scan → flatMap(mapFn) → groupByKey(key bytes) →
-  *   mapGroups(reduceFn) → text sink
+  *   wholetext scan → flatMap(mapFn) → [per-task combine] →
+  *   groupByKey(key bytes) → mapGroups(reduceFn) → text sink
+  *
+  * The combine step runs only for workloads that declare a
+  * `combineFn`. It diverges from the reference, whose map side ships
+  * every mapped record uncombined (`mrl-worker/src/map.rs:119-130`);
+  * the reduce output is the same by the combiner's contract, only
+  * fewer records cross the shuffle. Its per-task table is flushed at a
+  * fixed byte ceiling, so it never holds more than that much of a
+  * task's output in memory.
   *
   * Spark supplies everything the reference hand-rolls: hash shuffle
   * (F2-F3), external sort + spill (F4), streaming per-key grouping (F5),
@@ -48,6 +67,34 @@ object MapReduce {
   implicit val bytesEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   private implicit val pairEncoder: Encoder[(Array[Byte], Array[Byte])] =
     Encoders.tuple(Encoders.BINARY, Encoders.BINARY)
+
+  /** Key plus value bytes the per-task combine table may hold before it
+    * is emitted and cleared. A memory bound, not a speed setting: it
+    * keeps the map side within a fixed footprint on inputs ≫ RAM, and
+    * a table that never reaches it is emitted once, at the end of the
+    * task.
+    */
+  private val CombineCeilingBytes = 32L << 20
+
+  /** Folds one map task's records per key bytes (`ByteBuffer` compares
+    * contents), emitting the table at the ceiling and at the end.
+    */
+  private def combineTask(
+      records: Iterator[KeyValue],
+      combine: (Array[Byte], Array[Byte]) => Array[Byte]): Iterator[KeyValue] =
+    Iterator.continually(records).takeWhile(_.hasNext).flatMap { rs =>
+      val table = new java.util.HashMap[ByteBuffer, Array[Byte]]()
+      var bytes = 0L
+      while (rs.hasNext && bytes < CombineCeilingBytes) {
+        val kv = rs.next()
+        val k = ByteBuffer.wrap(kv.key)
+        val prev = table.get(k)
+        val v = if (prev == null) kv.value else combine(prev, kv.value)
+        table.put(k, v)
+        bytes += (if (prev == null) kv.key.length + v.length else v.length - prev.length)
+      }
+      table.asScala.iterator.map { case (k, v) => KeyValue(k.array, v) }
+    }
 
   /** Whole-file record framing: one KeyValue per file, key = file name,
     * value = file bytes (`mrl-worker/src/map.rs:113-118`,
@@ -81,7 +128,11 @@ object MapReduce {
       input: Dataset[KeyValue],
       aux: Seq[String] = Nil,
       numPartitions: Int = 0): Dataset[Array[Byte]] = {
-    val reduced = input.flatMap(kv => w.mapFn(kv, aux))
+    val mapped = w.combineFn match {
+      case Some(c) => input.mapPartitions(p => combineTask(p.flatMap(w.mapFn(_, aux)), c))
+      case None => input.flatMap(kv => w.mapFn(kv, aux))
+    }
+    val reduced = mapped
       .groupByKey(_.key)
       .mapGroups((key, kvs) => w.reduceFn(key, kvs.map(_.value), aux))
     if (numPartitions > 0) reduced.repartition(numPartitions) else reduced

@@ -226,8 +226,10 @@ object MrlCtl {
       val spark = SparkSession.builder()
         .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
         .appName("graft-mrl-ctl")
+        // one reduce task per core local[*] uses, not a fixed count
         .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+          sys.env.getOrElse("SPARK_GRAFT_CPUS",
+            Runtime.getRuntime.availableProcessors.toString))
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       (spark, preexisting)

@@ -19,6 +19,7 @@ object WorkloadRegistry {
     ByteBuffer.allocate(8).putLong(n).array()
   private def readU64be(b: Array[Byte]): Long =
     ByteBuffer.wrap(b, 0, 8).getLong
+  private def decimal(b: Array[Byte]): Long = new String(b, UTF_8).toLong
 
   /** Rust `str::lines()` parity (the reference iterates lines with it,
     * e.g. `workload/src/grep.rs:25`): split on '\n', strip the '\r' of
@@ -45,7 +46,8 @@ object WorkloadRegistry {
     * lowercase (Locale.ROOT: locale-sensitive lowercasing would diverge
     * from both the reference and the SQL `lower()` under e.g. tr-TR),
     * drop empties; value = big-endian u64 1; reduce sums; output
-    * "word count\n" (`wc.rs:41`).
+    * "word count\n" (`wc.rs:41`). The combiner sums on the map side
+    * (the reference has none; see [[MapReduce]]).
     */
   val wc: Workload = Workload(
     mapFn = (kv, _) =>
@@ -58,7 +60,8 @@ object WorkloadRegistry {
     reduceFn = (key, values, _) => {
       val count = values.map(readU64be).sum
       s"${new String(key, UTF_8)} $count\n".getBytes(UTF_8)
-    })
+    },
+    combineFn = Some((a, b) => u64be(readU64be(a) + readU64be(b))))
 
   /** Grep: keep lines containing the literal term (aux head); key = file
     * name, value = u64 1-based line number + line bytes
@@ -93,6 +96,10 @@ object WorkloadRegistry {
   /** Vertex degree: each whitespace-separated edge "a b" contributes 1 to
     * both endpoints (`workload/src/vertex_degree.rs:24-42`); reduce sums
     * decimal-string counts; output "v, deg=n\n" (`vertex_degree.rs:46-61`).
+    * The combiner sums decimal strings on the map side. grep and the
+    * matrix phases declare none: grep's reduce is not a fold, and
+    * mm2's would re-parse and re-format its strings for no gain and
+    * reassociate its f64 sums.
     */
   val vertexDegree: Workload = Workload(
     mapFn = (kv, _) =>
@@ -107,9 +114,10 @@ object WorkloadRegistry {
             KeyValue(parts(1).getBytes(UTF_8), one))
         },
     reduceFn = (key, values, _) => {
-      val count = values.map(v => new String(v, UTF_8).toLong).sum
+      val count = values.map(decimal).sum
       s"${new String(key, UTF_8)}, deg=$count\n".getBytes(UTF_8)
-    })
+    },
+    combineFn = Some((a, b) => (decimal(a) + decimal(b)).toString.getBytes(UTF_8)))
 
   /** Matrix multiply phase 1: lines "row col val tag"; A keyed by column,
     * B keyed by row (`workload/src/matrix_multiply.rs:18-51`); reduce

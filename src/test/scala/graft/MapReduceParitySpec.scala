@@ -22,6 +22,12 @@ class MapReduceParitySpec extends SparkSuite {
       .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), UTF_8))
       .toMap
 
+  /** Every word token of the books, lowercased: an independent count. */
+  private def bookWords: Seq[String] =
+    readFiles(testcases.resolve("books")).values.toSeq
+      .flatMap(_.split("[^\\p{L}]+")).filter(_.nonEmpty)
+      .map(_.toLowerCase)
+
   private def runNamed(name: String, glob: String, aux: Seq[String] = Nil): Seq[String] = {
     import MapReduce._
     val out = MapReduce.run(
@@ -40,9 +46,7 @@ class MapReduceParitySpec extends SparkSuite {
       val i = l.lastIndexOf(' '); l.substring(0, i) -> l.substring(i + 1).toLong
     }.toMap
 
-    val expected = readFiles(testcases.resolve("books")).values
-      .flatMap(_.split("[^\\p{L}]+")).filter(_.nonEmpty)
-      .map(_.toLowerCase)
+    val expected = bookWords
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
 
     assert(got.size === expected.size)
@@ -135,5 +139,17 @@ class MapReduceParitySpec extends SparkSuite {
         .map { l => val i = l.lastIndexOf(' '); l.substring(0, i) -> l.substring(i + 1).toLong }
         .toMap
     assert(counts(1) === counts(7))
+  }
+
+  test("wc shuffle records: at most distinct words × map tasks combined, every token without") {
+    import MapReduce._
+    val input = MapReduce.wholeFileRecords(spark, testcases.resolve("books").toString + "/*.txt")
+    def written(w: graft.core.Workload) =
+      ShuffleRecords.written(spark)(MapReduce.run(w, input).collect())._2
+    val words = bookWords
+    val combined = written(WorkloadRegistry.wc)
+    assert(combined.mapTasks > 0)
+    assert(combined.records <= words.distinct.size.toLong * combined.mapTasks)
+    assert(written(WorkloadRegistry.wc.copy(combineFn = None)).records === words.size.toLong)
   }
 }
