@@ -174,14 +174,19 @@ object Hits {
 
   /** [[run]] over 8-byte rank ids — PageRank.iterateIdsDistributed's
     * treatment for the hubs-and-authorities loop. The edge frame is
-    * mapped to ids once and checkpointed TWICE, each copy hash-
-    * partitioned by one direction's fold key (auth folds group by the
-    * target id, hub folds by the source id), so in the broadcast
-    * regime every per-round fold grouping is partition-local and the
-    * per-round edge-sized exchanges disappear. Fold orders and the
-    * IEEE op sequence are unchanged (id order ≡ UTF-8 string order):
-    * IdEncodeSpec pins run-vs-runIds bit-equality, and the unrolled
-    * DuckDB oracle hash with the gate forced to 0 is the second proof.
+    * mapped to ids once and checkpointed TWICE through
+    * [[Checkpoints.localByKey]], each copy hash-partitioned by one
+    * direction's fold key (auth folds group by the target id, hub
+    * folds by the source id), so in the broadcast regime every
+    * per-round fold grouping is partition-local and the per-round
+    * edge-sized exchanges disappear. The helper, not a plain
+    * `repartition(...).localCheckpoint()`, is what keeps the layout:
+    * under AQE the plain checkpoint's LogicalRDD declares no
+    * partitioning, so each fold would re-shuffle the edge copy. Fold
+    * orders and the IEEE op sequence are unchanged (id order ≡ UTF-8
+    * string order): IdEncodeSpec pins run-vs-runIds bit-equality, and
+    * the unrolled DuckDB oracle hash with the gate forced to 0 is the
+    * second proof.
     */
   private def runIds(e0: DataFrame, rounds: Int, edgeRows: Long): DataFrame = {
     val nodesW = e0.select(col("w1").as("w")).union(e0.select(col("w2").as("w")))
@@ -203,10 +208,10 @@ object Hits {
     // two layouts, one per fold direction; eH reads eA's checkpointed
     // blocks, not the dictionary joins again. In the shuffle regime the
     // per-round join re-shuffles anyway, so one unlaid copy suffices.
-    val eA = (if (bcastRank) eIds.repartition(parts, col("id2")) else eIds)
-      .localCheckpoint()
-    val eH =
-      if (bcastRank) eA.repartition(parts, col("id1")).localCheckpoint() else eA
+    val eA =
+      if (bcastRank) Checkpoints.localByKey(eIds, "id2", parts)
+      else eIds.localCheckpoint()
+    val eH = if (bcastRank) Checkpoints.localByKey(eA, "id1", parts) else eA
     // shuffle regime: the per-round join re-shuffles the edge frame, so
     // ONE forced kid-only exchange after it satisfies both fold levels
     // (kid ⊂ {kid, kseg, seg} and {kid, kseg}); broadcast regime: the

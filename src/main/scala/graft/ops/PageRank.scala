@@ -410,8 +410,11 @@ object PageRank {
       .join(hinted(dict.select(col("w").as("w2"), col("id").as("id2"))), "w2")
       .select(col("id1"), col("id2"),
         (col("c").cast("double") / col("wout").cast("double")).as("p"), col("seg"))
-    val trans = (if (bcastRank) transBase.repartition(parts, col("id2")) else transBase)
-      .localCheckpoint()
+    // broadcast regime: laid out by target id through the checkpoint,
+    // as in [[iterateIdsDistributed]]
+    val trans =
+      if (bcastRank) Checkpoints.localByKey(transBase, "id2", parts)
+      else transBase.localCheckpoint()
     // t(v): the same pure projection over the dictionary blocks
     val nodesT = dict
       .withColumn("t", expr(s"CASE WHEN is_seed = 1 THEN 1.0 / CAST($ns AS DOUBLE) ELSE 0.0 END"))
@@ -720,10 +723,15 @@ object PageRank {
     *    — is computed once in the dictionary and carried);
     *  - the edge frame is mapped to (id1, id2, p, seg) ONCE at setup
     *    (two dictionary joins) and, when the rank frame broadcasts,
-    *    hash-partitioned by the TARGET id so both in-sum groupings
-    *    (level 1 on (id2, seg), level 2 on id2 — a superset of the
-    *    partitioning key, which Spark recognises) stay partition-local:
-    *    the per-round edge-sized exchange disappears outright;
+    *    checkpointed through [[Checkpoints.localByKey]] hash-partitioned
+    *    by the TARGET id, so both in-sum groupings (level 1 on
+    *    (id2, seg), level 2 on id2 — a superset of the partitioning
+    *    key, which Spark recognises) stay partition-local: the
+    *    per-round edge-sized exchanges disappear outright. A plain
+    *    `repartition(parts, id2).localCheckpoint()` would not do it:
+    *    under AQE the checkpoint's LogicalRDD reads the adaptive root's
+    *    `UnknownPartitioning`, and every round would shuffle the edge
+    *    frame twice, on (id2, seg) and on id2;
     *  - when the graph is too big to broadcast the rank frame, the
     *    per-round shuffle join runs as before (on ids — ~4× fewer
     *    bytes), and ONE forced id2-only exchange feeds both fold
@@ -760,8 +768,9 @@ object PageRank {
     // of once per round (the in-sum groupings then never exchange);
     // shuffle regime: the per-round join re-shuffles by id1 anyway, so
     // a setup layout would be dead weight — skip it
-    val trans = (if (bcastRank) transBase.repartition(parts, $"id2") else transBase)
-      .localCheckpoint()
+    val trans =
+      if (bcastRank) Checkpoints.localByKey(transBase, "id2", parts)
+      else transBase.localCheckpoint()
     val nodes = dict.select($"id", $"seg", $"is_dang")
     var pr = nodes.select($"id", $"seg", $"is_dang", (lit(1.0) / lit(n)).as("pr"))
       .localCheckpoint()

@@ -3,6 +3,8 @@ package graft.queries
 import graft.Q
 import graft.Sql._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -87,12 +89,19 @@ object Crawl {
     * collapse onto one node.
     *
     * Scale shape: in-row end to end (regex + string algebra at scan
-    * throughput, zero exchanges — the q208/q213 front-door shape);
+    * throughput — the q208/q213 front-door shape);
     * per-page fanout is the page's link count, so output is
-    * links-sized, the same mass a real crawler writes per fetch.
+    * links-sized, the same mass a real crawler writes per fetch. An
+    * input scanned in fewer partitions than the cluster has cores (a
+    * one-row-group `documents` file is ONE partition) is first
+    * narrowed to (doc_id, lang, source) and round-robined across
+    * `defaultParallelism` — one exchange of |docs| narrow rows, so the
+    * synthesis, extraction and both canonicalization chains run on
+    * every core instead of in one task ([[spread]]); an input that
+    * already spans the cores is left as it is.
     */
   private[graft] def withOutlinks(docs: DataFrame): DataFrame = {
-    val tagged = docs
+    val tagged = spread(docs)
       .withColumn("url0", expr(Mining.UrlSynthSql))
       .withColumn("html", expr(LinkPageSynthSql))
       .withColumn("tags",
@@ -128,6 +137,37 @@ object Crawl {
         expr("CASE WHEN kind = 'skip' THEN '' ELSE canon_url END"))
       .select(col("doc_id"), col("pos"), col("href"), col("anchor"),
         col("kind"), col("nofollow"), col("src_url"), col("dst_url"))
+  }
+
+  /** `docs` as [[withOutlinks]] reads it: narrowed to the columns the
+    * pass uses and round-robined to `defaultParallelism` partitions
+    * when its scan yields fewer, otherwise untouched. The count comes
+    * from the physical plan — no job runs to learn it (under AQE,
+    * `df.rdd` over a plan with an exchange runs that exchange's
+    * stages, so an input with an exchange is left as it is).
+    */
+  private def spread(docs: DataFrame): DataFrame = {
+    val cores = docs.sparkSession.sparkContext.defaultParallelism
+    if (plannedPartitions(docs).exists(_ < cores))
+      docs.select(col("doc_id"), col("lang"), col("source")).repartition(cores)
+    else docs
+  }
+
+  /** The partition count `df`'s physical plan yields when it is a
+    * chain of narrow operators over one file scan or checkpoint scan;
+    * None for any other shape (an exchange, a join, an aggregate, a
+    * local relation). Reads split counts only.
+    */
+  private def plannedPartitions(df: DataFrame): Option[Int] = {
+    def walk(p: SparkPlan): Option[Int] = p match {
+      case x: FileSourceScanExec => Some(x.inputRDD.getNumPartitions)
+      case x: RDDScanExec => Some(x.rdd.getNumPartitions)
+      case _ => p.children match {
+        case Seq(c) if p.requiredChildDistribution == Seq(UnspecifiedDistribution) => walk(c)
+        case _ => None
+      }
+    }
+    walk(df.queryExecution.sparkPlan)
   }
 
   /** [[withOutlinks]]'s DuckDB mirror: CTE defs reading `documents`,
@@ -198,10 +238,11 @@ object Crawl {
     // (q223's graph, q224's anchor audit, the StreamFrontier) see
     // canonical page identities, never alias spellings.
     //
-    // Scale shape: in-row end to end, zero exchanges — a map-only pass
-    // at scan throughput whose output is links-sized (the mass a real
-    // crawler writes per fetch). At 100 TB this runs fused into the
-    // q208/q211 ingestion scan.
+    // Scale shape: in-row end to end — a map-only pass at scan
+    // throughput whose output is links-sized (the mass a real crawler
+    // writes per fetch); the only exchange is withOutlinks' narrow
+    // round-robin when the scan has fewer partitions than cores. At
+    // 100 TB this runs fused into the q208/q211 ingestion scan.
     Q(
       "q222_outlink_extract",
       (s, dir) => withOutlinks(table(s, dir, "documents")),

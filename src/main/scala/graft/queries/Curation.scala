@@ -1360,11 +1360,11 @@ object Curation {
       minDocs: Int = 3): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val blocks = blockFrame(docs, blockTokens)
-      .repartition(s.sparkContext.defaultParallelism, $"bh")
-      // two consumers (ndocs agg, join back): materialize once so the
-      // tokenize+block Generate never re-executes (q88/q93 discipline)
-      .localCheckpoint()
+    // two consumers (ndocs agg, join back): materialize once so the
+    // tokenize+block Generate never re-executes (q88/q93 discipline),
+    // laid out by bh so neither consumer re-shuffles
+    val blocks = graft.ops.Checkpoints.localByKey(
+      blockFrame(docs, blockTokens), "bh", s.sparkContext.defaultParallelism)
     val nd = blocks.groupBy($"bh").agg(countDistinct($"doc_id").as("ndocs"))
     reconstructClean(blocks.join(nd, "bh"), minDocs)
   }

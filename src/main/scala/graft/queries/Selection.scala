@@ -351,13 +351,14 @@ object Selection {
     // rows, never text — but the q88 discipline for reuse: the two
     // consumers (first-owner agg and join back) prune DIFFERENT
     // columns, so a shared exchange cannot canonicalize equal;
-    // the per-(doc,bh) frame materializes once (localCheckpoint,
-    // bh-partitioned so both consumers stay shuffle-local).
+    // the per-(doc,bh) frame materializes once (Checkpoints.localByKey:
+    // bh-partitioned, layout kept through the checkpoint, so both
+    // consumers stay shuffle-local).
     Q(
       "q94_ngram_novelty",
       (s, dir) => {
         import s.implicits._
-        val bgc = Llm.docsSpread(s, dir)
+        val grams = Llm.docsSpread(s, dir)
           .select($"doc_id",
             expr("filter(split(lower(text), '[^a-z]+'), x -> x <> '')").as("ws"))
           .filter(size($"ws") >= 2)
@@ -365,8 +366,8 @@ object Selection {
             "transform(sequence(1, size(ws)-1), i -> " +
               h60("concat(element_at(ws, i), ' ', element_at(ws, i+1))") + ")")).as("bh"))
           .groupBy($"doc_id", $"bh").agg(count(lit(1)).cast("long").as("cnt"))
-          .repartition(s.sparkContext.defaultParallelism, $"bh")
-          .localCheckpoint()
+        val bgc = graft.ops.Checkpoints.localByKey(
+          grams, "bh", s.sparkContext.defaultParallelism)
         val first = bgc.groupBy($"bh").agg(min($"doc_id").as("first_doc"))
         bgc.join(first, "bh")
           .groupBy($"doc_id")

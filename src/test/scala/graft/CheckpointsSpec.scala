@@ -68,4 +68,44 @@ class CheckpointsSpec extends SparkSuite {
     Checkpoints.release(pr)
     assert((ids -- before).isEmpty)
   }
+
+  /** Shuffle exchanges of `df`'s executed plan (run an action first). */
+  private def exchanges(df: org.apache.spark.sql.DataFrame) =
+    executedNodes(df).collect {
+      case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => x
+    }
+
+  test("localByKey keeps the hash layout through the checkpoint under AQE") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "the layout loss this helper repairs is AQE's")
+    val before = ids
+    val base = spark.range(200000)
+      .select(($"id" % 9973).as("k"), ($"id" % 7).as("x"), $"id".as("v"))
+    def rollup(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy($"k", $"x").agg(sum($"v").as("s"))
+        .groupBy($"k").agg(sum($"s").as("s"), count(lit(1)).as("n"))
+    val laid = Checkpoints.localByKey(base, "k", 4)
+    val got = rollup(laid)
+    val rows = got.collect()
+    assert(exchanges(got).isEmpty,
+      s"groupBy(k, x) / groupBy(k) re-shuffled the laid-out checkpoint:\n" +
+        got.queryExecution.executedPlan)
+    assert(rows.toSet == rollup(base).collect().toSet)
+    // the helper's reason to exist: a plain checkpoint of the same
+    // repartition declares no layout under AQE, so its consumers shuffle
+    val plain = base.repartition(4, $"k").localCheckpoint()
+    val viaPlain = rollup(plain)
+    viaPlain.collect()
+    assert(exchanges(viaPlain).nonEmpty,
+      "a plain checkpoint kept its layout under AQE — localByKey is obsolete")
+    // a broadcast join on the key still plans against the declared layout
+    val small = spark.range(50).select($"id".as("k"), ($"id" * 2).as("y"))
+    val joined = laid.join(broadcast(small), "k")
+    assert(joined.collect().toSet == base.join(small, "k").collect().toSet)
+    assert(executedNodes(joined).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]))
+    Seq(laid, plain).foreach(Checkpoints.release)
+    assert((ids -- before).isEmpty, "release left a laid-out checkpoint behind")
+  }
 }

@@ -72,6 +72,61 @@ class CrawlSpec extends SparkSuite {
     graft.ops.Checkpoints.release(links)
   }
 
+  /** (numTasks, read shuffle, wrote shuffle) of every stage `body`'s
+    * jobs complete, and the number of jobs it starts. */
+  private def stagesOf[T](body: => T): (T, Seq[(Int, Boolean, Boolean)], Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean, Boolean)]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        stages.add((e.stageInfo.numTasks, m.shuffleReadMetrics.recordsRead > 0,
+          m.shuffleWriteMetrics.recordsWritten > 0))
+      }
+    }
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerDrain.drain(sc)
+      (out, stages.toArray(Array.empty[(Int, Boolean, Boolean)]).toSeq, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("withOutlinks spreads a one-partition scan across every core") {
+    val cores = spark.sparkContext.defaultParallelism
+    val docs = graft.Sql.table(spark, dir, "documents")
+    assert(docs.rdd.getNumPartitions == 1, "fixture: one row group, one scan partition")
+    // deciding the spread reads the plan only — no job
+    val (links, _, planJobs) = stagesOf(graft.queries.Crawl.withOutlinks(docs))
+    assert(planJobs == 0, s"withOutlinks started $planJobs job(s) to size its input")
+    // q223's shape: the extraction and the edge count's partial
+    // aggregate run in the stage between the spread and the count
+    val (_, stages, _) = stagesOf(
+      links.groupBy(col("src_url"), col("dst_url")).count().collect())
+    assert(stages.exists { case (n, read, wrote) => n == cores && read && wrote },
+      s"no $cores-task stage ran the extraction: $stages")
+  }
+
+  test("withOutlinks leaves an input that already spans the cores unchanged") {
+    val cores = spark.sparkContext.defaultParallelism
+    // one small file per core: the scan reads one partition per file
+    val path = java.nio.file.Files.createTempDirectory("crawl-wide").resolve("docs").toString
+    graft.Sql.table(spark, dir, "documents").repartition(cores).write.parquet(path)
+    val wide = spark.read.parquet(path)
+    assert(wide.rdd.getNumPartitions >= cores, "fixture: one scan partition per core")
+    val (links, _, jobs) = stagesOf(graft.queries.Crawl.withOutlinks(wide))
+    assert(jobs == 0)
+    links.collect()
+    assert(!executedNodes(links).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
+      s"an exchange was added over a ${wide.rdd.getNumPartitions}-partition input:\n" +
+        links.queryExecution.executedPlan)
+  }
+
   test("q223: mass conservation, hub dominance, tier bit-equality") {
     val links = graft.queries.Crawl.withOutlinks(
       graft.Sql.table(spark, dir, "documents"))

@@ -122,4 +122,24 @@ class IdEncodeSpec extends SparkSuite {
     val viaIds = forcedIds(scores(Hits.run(fixtureEdges, rounds = 3)))
     assert(viaIds == viaStrings)
   }
+
+  test("broadcast-regime id rounds do not re-shuffle the edge frame") {
+    import spark.implicits._
+    // the hub graph: ~3.6k distinct (target, seg) level-1 keys
+    val edges = spark.range(9000)
+      .select(concat(lit("https://h"), ($"id" % 37).cast("string"),
+        lit(".example/p"), $"id").as("w1"), lit("https://hub.example/").as("w2"),
+        ($"id" % 3 + 1).as("c"))
+    val targetSegs = edges
+      .select($"w2", expr("CAST(conv(substr(md5(w1), 1, 15), 16, 10) AS BIGINT) % 4096"))
+      .distinct().count()
+    def written(rounds: Int): Long = forcedIds(ShuffleRecords.written(spark)(
+      PageRank.run(edges, rounds = rounds, strategy = "distributed").collect())._2.records)
+    val extra = written(3) - written(1)
+    // two more rounds over an edge frame laid out by target id add only
+    // node-sized exchanges; re-shuffling the edges on (target, seg)
+    // would add at least one record per (target, seg) key each round
+    assert(extra < targetSegs,
+      s"2 extra rounds wrote $extra shuffle records, >= $targetSegs (target, seg) keys")
+  }
 }

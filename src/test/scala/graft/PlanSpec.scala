@@ -108,6 +108,15 @@ class PlanSpec extends SparkSuite {
       s"bigram explode re-executes inside q94's plan:\n$fin")
     assert(fin.contains("Scan ExistingRDD"),
       s"q94 does not read the checkpointed gram frame:\n$fin")
+    // the checkpoint keeps its bh layout, so neither consumer (the
+    // first-owner agg, the join back) re-shuffles on bh
+    val onBh = executedNodes(df).collect {
+      case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => x.outputPartitioning
+    }.collect {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+          if h.references.exists(_.name == "bh") => h
+    }
+    assert(onBh.isEmpty, s"q94 consumers re-shuffle the gram frame on bh:\n$fin")
   }
 
   test("q95 scoring side joins broadcast (terms-row idf + 2-scalar stats)") {
