@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** HITS hubs-and-authorities (Kleinberg 1999, JACM 46(5)) — fixed-round,
@@ -22,119 +22,69 @@ import org.apache.spark.sql.functions._
   * node itself for norm folds), so a 10⁸-degree hub's reduction
   * spreads over 4096 shuffle keys and no row ever holds more than
   * max(degree/4096, 64) entries. The division by the norm total is a
-  * single IEEE op per node. [[sqlCtes]] unrolls the identical
-  * association grouping for DuckDB, so the doubles hash-match
-  * bit-for-bit — the oracle IS the second, independent evaluation
-  * (one execution tier here, unlike PageRank's two: HitsSpec pins a
-  * hand-solvable fixture exactly and the corpus invariants; the
-  * cross-engine hash is the replica).
+  * single IEEE op per node. It runs on PageRank's two tiers with the
+  * same bits: the driver tier ([[runLocal]], PageRank's shared
+  * kernel) up to [[PageRank.LocalEdgeRows]] edges, the id tier
+  * ([[runIds]]) beyond — IdEncodeSpec pins their equality. [[sqlCtes]]
+  * unrolls the identical association grouping for DuckDB, so the
+  * doubles hash-match bit-for-bit: the oracle is the independent
+  * evaluation.
   *
   * Input `edges`: (w1, w2, c) — directed, integer-weighted, already
   * aggregated (one row per edge). Output: (w, auth, hub).
   */
 object Hits {
 
-  import PageRank.segCol
+  import PageRank.{BroadcastNodeRows, Tree, fold, segCol}
 
-  /** One tree-fold pass: per `key` node, fold score(`other`)·c over
-    * the edge frame in `other` order within md5-segments of `other`.
-    * Levels 2+3 evaluate through [[PageRank.fold23]] — one shuffle
-    * cheaper per pass, bit-identical association (optimization round
-    * 15). Returns (w, raw). */
-  private def foldEdges(
-      e: DataFrame, scores: DataFrame,
-      key: String, other: String, segOf: String): DataFrame = {
-    val s = scores.select(col("w").as("sw"), col("score"))
-    e.join(s, e(other) === s("sw"))
-      .select(e(key).as("kw"), e(other).as("ow"), e(segOf).as("seg"),
-        (col("score") * col("cd")).as("ct"))
-      .groupBy(col("kw"), col("seg"))
-      .agg(sort_array(collect_list(struct(col("ow"), col("ct")))).as("xs"))
-      .select(col("kw"), col("seg"), expr(
-        "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.ct)").as("ssum"))
-      .groupBy(col("kw"))
-      .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
-      .select(col("kw").as("w"), expr(PageRank.fold23("ssum")).as("raw"))
-  }
+  def run(edges: DataFrame, rounds: Int): DataFrame =
+    PageRank.tiered(edges, PageRank.LocalEdgeRows)(runLocal(_, rounds))(
+      iterateIds(_, rounds, _, BroadcastNodeRows))
 
-  /** The norm total: fold `raw` over its rows in (seg(w), w) order
-    * through the same tree. seg(w) is recomputed IN-ROW (same md5
-    * function of the same strings = same segments) instead of joined
-    * from the node frame, and levels 2+3 fold through
-    * [[PageRank.fold23]] — a join and a shuffle cheaper per norm,
-    * bit-identical (optimization round 15). Returns a 1-row (s)
-    * frame. */
-  private def foldNorm(raw: DataFrame): DataFrame =
-    raw.withColumn("seg", segCol(col("w")))
-      .groupBy(col("seg"))
-      .agg(sort_array(collect_list(struct(col("w"), col("raw")))).as("xs"))
-      .select(col("seg"), expr(
-        "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.raw)").as("ssum"))
-      .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
-      .select(expr(PageRank.fold23("ssum")).as("s"))
-
-  /** Normalize: every node, coalesce(raw, 0)/s — one IEEE division. */
-  private def normalize(nodes: DataFrame, raw: DataFrame, s: DataFrame): DataFrame =
-    nodes.join(raw, Seq("w"), "left")
-      .crossJoin(broadcast(s))
-      .select(col("w"),
-        (coalesce(col("raw"), lit(0.0)) / col("s")).as("score"))
-
-  def run(edges: DataFrame, rounds: Int): DataFrame = {
-    val e0 = edges.localCheckpoint()
-    // the count (one cached-block scan) feeds the id-encode gate — the
-    // PageRank.iterateIdsDistributed treatment, same bits (see
-    // [[PageRank.idEncodeEdgeRows]])
-    val edgeRows = e0.count()
-    if (edgeRows >= PageRank.idEncodeEdgeRows) return runIds(e0, rounds, edgeRows)
-    val e = e0
-      .select(col("w1"), col("w2"), col("c").cast("double").as("cd"),
-        segCol(col("w1")).as("seg1"), segCol(col("w2")).as("seg2"))
-      .localCheckpoint()
-    val nodes = e.select(col("w1").as("w")).union(e.select(col("w2").as("w")))
-      .distinct()
-      .withColumn("seg", segCol(col("w")))
-      .localCheckpoint()
-    // one single-pass aggregate measures the node count AND the summed
-    // key bytes for the byte-aware broadcast gate (round 16, VERDICT
-    // #5) — one job, like the count() it replaces (see
-    // [[PageRank.BroadcastNodeRows]]/[[PageRank.broadcastKeyBytes]])
-    val probe = nodes.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(octet_length(col("w"))), lit(0L)).as("kb")).head()
-    val nRows = probe.getLong(0)
-    val n = nRows.toDouble
-    val bcastRank = nRows <= PageRank.BroadcastNodeRows &&
-      probe.getLong(1) <= PageRank.broadcastKeyBytes
-    def hinted(df: DataFrame): DataFrame = if (bcastRank) broadcast(df) else df
-    var hub = nodes.select(col("w"), (lit(1.0) / lit(n)).as("score"))
-      .localCheckpoint()
-    var auth: DataFrame = null
-    var it = 0
-    while (it < rounds) {
-      // auth side: in-sums keyed by target, leaves ordered by source
-      val araw = foldEdges(e, hinted(hub), key = "w2", other = "w1", segOf = "seg1")
-      val aNew = normalize(nodes, hinted(araw), foldNorm(araw)).localCheckpoint()
-      if (auth != null) Checkpoints.release(auth)
-      auth = aNew
-      // hub side: out-sums keyed by source, leaves ordered by target
-      val hraw = foldEdges(e, hinted(auth), key = "w1", other = "w2", segOf = "seg2")
-      val hNew = normalize(nodes, hinted(hraw), foldNorm(hraw)).localCheckpoint()
-      Checkpoints.release(hub)
-      hub = hNew
-      it += 1
+  /** The driver tier: per round, the auth fold keyed by target (leaves
+    * in source order), its norm, one division per node; then the same
+    * for hubs keyed by source (leaves in target order). Each norm folds
+    * the nodes that HAVE a raw score, in (seg(w), w) order — exactly
+    * the id tier's raw frame.
+    */
+  private[graft] def runLocal(edges: DataFrame, rounds: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val g = new PageRank.LocalGraph(edges)
+    val cd = g.c.map(_.toDouble)
+    val authTrees = g.edgeTrees(g.dst, g.src)
+    val hubTrees = g.edgeTrees(g.src, g.dst)
+    val authNorm = g.nodeTree(g.hasIn)
+    val hubNorm = g.nodeTree(g.hasOut)
+    def half(trees: Array[Tree], norm: Tree, other: Array[Int], score: Array[Double]) = {
+      val raw = trees.map(t => fold(t, e => score(other(e)) * cd(e)))
+      val s = fold(norm, raw(_))
+      raw.map(_ / s)
     }
-    val out = auth.select(col("w"), col("score").as("auth"))
-      .join(hinted(hub.select(col("w"), col("score").as("hub"))), "w")
-    Seq(e0, e, nodes).foreach(Checkpoints.release)
-    out
+    var hub = Array.fill(g.n)(1.0 / g.n.toDouble)
+    var auth = new Array[Double](g.n)
+    for (_ <- 1 to rounds) {
+      auth = half(authTrees, authNorm, g.src, hub)
+      hub = half(hubTrees, hubNorm, g.dst, auth)
+    }
+    g.nodes.indices.map(v => (g.nodes(v), auth(v), hub(v))).toDF("w", "auth", "hub")
   }
 
-  /** [[foldEdges]] over ids (optimization round 16): `kseg` — the KEY
-    * node's own md5 segment, already on the edge row — rides both
-    * groupBys (functionally dependent on the key: same groups, same
-    * fold orders, same bits) so the norm fold downstream needs neither
-    * a node-frame join nor an md5 recompute. Returns (id, nseg, raw).
+  /** The id tier, whatever the graph's size; `bcastRows` stands in for
+    * [[PageRank.BroadcastNodeRows]].
+    */
+  private[graft] def runIds(
+      edges: DataFrame, rounds: Int, bcastRows: Long = BroadcastNodeRows): DataFrame =
+    PageRank.checkpointed(edges)(iterateIds(_, rounds, _, bcastRows))
+
+  /** One fold pass over ids (optimization round 16): per `key` node,
+    * fold score(`other`)·c over the edge frame in `other` order within
+    * md5-segments of `other`; levels 2+3 evaluate through
+    * [[PageRank.fold23]]. `kseg` — the KEY node's own md5 segment,
+    * already on the edge row — rides both groupBys (functionally
+    * dependent on the key: same groups, same fold orders, same bits)
+    * so the norm fold downstream needs neither a node-frame join nor
+    * an md5 recompute. Returns (id, nseg, raw).
     */
   private def foldEdgesIds(
       e: DataFrame, scores: DataFrame,
@@ -155,9 +105,11 @@ object Hits {
         expr(PageRank.fold23("ssum")).as("raw"))
   }
 
-  /** [[foldNorm]] over ids: the summed node's segment arrives on the
-    * raw frame (carried by [[foldEdgesIds]]) — same segments, same
-    * orders (id order ≡ UTF-8 string order), same bits. */
+  /** The norm total: fold `raw` over its rows in (seg(w), w) order
+    * through the same tree — the summed node's segment arrives on the
+    * raw frame (carried by [[foldEdgesIds]]), and id order ≡ UTF-8
+    * string order. Returns a 1-row (s) frame.
+    */
   private def foldNormIds(raw: DataFrame): DataFrame =
     raw.groupBy(col("nseg"))
       .agg(sort_array(collect_list(struct(col("id"), col("raw")))).as("xs"))
@@ -166,29 +118,29 @@ object Hits {
       .agg(sort_array(collect_list(struct(col("nseg").as("seg"), col("ssum")))).as("xs"))
       .select(expr(PageRank.fold23("ssum")).as("s"))
 
+  /** Normalize: every node of `nodes`, coalesce(raw, 0)/s — one IEEE
+    * division — next to `nodes`' own columns.
+    */
   private def normalizeIds(nodes: DataFrame, raw: DataFrame, s: DataFrame): DataFrame =
     nodes.join(raw.select(col("id"), col("raw")), Seq("id"), "left")
       .crossJoin(broadcast(s))
-      .select(col("id"),
-        (coalesce(col("raw"), lit(0.0)) / col("s")).as("score"))
+      .select(nodes.columns.map(col) :+
+        (coalesce(col("raw"), lit(0.0)) / col("s")).as("score"): _*)
 
-  /** [[run]] over 8-byte rank ids — PageRank.iterateIdsDistributed's
-    * treatment for the hubs-and-authorities loop. The edge frame is
-    * mapped to ids once and checkpointed TWICE through
-    * [[Checkpoints.localByKey]], each copy hash-partitioned by one
-    * direction's fold key (auth folds group by the target id, hub
-    * folds by the source id), so in the broadcast regime every
-    * per-round fold grouping is partition-local and the per-round
-    * edge-sized exchanges disappear. The helper, not a plain
-    * `repartition(...).localCheckpoint()`, is what keeps the layout:
-    * under AQE the plain checkpoint's LogicalRDD declares no
-    * partitioning, so each fold would re-shuffle the edge copy. Fold
-    * orders and the IEEE op sequence are unchanged (id order ≡ UTF-8
-    * string order): IdEncodeSpec pins run-vs-runIds bit-equality, and
-    * the unrolled DuckDB oracle hash with the gate forced to 0 is the
-    * second proof.
+  /** The hubs-and-authorities loop over 8-byte rank ids — the
+    * [[PageRank]] id tier's treatment. The edge frame is mapped to ids
+    * once and checkpointed TWICE through [[Checkpoints.localByKey]],
+    * each copy hash-partitioned by one direction's fold key (auth folds
+    * group by the target id, hub folds by the source id), so in the
+    * broadcast regime every per-round fold grouping is
+    * partition-local and the per-round edge-sized exchanges disappear.
+    * The helper, not a plain `repartition(...).localCheckpoint()`, is
+    * what keeps the layout: under AQE the plain checkpoint's LogicalRDD
+    * declares no partitioning, so each fold would re-shuffle the edge
+    * copy. Fold orders and the IEEE op sequence are the driver tier's
+    * (id order ≡ UTF-8 string order).
     */
-  private def runIds(e0: DataFrame, rounds: Int, edgeRows: Long): DataFrame = {
+  private def iterateIds(e0: DataFrame, rounds: Int, edgeRows: Long, bcastRows: Long): DataFrame = {
     val nodesW = e0.select(col("w1").as("w")).union(e0.select(col("w2").as("w")))
       .distinct()
       .withColumn("seg", segCol(col("w")))
@@ -196,7 +148,7 @@ object Hits {
     val dict = PageRank.nodeDict(nodesW, parts) // (w, seg, id)
     val nRows = dict.count()
     val n = nRows.toDouble
-    val bcastRank = nRows <= PageRank.BroadcastNodeRows
+    val bcastRank = nRows <= bcastRows
     def hinted(df: DataFrame): DataFrame = if (bcastRank) broadcast(df) else df
     val eIds = e0
       .join(hinted(dict.select(col("w").as("w1"), col("id").as("id1"),
@@ -220,16 +172,19 @@ object Hits {
       if (bcastRank) (df => df)
       else (df => df.repartition(parts, col("kid")))
     val nodes = dict.select(col("id"))
+    // the last auth frame carries the strings out, so the dictionary
+    // goes with the loop
+    val named = dict.select(col("id"), col("w"))
     var hub = dict.select(col("id"), (lit(1.0) / lit(n)).as("score"))
       .localCheckpoint()
     var auth: DataFrame = null
-    var it = 0
-    while (it < rounds) {
+    for (k <- 1 to rounds) {
       // auth side: in-sums keyed by the target id, leaves in source-id
       // order, key segment = seg2
       val araw = foldEdgesIds(eA, hinted(hub),
         key = "id2", other = "id1", segOf = "seg1", ksegOf = "seg2", shape)
-      val aNew = normalizeIds(nodes, hinted(araw), foldNormIds(araw)).localCheckpoint()
+      val aNew = normalizeIds(if (k == rounds) named else nodes,
+        hinted(araw), foldNormIds(araw)).localCheckpoint()
       if (auth != null) Checkpoints.release(auth)
       auth = aNew
       // hub side: out-sums keyed by the source id, leaves in target-id
@@ -239,14 +194,11 @@ object Hits {
       val hNew = normalizeIds(nodes, hinted(hraw), foldNormIds(hraw)).localCheckpoint()
       Checkpoints.release(hub)
       hub = hNew
-      it += 1
     }
-    // dict stays checkpointed: the lazy result maps ids back through it
-    val out = auth.select(col("id"), col("score").as("auth"))
+    val out = auth.select(col("id"), col("w"), col("score").as("auth"))
       .join(hinted(hub.select(col("id"), col("score").as("hub"))), "id")
-      .join(hinted(dict.select(col("id"), col("w"))), "id")
       .select(col("w"), col("auth"), col("hub"))
-    Seq(e0, eA, eH).foreach(Checkpoints.release)
+    Seq(e0, eA, eH, dict).foreach(Checkpoints.release)
     out
   }
 

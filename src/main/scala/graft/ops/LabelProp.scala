@@ -39,7 +39,7 @@ object LabelProp {
     * drops self-loops. Returns (host, community) after `rounds`. */
   def run(edges: DataFrame, rounds: Int): DataFrame = {
     // the loop frames checkpoint once and each round's label frame
-    // supersedes its predecessor (the PageRank.iterateDistributed
+    // supersedes its predecessor (the PageRank id loop's
     // discipline) — without this, round r's lineage would re-run the
     // upstream extraction scan r times per join side
     val e0 = edges.localCheckpoint()

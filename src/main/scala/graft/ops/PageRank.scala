@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
   * across its two execution tiers (the [[ConnectedComponents.auto]]
   * precedent):
   *
-  *  - `local`: the node/edge frames are collected (bounded by the
-  *    caller's threshold) and the rounds run on driver arrays — one
-  *    tiny job instead of one-plus jobs per round. Right whenever the
-  *    graph is dimension-sized (a vocabulary, a label set).
-  *  - `distributed`: each round is one hash join + a fixed-depth
-  *    tree-fold aggregation + a tree-folded dangling aggregate, with
+  *  - `local`, the driver tier: the edge frame is collected (at most
+  *    [[LocalEdgeRows]] rows, or the caller's threshold) and the rounds
+  *    run on driver arrays — one tiny job instead of one-plus jobs per
+  *    round. Right whenever the graph is dimension-sized (a vocabulary,
+  *    a label set, a small link graph).
+  *  - `distributed`, the id tier: node keys are dictionary-encoded to
+  *    8-byte ids once; each round is one join + a fixed-depth tree-fold
+  *    aggregation + a tree-folded dangling aggregate, with
   *    localCheckpoint keeping the lineage linear and every superseded
   *    checkpoint unpersisted (the q45 eager-iteration discipline). The
   *    100 TB-vocabulary path.
@@ -22,11 +24,15 @@ import org.apache.spark.sql.functions._
   * weights are single exact-integer divisions; per-node in-sums and
   * the dangling sum fold through the SAME fixed depth-3 reduction tree
   * (below); the update is `(1−d)/n + d·(insum + dsum/n)` with that
-  * exact op tree — and the local tier orders strings by UTF-8 bytes,
-  * the binary collation Spark's `sort_array` (and DuckDB ORDER BY)
-  * uses, NOT Java's UTF-16 `compareTo` (they disagree on
-  * supplementary-plane code points). So `auto` never changes results,
-  * only plans (PageRankSpec pins tier equality bit-for-bit).
+  * exact op tree — and both visit nodes in UTF-8 byte order (the
+  * driver tier by sorting the strings, the id tier through ids
+  * order-isomorphic to them), the binary collation Spark's
+  * `sort_array` (and DuckDB ORDER BY) uses, NOT Java's UTF-16
+  * `compareTo` (they disagree on supplementary-plane code points). So
+  * `auto` never changes results, only plans (PageRankSpec and
+  * IdEncodeSpec pin tier equality bit-for-bit). TrustRank
+  * ([[runBiased]]) and HITS ([[Hits]]) run on the same two tiers, and
+  * the same driver kernel ([[LocalGraph]], [[fold]]).
   *
   * '''The reduction tree''' (the q84 fixed-depth discipline): a
   * single whole-group ordered fold (`sort_array(collect_list)`) would
@@ -45,12 +51,12 @@ import org.apache.spark.sql.functions._
   *     order — hard-bounded at 64 partials per list;
   *  3. level 3 folds the ≤64 block partials in blk order.
   *
-  * In the distributed tier, levels 2 and 3 EVALUATE in one pass
-  * ([[fold23]]): the per-key level-1 partial list is hard-bounded at
-  * 4096 entries, so both levels fold in a single collected-list
-  * aggregation whose accumulator replays the identical association
-  * grouping — one shuffle cheaper per fold, same bits (optimization
-  * round 15). The tree SHAPE (and the oracle SQL) is unchanged.
+  * In the id tier, levels 2 and 3 EVALUATE in one pass ([[fold23]]):
+  * the per-key level-1 partial list is hard-bounded at 4096 entries,
+  * so both levels fold in a single collected-list aggregation whose
+  * accumulator replays the identical association grouping — one
+  * shuffle cheaper per fold, same bits (optimization round 15). The
+  * tree SHAPE (and the oracle SQL) is unchanged.
   *
   * Depth is a STATIC part of the operator's definition, not derived
   * from the data (a data-dependent depth would change the association
@@ -69,6 +75,14 @@ object PageRank {
     */
   private[ops] val Segments = 4096
 
+  /** Edge-row gate between the tiers, shared by PageRank, TrustRank
+    * and HITS: a graph of at most this many edges runs on the driver
+    * (a few MB collected, where the id tier would pay a dictionary
+    * build and several jobs per round); a larger one runs in the id
+    * tier. [[run]]'s `localThreshold` defaults to it.
+    */
+  private[ops] val LocalEdgeRows: Long = 100000L
+
   /** Broadcast budget (rows) for the per-round rank-frame joins
     * (optimization round 15, guide §3.1): each round joins the edge
     * frame against the node-sized rank frame. AQE's broadcast
@@ -77,61 +91,16 @@ object PageRank {
     * round SHUFFLED the multi-million-row edge frame twice. The node
     * COUNT is already measured before the loop (the `n` driver
     * scalar), so the hint is gated on a real count at zero extra
-    * jobs: ≤ 2²¹ rows (≈ a couple hundred MB built, well under the
-    * guide's broadcast comfort zone and the 8 GB/512 M-row hard cap)
-    * → broadcast the rank frame and leave the edge frame unshuffled;
-    * beyond → today's shuffle join, which a 10⁹-node graph needs
-    * anyway. Join strategy never changes results — fold order is
-    * fixed by sort_array, not arrival order.
+    * jobs: ≤ 2²¹ rows (an id-keyed row is ~16 B, so ≈ 34 MB built,
+    * well under the guide's broadcast comfort zone and the 8 GB/512
+    * M-row hard cap) → broadcast the rank frame and leave the edge
+    * frame unshuffled; beyond → the shuffle join, which a 10⁹-node
+    * graph needs anyway. Join strategy never changes results — fold
+    * order is fixed by sort_array, not arrival order. The id loops
+    * take the gate as their `bcastRows` argument, so specs can force
+    * the shuffle regime onto fixture scales.
     */
-  private[ops] val BroadcastNodeRows: Long = 1L << 21
-
-  /** Byte companion to [[BroadcastNodeRows]] (optimization round 16,
-    * VERDICT #5): the row gate alone is blind to key width — 2²¹ rows
-    * of ~60 B URLs is ~130 MB, but a graph of 1 KB-long URLs near the
-    * row boundary would broadcast-build several hundred MB per round ×
-    * R rounds. The STRING paths therefore also gate on the summed key
-    * bytes (measured in the same single-pass aggregate that already
-    * counts the checkpointed node frame — zero extra jobs); the id
-    * paths stay row-gated because their per-row width is a known
-    * constant (~16 B: 2²¹ rows ≈ 34 MB, nowhere near any budget).
-    * 256 MB of raw key bytes keeps the built relation comfortably
-    * inside the guide's broadcast comfort zone (§3.1) and far from the
-    * 8 GB hard cap; past it the loop takes the shuffle join a graph
-    * that big needs anyway. Overridable for specs (forcing the
-    * shuffle regime onto oracle-checked scales proves the gate never
-    * changes results, only plans).
-    */
-  private[ops] val BroadcastKeyBytesDefault: Long = 1L << 28
-
-  private[ops] def broadcastKeyBytes: Long =
-    sys.props.get("graft.broadcastKeyBytes").map(_.toLong)
-      .getOrElse(BroadcastKeyBytesDefault)
-
-  /** Edge-count gate for dictionary-encoding the loop's node keys
-    * (optimization round 16, guide §2.3 "narrower types"): past this
-    * many edges the per-round fold exchanges dominate and every one of
-    * them carries full URL strings (~60 B/key at 100×: 0.7–1.7 GB
-    * shuffled per loop query) where an 8-byte id carries the same
-    * information. The id is the node's GLOBAL RANK in UTF-8 binary
-    * order ([[GlobalRank]]), which is order-ISOMORPHIC to the string —
-    * `sort_array` over ids visits leaves in the identical order, the
-    * md5 `seg` is computed from the string once and carried, and ids
-    * map back to words in one final join — so every IEEE operation
-    * sequence is unchanged and the results are bit-identical
-    * (IdEncodeSpec pins it; the cross-engine oracle hash with the gate
-    * forced to 0 is the second proof). Below the gate the one-time
-    * rank + two dictionary joins cost more than the tiny string
-    * shuffles they'd save, so small graphs keep the direct string
-    * loop. The system property exists for audits/specs (forcing the
-    * id path onto oracle-checked scales); it never changes results,
-    * only plans.
-    */
-  private[ops] val IdEncodeEdgeRowsDefault: Long = 1L << 18
-
-  private[ops] def idEncodeEdgeRows: Long =
-    sys.props.get("graft.idEncodeEdgeRows").map(_.toLong)
-      .getOrElse(IdEncodeEdgeRowsDefault)
+  private[graft] val BroadcastNodeRows: Long = 1L << 21
 
   /** Partition count for the id-path frames: enough partitions to use
     * every core (`defaultParallelism` — the scale signal the driver
@@ -219,6 +188,7 @@ object PageRank {
       s"struct(a.tot + a.cur AS tot, CAST(0.0 AS DOUBLE) + e.$field AS cur, e.seg div 64 AS blk)), " +
       "a -> a.tot + a.cur)"
 
+
   /** DuckDB mirror of the fixed-round iteration — CTE defs (caller
     * splices after its own WITH items) reading CTE `edges` (w1, w2,
     * c BIGINT) and ending with CTE `r<rounds>` = (w, pr).
@@ -285,182 +255,45 @@ object PageRank {
     *
     * `seedCond`: a SQL boolean over column `w`, evaluated identically
     * by Spark and DuckDB (the caller keeps it engine-portable —
-    * regexp_extract/LIKE, never RLIKE). Distributed-only (the Hits
-    * posture: one implementation; [[biasedSqlCtes]]'s unrolled oracle
-    * is the independent replica). Output: (w, trust, is_seed).
+    * regexp_extract/LIKE, never RLIKE). Runs on the driver tier up to
+    * [[LocalEdgeRows]] edges and in the id tier beyond, with the same
+    * bits; [[biasedSqlCtes]]'s unrolled oracle is the independent
+    * replica. Output: (w, trust, is_seed).
     */
-  def runBiased(edges: DataFrame, rounds: Int, seedCond: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast => bcast}
-    val e0 = edges.localCheckpoint()
-    // the count (one cached-block scan) feeds the id-encode gate — the
-    // same dictionary treatment as iterateDistributed, same bits
-    val edgeRows = e0.count()
-    if (edgeRows >= idEncodeEdgeRows) return runBiasedIds(e0, rounds, seedCond, edgeRows)
-    val e = e0.select(col("w1"), col("w2"), col("c").cast("long").as("c"))
-    val wout = e.groupBy(col("w1")).agg(sum(col("c")).cast("long").as("wout"))
-    val trans = e.join(wout, "w1")
-      .select(col("w1"), col("w2"),
-        (col("c").cast("double") / col("wout").cast("double")).as("p"),
-        segCol(col("w1")).as("seg"))
-      .localCheckpoint()
-    // static dangling flag joined ONCE (the iterateDistributed
-    // optimization, round 15) — the per-round dangling fold filters
-    // the rank frame instead of anti-joining it
-    val outW = trans.select(col("w1").as("w")).distinct()
-    val nodes0 = e.select(col("w1").as("w")).union(e.select(col("w2").as("w")))
-      .distinct()
-      .withColumn("seg", segCol(col("w")))
-      .withColumn("is_seed", expr(s"CAST($seedCond AS BIGINT)"))
-      .join(outW.withColumn("has_out", lit(1)), Seq("w"), "left")
-      .select(col("w"), col("seg"), col("is_seed"),
-        col("has_out").isNull.as("is_dang"))
-      .localCheckpoint()
-    // one single-pass aggregate over the checkpointed nodes0 blocks
-    // replaces the former seed-count + node-count job pair AND feeds
-    // the byte-aware broadcast gate (round 16, VERDICT #5): seed
-    // count, node count, summed key bytes — one job instead of two
-    val probe = nodes0.agg(
-      sum(col("is_seed")).as("ns"), count(lit(1)).as("n"),
-      coalesce(sum(octet_length(col("w"))), lit(0L)).as("kb")).head()
-    val ns = if (probe.isNullAt(0)) 0L else probe.getLong(0)
+  def runBiased(edges: DataFrame, rounds: Int, seedCond: String): DataFrame =
+    tiered(edges, LocalEdgeRows)(runBiasedLocal(_, rounds, seedCond))(
+      walkIds(_, rounds, _, BroadcastNodeRows, Some(seedCond)))
+
+  /** [[runBiased]]'s driver tier. `seedCond` is evaluated once, by
+    * Spark, over the collected node list (a local relation), so the
+    * seed set is exactly the one the id tier and the oracle see.
+    */
+  private[graft] def runBiasedLocal(edges: DataFrame, rounds: Int, seedCond: String): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val g = new LocalGraph(edges)
+    val seedOf = g.nodes.toSeq.toDF("w")
+      .select(col("w"), expr(s"CAST($seedCond AS BIGINT)"))
+      .collect().map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .toMap
+    val seed = g.nodes.map(seedOf)
+    val ns = seed.flatten.sum
     require(ns > 0, "TrustRank needs at least one seed node")
-    val bcastRank =
-      probe.getLong(1) <= BroadcastNodeRows && probe.getLong(2) <= broadcastKeyBytes
-    def hinted(df: DataFrame): DataFrame = if (bcastRank) bcast(df) else df
-    // t(v): one exact division for seeds, literal zero otherwise — a
-    // pure projection over the checkpointed nodes0 blocks (round 15:
-    // the second materialization the old code paid here bought
-    // nothing; the CASE re-evaluates per read at in-row cost)
-    val nodes = nodes0
-      .withColumn("t", expr(s"CASE WHEN is_seed = 1 THEN 1.0 / CAST($ns AS DOUBLE) ELSE 0.0 END"))
+    val t = seed.map(s => if (s.contains(1L)) 1.0 / ns.toDouble else 0.0)
     // the walk starts from the seed distribution itself
-    var pr = nodes.select(col("w"), col("seg"), col("is_dang"), col("t").as("pr"))
-      .localCheckpoint()
-    var it = 0
-    while (it < rounds) {
-      val dang = pr.filter(col("is_dang"))
-        .groupBy(col("seg"))
-        .agg(sort_array(collect_list(struct(col("w"), col("pr")))).as("xs"))
-        .select(col("seg"), expr(
-          "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.pr)").as("ssum"))
-        .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
-        .select(expr(fold23("ssum")).as("dsum"))
-      val prr = hinted(pr.select(col("w"), col("pr")))
-      val insum = trans.join(prr, trans("w1") === prr("w"))
-        .select(col("w2"), col("w1"), trans("seg"), (col("pr") * col("p")).as("ct"))
-        .groupBy(col("w2"), col("seg"))
-        .agg(sort_array(collect_list(struct(col("w1"), col("ct")))).as("xs"))
-        .select(col("w2"), col("seg"), expr(
-          "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.ct)").as("ssum"))
-        .groupBy(col("w2"))
-        .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
-        .select(col("w2").as("w"), expr(fold23("ssum")).as("insum"))
-      val next = nodes.select(col("w"), col("seg"), col("is_dang"), col("t"))
-        .join(hinted(insum), Seq("w"), "left")
-        .crossJoin(bcast(dang))
-        .select(col("w"), col("seg"), col("is_dang"),
-          (lit(0.15) * col("t") + lit(0.85) *
-            (coalesce(col("insum"), lit(0.0)) + col("dsum") * col("t"))).as("pr"))
-        .localCheckpoint()
-      Checkpoints.release(pr)
-      pr = next
-      it += 1
+    val trust = walkLocal(g, rounds, t) { (v, insum, dsum) =>
+      0.15 * t(v) + 0.85 * (insum + dsum * t(v))
     }
-    val out = pr.select(col("w"), col("pr").as("trust"))
-      .join(hinted(nodes.select(col("w"), col("is_seed"))), "w")
-    // `nodes0` stays checkpointed: the returned (lazy) frame reads it
-    // for is_seed — the ContextCleaner reaps it with the result plan
-    // (the one-shot convention; releasing it here broke the consumer
-    // with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-    Seq(e0, trans).foreach(Checkpoints.release)
-    out
+    g.nodes.indices.map(v => (g.nodes(v), trust(v), seed(v))).toDF("w", "trust", "is_seed")
   }
 
-  /** [[runBiased]] over 8-byte rank ids — the [[iterateIdsDistributed]]
-    * treatment applied to the trust iteration: the seed predicate and
-    * the md5 segments are evaluated on the STRINGS once, in the
-    * dictionary; the rounds run entirely on ids; ids map back in one
-    * final join. Same fold orders, same IEEE sequence, same bits.
+  /** [[runBiased]]'s id tier, whatever the graph's size; `bcastRows`
+    * stands in for [[BroadcastNodeRows]].
     */
-  private def runBiasedIds(
-      e0: DataFrame, rounds: Int, seedCond: String, edgeRows: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast => bcast}
-    val e = e0.select(col("w1"), col("w2"), col("c").cast("long").as("c"))
-    val outW = e.select(col("w1").as("w")).distinct()
-    val nodesW = e.select(col("w1").as("w")).union(e.select(col("w2").as("w")))
-      .distinct()
-      .withColumn("seg", segCol(col("w")))
-      .withColumn("is_seed", expr(s"CAST($seedCond AS BIGINT)"))
-      .join(outW.withColumn("has_out", lit(1)), Seq("w"), "left")
-      .select(col("w"), col("seg"), col("is_seed"),
-        col("has_out").isNull.as("is_dang"))
-    val parts = idParts(edgeRows, e0)
-    val dict = nodeDict(nodesW, parts) // (w, seg, is_seed, is_dang, id)
-    // one aggregate job for both scalars (round 16 — the node count
-    // and the seed count read the same checkpointed blocks)
-    val probe = dict.agg(count(lit(1)).as("n"), sum(col("is_seed")).as("ns")).head()
-    val nRows = probe.getLong(0)
-    val ns = if (probe.isNullAt(1)) 0L else probe.getLong(1)
-    require(ns > 0, "TrustRank needs at least one seed node")
-    val bcastRank = nRows <= BroadcastNodeRows
-    def hinted(df: DataFrame): DataFrame = if (bcastRank) bcast(df) else df
-    val wout = e.groupBy(col("w1")).agg(sum(col("c")).cast("long").as("wout"))
-    val transBase = e.join(wout, "w1")
-      .join(hinted(dict.select(col("w").as("w1"), col("id").as("id1"), col("seg"))), "w1")
-      .join(hinted(dict.select(col("w").as("w2"), col("id").as("id2"))), "w2")
-      .select(col("id1"), col("id2"),
-        (col("c").cast("double") / col("wout").cast("double")).as("p"), col("seg"))
-    // broadcast regime: laid out by target id through the checkpoint,
-    // as in [[iterateIdsDistributed]]
-    val trans =
-      if (bcastRank) Checkpoints.localByKey(transBase, "id2", parts)
-      else transBase.localCheckpoint()
-    // t(v): the same pure projection over the dictionary blocks
-    val nodesT = dict
-      .withColumn("t", expr(s"CASE WHEN is_seed = 1 THEN 1.0 / CAST($ns AS DOUBLE) ELSE 0.0 END"))
-      .select(col("id"), col("seg"), col("is_dang"), col("t"))
-    var pr = nodesT.select(col("id"), col("seg"), col("is_dang"), col("t").as("pr"))
-      .localCheckpoint()
-    var it = 0
-    while (it < rounds) {
-      val dang = pr.filter(col("is_dang"))
-        .groupBy(col("seg"))
-        .agg(sort_array(collect_list(struct(col("id"), col("pr")))).as("xs"))
-        .select(col("seg"), expr(
-          "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.pr)").as("ssum"))
-        .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
-        .select(expr(fold23("ssum")).as("dsum"))
-      val prr = hinted(pr.select(col("id"), col("pr")))
-      val joined = trans.join(prr, trans("id1") === prr("id"))
-        .select(col("id2"), col("id1"), trans("seg"), (col("pr") * col("p")).as("ct"))
-      val shaped = if (bcastRank) joined else joined.repartition(parts, col("id2"))
-      val insum = shaped
-        .groupBy(col("id2"), col("seg"))
-        .agg(sort_array(collect_list(struct(col("id1"), col("ct")))).as("xs"))
-        .select(col("id2"), col("seg"), expr(
-          "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.ct)").as("ssum"))
-        .groupBy(col("id2"))
-        .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
-        .select(col("id2").as("id"), expr(fold23("ssum")).as("insum"))
-      val next = nodesT
-        .join(hinted(insum), Seq("id"), "left")
-        .crossJoin(bcast(dang))
-        .select(col("id"), col("seg"), col("is_dang"),
-          (lit(0.15) * col("t") + lit(0.85) *
-            (coalesce(col("insum"), lit(0.0)) + col("dsum") * col("t"))).as("pr"))
-        .localCheckpoint()
-      Checkpoints.release(pr)
-      pr = next
-      it += 1
-    }
-    val out = pr.select(col("id"), col("pr").as("trust"))
-      .join(hinted(dict.select(col("id"), col("w"), col("is_seed"))), "id")
-      .select(col("w"), col("trust"), col("is_seed"))
-    // dict stays checkpointed (the lazy result maps ids back through
-    // it — the one-shot convention); the rest releases now
-    Seq(e0, trans).foreach(Checkpoints.release)
-    out
-  }
+  private[graft] def runBiasedIds(
+      edges: DataFrame, rounds: Int, seedCond: String,
+      bcastRows: Long = BroadcastNodeRows): DataFrame =
+    checkpointed(edges)(walkIds(_, rounds, _, bcastRows, Some(seedCond)))
 
   /** [[runBiased]]'s DuckDB mirror — CTE defs reading CTE `edges`
     * (w1, w2, c), ending with CTE `t$rounds` = (w, trust, is_seed);
@@ -517,26 +350,12 @@ object PageRank {
       edges: DataFrame,
       rounds: Int,
       strategy: String = "auto",
-      localThreshold: Long = 100000L): DataFrame = strategy match {
+      localThreshold: Long = LocalEdgeRows): DataFrame = strategy match {
     case "local" => iterateLocal(edges, rounds)
-    case "distributed" =>
-      // the edge count (read off the fresh checkpoint — one tiny
-      // cached-block scan) feeds the id-encode gate and its partition
-      // sizing, exactly like auto's threshold count does
-      val e = edges.localCheckpoint()
-      iterateDistributed(e, rounds, e.count())
+    case "distributed" => runIds(edges, rounds)
     case "auto" =>
-      // materialize the edge set ONCE: the threshold probe is an
-      // action, and without this the whole upstream pipeline (q96's
-      // corpus-sized bigram aggregation) would execute twice — once
-      // for the count, once for the iteration
-      val e = edges.localCheckpoint()
-      val edgeRows = e.count()
-      if (edgeRows <= localThreshold) {
-        val r = iterateLocal(e, rounds)
-        Checkpoints.release(e)
-        r
-      } else iterateDistributed(e, rounds, edgeRows) // releases e when done
+      tiered(edges, localThreshold)(iterateLocal(_, rounds))(
+        walkIds(_, rounds, _, BroadcastNodeRows, None))
     case other => throw new IllegalArgumentException(s"unknown strategy $other")
   }
 
@@ -546,181 +365,165 @@ object PageRank {
   def runLocal(edges: DataFrame, rounds: Int): DataFrame =
     iterateLocal(edges, rounds)
 
-  /** Distributed tier: vocab-sized frames, one join + tree-fold agg
-    * + tree-folded dangling scalar per round.
+  /** Id tier: vocab-sized frames, one join + tree-fold agg +
+    * tree-folded dangling scalar per round.
     */
-  def runDistributed(edges: DataFrame, rounds: Int): DataFrame = {
+  def runDistributed(edges: DataFrame, rounds: Int): DataFrame =
+    runIds(edges, rounds)
+
+  /** The id tier with `bcastRows` in place of [[BroadcastNodeRows]]. */
+  private[graft] def runIds(
+      edges: DataFrame, rounds: Int, bcastRows: Long = BroadcastNodeRows): DataFrame =
+    checkpointed(edges)(walkIds(_, rounds, _, bcastRows, None))
+
+  /** Materializes `edges` ONCE and hands the checkpoint and its row
+    * count to `f`: the count is an action, and without the checkpoint
+    * the whole upstream pipeline (q96's corpus-sized bigram
+    * aggregation) would execute twice — once for the count, once for
+    * the iteration. The id loops release the checkpoint when done.
+    */
+  private[ops] def checkpointed(edges: DataFrame)(f: (DataFrame, Long) => DataFrame): DataFrame = {
     val e = edges.localCheckpoint()
-    iterateDistributed(e, rounds, e.count())
+    f(e, e.count())
   }
 
-  /** Group `items` into the fixed tree shape: blocks (blk asc) of
-    * segments (seg asc) of in-order leaves — the driver-side mirror of
-    * the distributed tiers' three groupBys.
+  /** The tier choice every rank family makes: at most `localRows`
+    * edges → `local` on the driver, else `ids` with the measured count
+    * (which sizes its partitions).
     */
-  private def tree[T: scala.reflect.ClassTag](items: Array[(Long, T)]): Array[Array[Array[T]]] =
+  private[ops] def tiered(edges: DataFrame, localRows: Long)(
+      local: DataFrame => DataFrame)(ids: (DataFrame, Long) => DataFrame): DataFrame =
+    checkpointed(edges) { (e, edgeRows) =>
+      if (edgeRows <= localRows) {
+        val r = local(e)
+        Checkpoints.release(e)
+        r
+      } else ids(e, edgeRows)
+    }
+
+  /** A fold tree: blocks (blk asc) of segments (seg asc) of leaves in
+    * fold order — the driver-side mirror of the id tier's level-1
+    * groupBy plus [[fold23]]. Leaves index the caller's arrays.
+    */
+  private[ops] type Tree = Array[Array[Array[Int]]]
+
+  /** Group (seg, leaf) `items`, already in leaf order, into the fixed
+    * tree shape.
+    */
+  private def tree(items: Seq[(Long, Int)]): Tree =
     items.groupBy(_._1).toArray.sortBy(_._1)
       .groupBy(_._1 / 64).toArray.sortBy(_._1)
-      .map { case (_, segs) => segs.map(_._2.map(_._2)) }
+      .map { case (_, segs) => segs.map(_._2.map(_._2).toArray) }
+
+  /** Fold `t` with the id tier's exact association: a 0.0-seeded sum
+    * per segment, per block, then over the blocks. An empty tree folds
+    * to +0.0, as an absent in-sum coalesces to.
+    */
+  private[ops] def fold(t: Tree, leaf: Int => Double): Double = {
+    var tot = 0.0
+    t.foreach { blk =>
+      var bsum = 0.0
+      blk.foreach { sg =>
+        var ssum = 0.0
+        sg.foreach(x => ssum += leaf(x))
+        bsum += ssum
+      }
+      tot += bsum
+    }
+    tot
+  }
+
+  /** The driver tier's graph, shared by all three rank families: the
+    * edge frame collected once, nodes indexed in UTF-8 order (so index
+    * order IS the fold order), edges as (src, dst, c) arrays. The
+    * caller builds each fold tree once and reuses it every round.
+    */
+  private[ops] final class LocalGraph(edges: DataFrame) {
+    private val es = edges.select(col("w1"), col("w2"), col("c").cast("long")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val nodes: Array[String] = (es.map(_._1) ++ es.map(_._2)).distinct.sorted(utf8Order)
+    val n: Int = nodes.length
+    private val index = nodes.zipWithIndex.toMap
+    val src: Array[Int] = es.map(e => index(e._1))
+    val dst: Array[Int] = es.map(e => index(e._2))
+    val c: Array[Long] = es.map(_._3)
+    private val segOf = nodes.map(seg)
+
+    private def flags(ends: Array[Int]): Array[Boolean] = {
+      val f = new Array[Boolean](n)
+      ends.foreach(f(_) = true)
+      f
+    }
+    val hasOut: Array[Boolean] = flags(src)
+    val hasIn: Array[Boolean] = flags(dst)
+
+    /** Per `key` node, its edges in `other` order, segmented by
+      * seg(other): (dst, src) gives the in-sum trees, (src, dst)
+      * HITS's hub trees.
+      */
+    def edgeTrees(key: Array[Int], other: Array[Int]): Array[Tree] = {
+      val out = Array.fill[Tree](n)(Array.empty)
+      src.indices.groupBy(key(_)).foreach { case (k, es) =>
+        out(k) = tree(es.sortBy(other(_)).map(e => (segOf(other(e)), e)))
+      }
+      out
+    }
+
+    /** The nodes `keep` accepts, in (seg(w), w) order. */
+    def nodeTree(keep: Int => Boolean): Tree =
+      tree(nodes.indices.filter(keep).map(v => (segOf(v), v)))
+  }
+
+  /** PageRank's and TrustRank's driver rounds from `start`: the
+    * dangling sum and each node's in-sum fold through their trees,
+    * then `update(v, insum, dsum)` gives the node's next score.
+    */
+  private def walkLocal(g: LocalGraph, rounds: Int, start: Array[Double])(
+      update: (Int, Double, Double) => Double): Array[Double] = {
+    val wout = new Array[Long](g.n)
+    g.src.indices.foreach(e => wout(g.src(e)) += g.c(e))
+    // p = c/wout: the same single exact-BIGINT division the SQL does
+    val p = Array.tabulate(g.c.length)(e => g.c(e).toDouble / wout(g.src(e)).toDouble)
+    val in = g.edgeTrees(g.dst, g.src)
+    val dang = g.nodeTree(v => !g.hasOut(v))
+    var pr = start
+    for (_ <- 1 to rounds) {
+      val cur = pr
+      val dsum = fold(dang, cur(_))
+      pr = Array.tabulate(g.n)(v => update(v, fold(in(v), e => cur(g.src(e)) * p(e)), dsum))
+    }
+    pr
+  }
 
   private def iterateLocal(edges: DataFrame, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = edges.select(col("w1"), col("w2"), col("c").cast("long"))
-      .as[(String, String, Long)].collect()
-    val wout = es.groupBy(_._1).map { case (w, g) => w -> g.map(_._3).sum }
-    // p = c/wout: the same single exact-BIGINT division the SQL does
-    val trans = es.map { case (w1, w2, c) => (w1, w2, c.toDouble / wout(w1).toDouble) }
-    val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted(utf8Order)
-    val n = nodes.length.toDouble
-    // per-target reduction tree: blocks of segments of (source, p)
-    // leaves, leaves sorted by source — the exact distributed shape
-    val incoming: Map[String, Array[Array[Array[(String, Double)]]]] =
-      trans.groupBy(_._2).map { case (w2, g) =>
-        w2 -> tree(g.sortBy(_._1)(utf8Order).map { case (w1, _, p) => (seg(w1), (w1, p)) })
-      }
-    // dangling-node tree: same shape over (w) leaves
-    val dangTree: Array[Array[Array[String]]] =
-      tree(nodes.filterNot(wout.contains).map(w => (seg(w), w)))
-    var pr = nodes.map(w => w -> (1.0 / n)).toMap
-    var it = 0
-    while (it < rounds) {
-      var dsum = 0.0
-      dangTree.foreach { blk =>
-        var bsum = 0.0
-        blk.foreach { sg =>
-          var ssum = 0.0
-          sg.foreach { w => ssum += pr(w) }
-          bsum += ssum
-        }
-        dsum += bsum
-      }
-      pr = nodes.map { w =>
-        var insum = 0.0
-        incoming.getOrElse(w, Array.empty[Array[Array[(String, Double)]]])
-          .foreach { blk =>
-            var bsum = 0.0
-            blk.foreach { sg =>
-              var ssum = 0.0
-              sg.foreach { case (w1, p) => ssum += pr(w1) * p }
-              bsum += ssum
-            }
-            insum += bsum
-          }
-        w -> (0.15 / n + 0.85 * (insum + dsum / n))
-      }.toMap
-      it += 1
+    val g = new LocalGraph(edges)
+    val n = g.n.toDouble
+    val pr = walkLocal(g, rounds, Array.fill(g.n)(1.0 / n)) { (_, insum, dsum) =>
+      0.15 / n + 0.85 * (insum + dsum / n)
     }
-    nodes.map(w => (w, pr(w))).toSeq.toDF("w", "pr")
+    g.nodes.indices.map(v => (g.nodes(v), pr(v))).toDF("w", "pr")
   }
 
-  /** `e` must already be materialized (localCheckpoint'ed) by the
-    * caller — every public entry does. `edgeRows` is its (already
-    * measured) row count; past [[idEncodeEdgeRows]] the loop runs on
-    * 8-byte rank ids instead of URL strings (bit-identical — see the
-    * gate's doc).
-    */
-  private def iterateDistributed(e0: DataFrame, rounds: Int, edgeRows: Long): DataFrame = {
-    if (edgeRows >= idEncodeEdgeRows) return iterateIdsDistributed(e0, rounds, edgeRows)
-    val spark = e0.sparkSession
-    import spark.implicits._
-    val e = e0.select(col("w1"), col("w2"), col("c").cast("long").as("c"))
-    val wout = e.groupBy($"w1").agg(sum($"c").cast("long").as("wout"))
-    // seg is a function of the SOURCE word: computed once here, reused
-    // every round by both the in-sum tree and (via nodes) the dangling
-    // tree
-    val trans = e.join(wout, "w1")
-      .select($"w1", $"w2", ($"c".cast("double") / $"wout".cast("double")).as("p"),
-        segCol($"w1").as("seg"))
-      .localCheckpoint()
-    // nodes keeps its natural (distinct-shuffle) partitioning: a
-    // 10⁸–10⁹-node graph must not funnel the node frame through one
-    // task per round, and every per-round reduction already folds
-    // through the order-fixed segment tree, so partition count never
-    // touches the bits of the result.
-    // Dangling membership (no out-edges) is STATIC across rounds, so
-    // it is resolved by ONE left join here and carried on the rank
-    // frame as `is_dang` — the per-round dangling fold then filters
-    // instead of re-running an anti-join every round (optimization
-    // round 15: 2 fewer exchanges per round, same fold inputs in the
-    // same order, bit-identical).
-    val outW = trans.select($"w1".as("w")).distinct()
-    val nodes = e.select($"w1".as("w")).union(e.select($"w2".as("w"))).distinct()
-      .withColumn("seg", segCol($"w"))
-      .join(outW.withColumn("has_out", lit(1)), Seq("w"), "left")
-      .select($"w", $"seg", $"has_out".isNull.as("is_dang"))
-      .localCheckpoint()
-    // |V| as a driver scalar (1-row collect): constant-folds into the
-    // round update as the same single divisions the oracle performs.
-    // The same single-pass aggregate measures the summed key bytes for
-    // the byte-aware broadcast gate (round 16, VERDICT #5) — one job,
-    // like the count() it replaces.
-    val probe = nodes.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(octet_length($"w")), lit(0L)).as("kb")).head()
-    val nRows = probe.getLong(0)
-    val n = nRows.toDouble
-    // the count/bytes that gate the per-round broadcasts are the ones
-    // just measured — no extra jobs (see [[BroadcastNodeRows]])
-    val bcastRank = nRows <= BroadcastNodeRows && probe.getLong(1) <= broadcastKeyBytes
-    def hinted(df: DataFrame): DataFrame = if (bcastRank) broadcast(df) else df
-    var pr = nodes.select($"w", $"seg", $"is_dang", (lit(1.0) / lit(n)).as("pr"))
-      .localCheckpoint()
-    var it = 0
-    while (it < rounds) {
-      // dangling mass: the depth-3 tree — (seg) buckets fold in w
-      // order, then [[fold23]] replays levels 2+3 (blocks in seg
-      // order, block partials in blk order) in one pass over the
-      // ≤4096 collected bucket sums. No single row ever holds more
-      // than max(|dangling|/4096, 4096) entries.
-      val dang = pr.filter($"is_dang")
-        .groupBy($"seg")
-        .agg(sort_array(collect_list(struct($"w", $"pr"))).as("xs"))
-        .select($"seg", expr(
-          "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.pr)").as("ssum"))
-        .agg(sort_array(collect_list(struct($"seg", $"ssum"))).as("xs"))
-        .select(expr(fold23("ssum")).as("dsum"))
-      // in-sums: the same tree per target node. Level 1 groups on
-      // (w2, seg) — a hub's in-neighborhood spreads across 4096
-      // shuffle keys and its level-1 lists hold ~in-degree/4096
-      // entries; [[fold23]] folds the ≤4096 per-node bucket sums.
-      val prr = hinted(pr.select($"w", $"pr"))
-      val insum = trans.join(prr, trans("w1") === prr("w"))
-        .select($"w2", $"w1", trans("seg"), ($"pr" * $"p").as("ct"))
-        .groupBy($"w2", $"seg")
-        .agg(sort_array(collect_list(struct($"w1", $"ct"))).as("xs"))
-        .select($"w2", $"seg", expr(
-          "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.ct)").as("ssum"))
-        .groupBy($"w2")
-        .agg(sort_array(collect_list(struct($"seg", $"ssum"))).as("xs"))
-        .select($"w2".as("w"), expr(fold23("ssum")).as("insum"))
-      val next = nodes.join(hinted(insum), Seq("w"), "left")
-        .crossJoin(broadcast(dang))
-        .select($"w", $"seg", $"is_dang",
-          (lit(0.15) / lit(n) + lit(0.85) *
-            (coalesce($"insum", lit(0.0)) + $"dsum" / lit(n))).as("pr"))
-        .localCheckpoint()
-      // release the superseded round's blocks — R rank-frame copies
-      // would otherwise stay cached for the session's lifetime
-      Checkpoints.release(pr)
-      pr = next
-      it += 1
-    }
-    // intermediates are no longer read once the final rank frame is
-    // materialized; only `pr` (returned) stays cached
-    val out = pr.select($"w", $"pr")
-    Seq(e0, trans, nodes).foreach(Checkpoints.release)
-    out
-  }
-
-  /** [[iterateDistributed]] over 8-byte rank ids (optimization round
-    * 16, guide §2.3/§2.4): identical rounds, identical folds, identical
-    * IEEE op sequence — the ONLY differences are physical:
+  /** The id tier of PageRank (`seedCond` None) and TrustRank (Some):
+    * the rounds run on 8-byte ids instead of URL strings, with the
+    * driver tier's folds and IEEE op sequence (optimization round 16,
+    * guide §2.3/§2.4). On a graph too big for the driver the
+    * per-round fold exchanges dominate, and every one of them would
+    * carry full URL strings (~60 B/key at 100×: 0.7–1.7 GB shuffled per loop
+    * query) where an 8-byte id carries the same information. Only the
+    * physical plan differs:
     *
-    *  - node keys are the UTF-8-rank ids from [[nodeDict]] (order-
-    *    isomorphic to the strings, so every `sort_array` fold visits
-    *    its leaves in the same order; `seg` — a function of the STRING
-    *    — is computed once in the dictionary and carried);
+    *  - node keys are the ids from [[nodeDict]]: each node's GLOBAL
+    *    RANK in UTF-8 binary order ([[GlobalRank]]), which is
+    *    order-ISOMORPHIC to the string, so every `sort_array` fold
+    *    visits its leaves in the identical order. `seg` and the seed
+    *    flag — functions of the STRING — are computed once in the
+    *    dictionary and carried, and the last round's frame carries the
+    *    strings back, so every double is bit-identical to the driver
+    *    tier's (IdEncodeSpec pins it; the cross-engine oracle hash is
+    *    the second proof);
     *  - the edge frame is mapped to (id1, id2, p, seg) ONCE at setup
     *    (two dictionary joins) and, when the rank frame broadcasts,
     *    checkpointed through [[Checkpoints.localByKey]] hash-partitioned
@@ -732,38 +535,60 @@ object PageRank {
     *    under AQE the checkpoint's LogicalRDD reads the adaptive root's
     *    `UnknownPartitioning`, and every round would shuffle the edge
     *    frame twice, on (id2, seg) and on id2;
-    *  - when the graph is too big to broadcast the rank frame, the
-    *    per-round shuffle join runs as before (on ids — ~4× fewer
-    *    bytes), and ONE forced id2-only exchange feeds both fold
-    *    levels where the unhinted plan would pay two;
-    *  - ids map back to words in one final node-sized join.
+    *  - past `bcastRows` nodes the per-round join shuffles, and ONE
+    *    forced id2-only exchange feeds both fold levels where the
+    *    unhinted plan would pay two.
+    *
+    * `e0` must already be materialized by the caller; `edgeRows` is its
+    * measured row count.
     */
-  private def iterateIdsDistributed(
-      e0: DataFrame, rounds: Int, edgeRows: Long): DataFrame = {
-    val spark = e0.sparkSession
-    import spark.implicits._
+  private def walkIds(
+      e0: DataFrame, rounds: Int, edgeRows: Long, bcastRows: Long,
+      seedCond: Option[String]): DataFrame = {
     val e = e0.select(col("w1"), col("w2"), col("c").cast("long").as("c"))
-    // dangling membership is a property of the STRING graph, static
-    // across rounds — resolved here so the dictionary checkpoint is
-    // the id path's ONLY per-node materialization (same checkpoint
-    // count as the string path)
-    val outW = e.select($"w1".as("w")).distinct()
-    val nodesW = e.select($"w1".as("w")).union(e.select($"w2".as("w"))).distinct()
-      .withColumn("seg", segCol($"w"))
+    // dangling membership and the seed flag are properties of the
+    // STRING graph, static across rounds — resolved here so the
+    // dictionary checkpoint is the loop's only per-node setup
+    val outW = e.select(col("w1").as("w")).distinct()
+    val nodes0 = e.select(col("w1").as("w")).union(e.select(col("w2").as("w"))).distinct()
+      .withColumn("seg", segCol(col("w")))
+    val nodesW = seedCond.fold(nodes0)(s => nodes0.withColumn("is_seed", expr(s"CAST($s AS BIGINT)")))
       .join(outW.withColumn("has_out", lit(1)), Seq("w"), "left")
-      .select($"w", $"seg", $"has_out".isNull.as("is_dang"))
+      .withColumn("is_dang", col("has_out").isNull).drop("has_out")
     val parts = idParts(edgeRows, e0)
-    val dict = nodeDict(nodesW, parts) // (w, seg, is_dang, id)
-    val nRows = dict.count()
-    val n = nRows.toDouble
-    val bcastRank = nRows <= BroadcastNodeRows
+    val dict = nodeDict(nodesW, parts) // (w, seg, [is_seed,] is_dang, id)
+    // one aggregate job for both scalars: the node count and the seed count
+    val probe = dict.agg(count(lit(1)),
+      sum(if (seedCond.isDefined) col("is_seed") else lit(0L))).head()
+    val n = probe.getLong(0).toDouble
+    val bcastRank = probe.getLong(0) <= bcastRows
     def hinted(df: DataFrame): DataFrame = if (bcastRank) broadcast(df) else df
-    val wout = e.groupBy($"w1").agg(sum($"c").cast("long").as("wout"))
+    val insum = coalesce(col("insum"), lit(0.0))
+    // start, update and output columns; uniform 1/n keeps its own op
+    // tree (0.15/n is not 0.15·(1/n), so PageRank is not TrustRank
+    // with t = 1/n)
+    val (nodes, start, update, out) = seedCond match {
+      case None =>
+        (dict, lit(1.0) / lit(n),
+          lit(0.15) / lit(n) + lit(0.85) * (insum + col("dsum") / lit(n)),
+          Seq(col("pr")))
+      case Some(_) =>
+        val ns = if (probe.isNullAt(1)) 0L else probe.getLong(1)
+        require(ns > 0, "TrustRank needs at least one seed node")
+        // t(v): one exact division for seeds, literal zero otherwise —
+        // a pure projection over the dictionary blocks
+        (dict.withColumn("t",
+          expr(s"CASE WHEN is_seed = 1 THEN 1.0 / CAST($ns AS DOUBLE) ELSE 0.0 END")),
+          col("t"),
+          lit(0.15) * col("t") + lit(0.85) * (insum + col("dsum") * col("t")),
+          Seq(col("pr").as("trust"), col("is_seed")))
+    }
+    val wout = e.groupBy(col("w1")).agg(sum(col("c")).cast("long").as("wout"))
     val transBase = e.join(wout, "w1")
-      .join(hinted(dict.select($"w".as("w1"), $"id".as("id1"), $"seg")), "w1")
-      .join(hinted(dict.select($"w".as("w2"), $"id".as("id2"))), "w2")
-      .select($"id1", $"id2",
-        ($"c".cast("double") / $"wout".cast("double")).as("p"), $"seg")
+      .join(hinted(dict.select(col("w").as("w1"), col("id").as("id1"), col("seg"))), "w1")
+      .join(hinted(dict.select(col("w").as("w2"), col("id").as("id2"))), "w2")
+      .select(col("id1"), col("id2"),
+        (col("c").cast("double") / col("wout").cast("double")).as("p"), col("seg"))
     // broadcast regime: pay the target-id exchange ONCE here instead
     // of once per round (the in-sum groupings then never exchange);
     // shuffle regime: the per-round join re-shuffles by id1 anyway, so
@@ -771,50 +596,52 @@ object PageRank {
     val trans =
       if (bcastRank) Checkpoints.localByKey(transBase, "id2", parts)
       else transBase.localCheckpoint()
-    val nodes = dict.select($"id", $"seg", $"is_dang")
-    var pr = nodes.select($"id", $"seg", $"is_dang", (lit(1.0) / lit(n)).as("pr"))
-      .localCheckpoint()
-    var it = 0
-    while (it < rounds) {
-      val dang = pr.filter($"is_dang")
-        .groupBy($"seg")
-        .agg(sort_array(collect_list(struct($"id", $"pr"))).as("xs"))
-        .select($"seg", expr(
+    // the frame after round k; the last one also carries the strings
+    // (and seed flags) out, so the dictionary goes with the loop
+    def carried(k: Int): Seq[Column] =
+      (Seq("id", "seg", "is_dang") ++
+        (if (k < rounds) Nil else "w" +: seedCond.map(_ => "is_seed").toSeq)).map(col)
+    var pr = nodes.select(carried(0) :+ start.as("pr"): _*).localCheckpoint()
+    for (k <- 1 to rounds) {
+      // dangling mass: the depth-3 tree — (seg) buckets fold in id
+      // order, then [[fold23]] replays levels 2+3 in one pass over the
+      // ≤4096 collected bucket sums
+      val dang = pr.filter(col("is_dang"))
+        .groupBy(col("seg"))
+        .agg(sort_array(collect_list(struct(col("id"), col("pr")))).as("xs"))
+        .select(col("seg"), expr(
           "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.pr)").as("ssum"))
-        .agg(sort_array(collect_list(struct($"seg", $"ssum"))).as("xs"))
+        .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
         .select(expr(fold23("ssum")).as("dsum"))
-      val prr = hinted(pr.select($"id", $"pr"))
+      val prr = hinted(pr.select(col("id"), col("pr")))
       val joined = trans.join(prr, trans("id1") === prr("id"))
-        .select($"id2", $"id1", trans("seg"), ($"pr" * $"p").as("ct"))
+        .select(col("id2"), col("id1"), trans("seg"), (col("pr") * col("p")).as("ct"))
       // shuffle regime: ONE id2-only exchange satisfies both fold
       // levels (id2 ⊂ {id2, seg} and = {id2}); broadcast regime: the
       // checkpointed layout already does
-      val shaped = if (bcastRank) joined else joined.repartition(parts, $"id2")
-      val insum = shaped
-        .groupBy($"id2", $"seg")
-        .agg(sort_array(collect_list(struct($"id1", $"ct"))).as("xs"))
-        .select($"id2", $"seg", expr(
+      val shaped = if (bcastRank) joined else joined.repartition(parts, col("id2"))
+      // in-sums: level 1 groups on (id2, seg) — a hub's in-neighborhood
+      // spreads across 4096 keys — and [[fold23]] folds the ≤4096
+      // per-node bucket sums
+      val sums = shaped
+        .groupBy(col("id2"), col("seg"))
+        .agg(sort_array(collect_list(struct(col("id1"), col("ct")))).as("xs"))
+        .select(col("id2"), col("seg"), expr(
           "aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.ct)").as("ssum"))
-        .groupBy($"id2")
-        .agg(sort_array(collect_list(struct($"seg", $"ssum"))).as("xs"))
-        .select($"id2".as("id"), expr(fold23("ssum")).as("insum"))
-      val next = nodes.join(hinted(insum), Seq("id"), "left")
+        .groupBy(col("id2"))
+        .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
+        .select(col("id2").as("id"), expr(fold23("ssum")).as("insum"))
+      val next = nodes.join(hinted(sums), Seq("id"), "left")
         .crossJoin(broadcast(dang))
-        .select($"id", $"seg", $"is_dang",
-          (lit(0.15) / lit(n) + lit(0.85) *
-            (coalesce($"insum", lit(0.0)) + $"dsum" / lit(n))).as("pr"))
+        .select(carried(k) :+ update.as("pr"): _*)
         .localCheckpoint()
+      // release the superseded round's blocks — R rank-frame copies
+      // would otherwise stay cached for the session's lifetime
       Checkpoints.release(pr)
       pr = next
-      it += 1
     }
-    // the returned (lazy) frame reads pr AND the dictionary (id → w);
-    // both stay checkpointed for the ContextCleaner (the one-shot
-    // convention) — everything else releases now
-    val out = pr.select($"id", $"pr")
-      .join(hinted(dict.select($"id", $"w")), "id")
-      .select($"w", $"pr")
-    Seq(e0, trans).foreach(Checkpoints.release)
-    out
+    // only the last rank frame stays cached: the (lazy) result reads it alone
+    Seq(e0, trans, dict).foreach(Checkpoints.release)
+    pr.select(col("w") +: out: _*)
   }
 }

@@ -2033,18 +2033,19 @@ object Mining {
     val s = base.sparkSession
     import s.implicits._
     // the gram stream feeds two consumers (the ndocs/owner agg and the
-    // join back); materialize it ONCE, already gh-partitioned, so the
-    // explode never re-executes (the q88/q93 localCheckpoint
-    // discipline — here the nd side broadcasts under AQE, which breaks
-    // the q86 ReusedExchange shape and would otherwise re-run the
-    // Generate for the agg branch)
+    // join back); materialize it ONCE so the explode never re-executes
+    // (the q88/q93 localCheckpoint discipline — here the nd side
+    // broadcasts under AQE, which breaks the q86 ReusedExchange shape
+    // and would otherwise re-run the Generate for the agg branch), and
+    // keep its gh layout declared through the checkpoint so neither
+    // consumer re-shuffles it on gh (the q94 treatment)
     graft.functions.Md5GramHashes.register(s)
-    val grams = base.filter(length($"t200") >= 20)
-      .select($"doc_id",
-        posexplode(expr("md5_gram_hashes(t200, 20, 15)")).as(Seq("p0", "gh")))
-      .select($"doc_id", ($"p0" + 1).cast("long").as("p"), $"gh")
-      .repartition(s.sparkContext.defaultParallelism, $"gh")
-      .localCheckpoint()
+    val grams = graft.ops.Checkpoints.localByKey(
+      base.filter(length($"t200") >= 20)
+        .select($"doc_id",
+          posexplode(expr("md5_gram_hashes(t200, 20, 15)")).as(Seq("p0", "gh")))
+        .select($"doc_id", ($"p0" + 1).cast("long").as("p"), $"gh"),
+      "gh", s.sparkContext.defaultParallelism)
     val nd = grams.groupBy($"gh")
       .agg(countDistinct($"doc_id").as("ndocs"), min($"doc_id").as("owner"))
     val rm = grams.join(nd, "gh")

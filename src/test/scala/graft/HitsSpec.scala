@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 /** ops.Hits: hand-solvable fixtures land exactly (the L1-normalized
   * fixed point of a 2-hub/1-authority graph is exact in IEEE — x/x
   * and small dyadic ratios), weights steer hub mass, and the corpus
-  * run conserves mass and separates the planted roles. Cross-engine
-  * bit-equality is q227's oracle hash (the independent evaluation of
-  * the same fold tree).
+  * run conserves mass and separates the planted roles. These graphs
+  * take the driver tier; IdEncodeSpec pins the id tier to it bit for
+  * bit, and q227's oracle hash is the cross-engine evaluation of the
+  * same fold tree.
   */
 class HitsSpec extends SparkSuite {
 

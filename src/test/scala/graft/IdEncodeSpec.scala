@@ -4,24 +4,17 @@ import graft.ops.{Hits, PageRank}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The round-16 dictionary encoding: past `idEncodeEdgeRows` the rank
-  * loops (PageRank / TrustRank / HITS) shuffle 8-byte UTF-8-rank ids
-  * instead of URL strings. The gate may only ever change PLANS — every
-  * double must be bit-identical between the id path and the string
-  * path, which holds iff the rank ids are order-ISOMORPHIC to the
-  * strings (every `sort_array` fold then visits its leaves in the same
-  * order). This suite pins both halves: the isomorphism itself on
-  * adversarial strings, and end-to-end bit-equality of the forced id
-  * path against the unchanged string/driver paths.
+/** The rank families' two tiers: graphs past `PageRank.LocalEdgeRows`
+  * edges run their loops (PageRank / TrustRank / HITS) on 8-byte UTF-8-
+  * rank ids, smaller ones on the driver. The tier may only ever change
+  * PLANS — every double must be bit-identical between the id tier and
+  * the driver tier, which holds iff the rank ids are order-ISOMORPHIC
+  * to the strings (every `sort_array` fold then visits its leaves in
+  * the same order the driver sorts them). This suite pins both halves:
+  * the isomorphism itself on adversarial strings, and end-to-end
+  * bit-equality of each family's id tier against its driver tier.
   */
 class IdEncodeSpec extends SparkSuite {
-
-  /** Run `body` with the id-encode gate forced to 0 (every distributed
-    * graph takes the id path), restoring the default afterwards. */
-  private def forcedIds[T](body: => T): T = {
-    sys.props("graft.idEncodeEdgeRows") = "0"
-    try body finally sys.props.remove("graft.idEncodeEdgeRows")
-  }
 
   private def collectRanks(df: DataFrame): Map[String, Long] =
     df.collect().map(r => r.getString(0) -> java.lang.Double
@@ -80,61 +73,53 @@ class IdEncodeSpec extends SparkSuite {
   }
 
   test("PageRank id path is bit-identical to the driver tier") {
-    val viaLocal = collectRanks(
-      PageRank.run(fixtureEdges, rounds = 5, strategy = "local"))
-    val viaIds = forcedIds(collectRanks(
-      PageRank.run(fixtureEdges, rounds = 5, strategy = "distributed")))
+    val viaLocal = collectRanks(PageRank.runLocal(fixtureEdges, rounds = 5))
+    val viaIds = collectRanks(PageRank.runIds(fixtureEdges, rounds = 5))
     assert(viaIds == viaLocal)
   }
 
-  test("PageRank id path is bit-identical to the string path on a hub graph") {
+  /** 9000 sources into one hub: exercises the segment tree with
+    * non-trivial level-1 buckets, plus a dangling hub. */
+  private def hubEdges: DataFrame = {
     import spark.implicits._
-    // 9000 sources into one hub: exercises the segment tree with
-    // non-trivial level-1 buckets, plus a dangling hub
-    val edges = spark.range(9000)
+    spark.range(9000)
       .select(concat(lit("https://h"), ($"id" % 37).cast("string"),
         lit(".example/p"), $"id").as("w1"), lit("https://hub.example/").as("w2"),
         ($"id" % 3 + 1).as("c"))
-    val viaStrings = collectRanks(
-      PageRank.run(edges, rounds = 3, strategy = "distributed"))
-    val viaIds = forcedIds(collectRanks(
-      PageRank.run(edges, rounds = 3, strategy = "distributed")))
-    assert(viaIds == viaStrings)
   }
 
-  test("TrustRank id path is bit-identical to the string path") {
+  test("PageRank id path is bit-identical to the driver tier on a hub graph") {
+    val viaLocal = collectRanks(PageRank.runLocal(hubEdges, rounds = 3))
+    val viaIds = collectRanks(PageRank.runIds(hubEdges, rounds = 3))
+    assert(viaIds == viaLocal)
+  }
+
+  test("TrustRank id path is bit-identical to the driver tier") {
     val seed = "w LIKE 'a%'"
-    val viaStrings = PageRank.runBiased(fixtureEdges, rounds = 5, seedCond = seed)
-      .collect().map(r => (r.getString(0),
-        java.lang.Double.doubleToLongBits(r.getDouble(1)), r.getLong(2))).toSet
-    val viaIds = forcedIds(
-      PageRank.runBiased(fixtureEdges, rounds = 5, seedCond = seed)
-        .collect().map(r => (r.getString(0),
-          java.lang.Double.doubleToLongBits(r.getDouble(1)), r.getLong(2))).toSet)
-    assert(viaIds == viaStrings)
+    def trust(df: DataFrame) = df.collect().map(r => (r.getString(0),
+      java.lang.Double.doubleToLongBits(r.getDouble(1)), r.getLong(2))).toSet
+    val viaLocal = trust(PageRank.runBiasedLocal(fixtureEdges, rounds = 5, seedCond = seed))
+    val viaIds = trust(PageRank.runBiasedIds(fixtureEdges, rounds = 5, seedCond = seed))
+    assert(viaIds == viaLocal)
   }
 
-  test("HITS id path is bit-identical to the string path") {
+  test("HITS id path is bit-identical to the driver tier") {
     def scores(df: DataFrame) = df.collect().map(r => (r.getString(0),
       java.lang.Double.doubleToLongBits(r.getDouble(1)),
       java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    val viaStrings = scores(Hits.run(fixtureEdges, rounds = 3))
-    val viaIds = forcedIds(scores(Hits.run(fixtureEdges, rounds = 3)))
-    assert(viaIds == viaStrings)
+    val viaLocal = scores(Hits.runLocal(fixtureEdges, rounds = 3))
+    val viaIds = scores(Hits.runIds(fixtureEdges, rounds = 3))
+    assert(viaIds == viaLocal)
   }
 
   test("broadcast-regime id rounds do not re-shuffle the edge frame") {
-    import spark.implicits._
     // the hub graph: ~3.6k distinct (target, seg) level-1 keys
-    val edges = spark.range(9000)
-      .select(concat(lit("https://h"), ($"id" % 37).cast("string"),
-        lit(".example/p"), $"id").as("w1"), lit("https://hub.example/").as("w2"),
-        ($"id" % 3 + 1).as("c"))
+    val edges = hubEdges
     val targetSegs = edges
-      .select($"w2", expr("CAST(conv(substr(md5(w1), 1, 15), 16, 10) AS BIGINT) % 4096"))
+      .select(col("w2"), expr("CAST(conv(substr(md5(w1), 1, 15), 16, 10) AS BIGINT) % 4096"))
       .distinct().count()
-    def written(rounds: Int): Long = forcedIds(ShuffleRecords.written(spark)(
-      PageRank.run(edges, rounds = rounds, strategy = "distributed").collect())._2.records)
+    def written(rounds: Int): Long = ShuffleRecords.written(spark)(
+      PageRank.runIds(edges, rounds = rounds).collect())._2.records
     val extra = written(3) - written(1)
     // two more rounds over an edge frame laid out by target id add only
     // node-sized exchanges; re-shuffling the edges on (target, seg)

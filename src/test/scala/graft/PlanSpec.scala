@@ -119,6 +119,38 @@ class PlanSpec extends SparkSuite {
     assert(onBh.isEmpty, s"q94 consumers re-shuffle the gram frame on bh:\n$fin")
   }
 
+  test("q108 gram stream keeps its gh layout — no consumer re-shuffles on gh") {
+    // the gh consumers (the ndocs/owner agg and the join back) run
+    // eagerly, inside the interval frame's checkpoint, so their plans
+    // are read off every execution the query's build makes
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q108_exactsubstr_removal")(spark, sf).collect()
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(!plans.isEmpty)
+    // the one gh exchange that builds the layout is a REPARTITION_BY_NUM;
+    // a consumer's re-shuffle would be an ENSURE_REQUIREMENTS one
+    val onGh = plans.asScala.toSeq.flatMap(executedNodes).collect {
+      case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if x.shuffleOrigin == org.apache.spark.sql.execution.exchange.ENSURE_REQUIREMENTS =>
+        x.outputPartitioning
+    }.collect {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+          if h.references.exists(_.name == "gh") => h
+    }
+    assert(onGh.isEmpty, s"q108 consumers re-shuffle the gram frame on gh: $onGh")
+  }
+
   test("q95 scoring side joins broadcast (terms-row idf + 2-scalar stats)") {
     val df = SparkEntry.queries("q95_bm25")(spark, sf)
     df.collect()

@@ -2,22 +2,18 @@ package graft
 
 import graft.ops.{Hits, PageRank}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** The byte-aware broadcast budget (round 16, VERDICT #5): the rank
-  * loops' string paths gate their per-round rank-frame broadcasts on
-  * measured key BYTES as well as rows. Like every broadcast gate in
-  * the repo, it may only ever change PLANS — forcing the budget to 0
-  * (shuffle regime everywhere) must produce bit-identical doubles to
-  * the default (broadcast regime at fixture scale), because fold order
-  * is fixed by sort_array, not arrival order.
+/** The id tier's broadcast gate (`PageRank.BroadcastNodeRows`): up to
+  * that many nodes each round broadcasts the rank frame and the edge
+  * frame keeps its setup layout; past it each round shuffles — the
+  * `repartition(parts, id2)` of the PageRank/TrustRank loop, HITS's
+  * unlaid edge copy and its forced `kid` exchange. Like every
+  * broadcast gate in the repo, it may only ever change PLANS — forcing
+  * the gate to 0 (shuffle regime everywhere) must produce bit-identical
+  * doubles to the default (broadcast regime at fixture scale), because
+  * fold order is fixed by sort_array, not arrival order.
   */
 class RankLoopShuffleRegimeSpec extends SparkSuite {
-
-  private def forcedShuffle[T](body: => T): T = {
-    sys.props("graft.broadcastKeyBytes") = "0"
-    try body finally sys.props.remove("graft.broadcastKeyBytes")
-  }
 
   private def fixtureEdges: DataFrame = {
     import spark.implicits._
@@ -30,33 +26,33 @@ class RankLoopShuffleRegimeSpec extends SparkSuite {
     edges.toDF("w1", "w2", "c")
   }
 
-  private def ranks(df: DataFrame): Map[String, Long] =
-    df.collect().map(r => r.getString(0) -> java.lang.Double
-      .doubleToLongBits(r.getDouble(1))).toMap
+  private def bits(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case v => v
+    }).toSet
 
-  test("PageRank shuffle regime (byte budget 0) is bit-identical to broadcast") {
-    val bcast = ranks(PageRank.run(fixtureEdges, rounds = 4, strategy = "distributed"))
-    val shuf = forcedShuffle(
-      ranks(PageRank.run(fixtureEdges, rounds = 4, strategy = "distributed")))
+  /** Runs one id loop in the default regime and with the row gate
+    * forced to 0: the results must match bit-for-bit, and the forced
+    * run must really have shuffled more (else the check is vacuous).
+    */
+  private def sameInBothRegimes(loop: Long => DataFrame): Unit = {
+    val (bcast, wb) = ShuffleRecords.written(spark)(bits(loop(PageRank.BroadcastNodeRows)))
+    val (shuf, ws) = ShuffleRecords.written(spark)(bits(loop(0L)))
+    assert(ws.records > wb.records,
+      s"the forced shuffle regime wrote ${ws.records} records, broadcast ${wb.records}")
     assert(shuf == bcast)
+  }
+
+  test("PageRank shuffle regime is bit-identical to broadcast") {
+    sameInBothRegimes(PageRank.runIds(fixtureEdges, rounds = 4, _))
   }
 
   test("TrustRank shuffle regime is bit-identical to broadcast") {
-    def run() = PageRank.runBiased(fixtureEdges, rounds = 4, seedCond = "w LIKE 'a%'")
-      .collect().map(r => (r.getString(0),
-        java.lang.Double.doubleToLongBits(r.getDouble(1)), r.getLong(2))).toSet
-    val bcast = run()
-    val shuf = forcedShuffle(run())
-    assert(shuf == bcast)
+    sameInBothRegimes(PageRank.runBiasedIds(fixtureEdges, rounds = 4, seedCond = "w LIKE 'a%'", _))
   }
 
   test("HITS shuffle regime is bit-identical to broadcast") {
-    def scores() = Hits.run(fixtureEdges, rounds = 3)
-      .collect().map(r => (r.getString(0),
-        java.lang.Double.doubleToLongBits(r.getDouble(1)),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    val bcast = scores()
-    val shuf = forcedShuffle(scores())
-    assert(shuf == bcast)
+    sameInBothRegimes(Hits.runIds(fixtureEdges, rounds = 3, _))
   }
 }

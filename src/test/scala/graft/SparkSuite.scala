@@ -13,7 +13,11 @@ trait SparkSuite extends AnyFunSuite {
     * are vacuous (EnsureRequirements adds exchanges and AQE finalizes
     * stages only at execution; the LshSpec lesson).
     */
-  def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+  def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
+    executedNodes(df.queryExecution.executedPlan)
+
+  /** [[executedNodes]] of an executed physical plan. */
+  def executedNodes(plan: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -24,7 +28,7 @@ trait SparkSuite extends AnyFunSuite {
       case other => other.children
     }
     def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
-    all(df.queryExecution.executedPlan)
+    all(plan)
   }
 
   /** Asserts `df`'s executed plan contains no WindowExec — the
