@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at the sf dir given by
@@ -12,9 +13,11 @@ import org.apache.spark.sql.SparkSession
   * reported 3–4.6× phantom regressions on untouched queries; round 6
   * repeated it — q86 committed at 7.28 s vs 1.56 s in the judge's
   * clean isolated re-run):
-  *  - between queries, leftover persisted blocks are unpersisted and
-  *    the cache manager cleared — one query's forgotten storage must
-  *    not bill the rest of the suite's memory pressure;
+  *  - each query action runs in one [[graft.ops.Checkpoints.scope]],
+  *    which frees every checkpoint the query took; `ckpt_leaked`
+  *    records the persisted-RDD count left after the scope closes
+  *    (0 when nothing outlives its query), and the cache manager is
+  *    cleared between queries;
   *  - System.gc() + a short settle before every timed run, so one
   *    query's garbage never bills the next query's wall clock;
   *  - three passes, per-query MIN published as `queries_warm` — the
@@ -66,7 +69,7 @@ object Bench {
     // Warm the JVM/codegen/file-index paths so the first timed query
     // doesn't absorb session startup (~4s of JIT + scan planning).
     Sql.table(spark, sfDir, "lineitem").count()
-    SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
+    Checkpoints.scope(SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count())
 
     val bench = SparkEntry.allQueries.filter(q => only.forall(_.contains(q.name)))
     // a typo'd filter name must fail loudly, not print a valid JSON
@@ -118,18 +121,11 @@ object Bench {
     def drainBus(): Unit =
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
     final case class Timing(sec: Double, gcMs: Long, jitMs: Long, codegenN: Long,
-      shufReadB: Long, shufWriteB: Long)
+      shufReadB: Long, shufWriteB: Long, leaked: Long)
     def settle(): Unit = {
-      // evict anything a prior query left behind: persisted RDD blocks
-      // (localCheckpoints whose release raced the query's own end) and
-      // CacheManager entries — accumulated storage from 90+ earlier
-      // queries is exactly the cross-query JVM state that inflates
-      // in-suite numbers over isolated ones
-      // blocking=true: async eviction would still be running when the
-      // next query's clock starts — the cross-query billing settle()
-      // exists to prevent
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // CacheManager entries from earlier queries are cross-query JVM
+      // state that inflates in-suite numbers over isolated ones; their
+      // checkpoints were already freed by each query's scope
       spark.sharedState.cacheManager.clearCache()
       System.gc()
       Thread.sleep(30)
@@ -140,16 +136,17 @@ object Bench {
       val (gc0, jit0, cg0) = (gcMs(), jitMs(), codegenN())
       val (sr0, sw0) = (shufRead.get(), shufWrite.get())
       val t0 = System.nanoTime()
-      try { q.run(spark, sfDir).count() } catch {
+      try { Checkpoints.scope(q.run(spark, sfDir).count()) } catch {
         case e: Throwable =>
           if (!failed.contains(q.name)) failed += q.name
           System.err.println(s"[bench] ${q.name} FAILED: $e")
       }
       val sec = (System.nanoTime() - t0) / 1e9
+      val leaked = spark.sparkContext.getPersistentRDDs.size.toLong
       drainBus()
       q.name -> Timing(sec,
         gcMs() - gc0, jitMs() - jit0, codegenN() - cg0,
-        shufRead.get() - sr0, shufWrite.get() - sw0)
+        shufRead.get() - sr0, shufWrite.get() - sw0, leaked)
     }
     // Three passes. "value" is the SINGLE-PASS (cold) total — the
     // driver's cross-round trend metric. NOTE a round-7 environment
@@ -190,6 +187,11 @@ object Bench {
     val okCold = cold.filterNot(t => failedSet(t._1))
     val totalWarm = okBest.map(_._2.sec).sum
     val totalCold = okCold.map(_._2.sec).sum
+    // failed queries report their leak too: a throwing query's scope
+    // must free its checkpoints as well
+    val leaked = passesByQuery.map { case (n, ps) => (n, ps.map(_.leaked).max) }
+    val leakedMax = (0L +: leaked.map(_._2)).max
+    val leakedJson = leaked.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$totalCold,"unit":"sec"""" +
         s""","n_queries":${bench.size},"n_ok":${okCold.size}""" +
@@ -206,6 +208,8 @@ object Bench {
         s""","shuffle_write_b":${objL(cold.map(t => (t._1, t._2.shufWriteB)))}""" +
         s""","shuffle_read_b_warm":${objL(best.map(t => (t._1, t._2.shufReadB)))}""" +
         s""","shuffle_write_b_warm":${objL(best.map(t => (t._1, t._2.shufWriteB)))}""" +
+        s""","ckpt_leaked":$leakedJson""" +
+        s""","ckpt_leaked_max":$leakedMax""" +
         s""","failed":$failedJson,"sf":"$sfDir"}"""
     // full artifact on disk — the complete per-query maps; best-effort
     // (an unwritable cwd must not fail a bench that already succeeded)
@@ -228,6 +232,7 @@ object Bench {
         s""","n_queries":${bench.size},"n_ok":${okCold.size}""" +
         s""","queries":${obj(slowest.map(t => (t._1, t._2.sec)))}""" +
         s""","queries_note":"slowest ${slowest.size} of ${okCold.size} ok queries by warm sec; full per-query maps in $fullPath"""" +
+        s""","ckpt_leaked_max":$leakedMax""" +
         s""","failed":$failedJson,"sf":"$sfDir"}"""
     if (compact.length <= 1900) println(compact)
     else println(compact.replaceAll(""","queries":\{[^}]*\}""", ""))

@@ -56,18 +56,21 @@ object Explain {
     sb.append("ExistingRDD` where a multi-consumer stream is shared\n")
     sb.append("(q86/q88/q93/q94).\n")
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      // execute THIS QueryExecution (collect, not count — count wraps
-      // the plan in a fresh aggregate and leaves this one un-run) so
-      // the explain below reflects the adaptive final plan
-      val executed =
-        try { df.collect(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[explain] $name failed to execute: $e")
-          false
-        }
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      // one scope per query: its checkpoints are freed before the next
+      val (executed, plan) = graft.ops.Checkpoints.scope {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        // execute THIS QueryExecution (collect, not count — count wraps
+        // the plan in a fresh aggregate and leaves this one un-run) so
+        // the explain below reflects the adaptive final plan
+        val executed =
+          try { df.collect(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[explain] $name failed to execute: $e")
+            false
+          }
+        (executed, df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      }
       // a failed execution falls back to the INITIAL plan — mark it,
       // or a reader audits pre-AQE artifacts under a header promising
       // final plans

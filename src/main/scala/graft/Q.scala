@@ -102,29 +102,17 @@ object Sql {
     *  - `knownCount` supplied (a frozen-layout sidecar count, the
     *    Decontam form — zero jobs): gate on it directly; the frame is
     *    returned as-is (re-scannable at-rest data needs no pinning).
-    *  - no count: localCheckpoint + count — the count reads the
-    *    materialized blocks, the downstream join reuses them, nothing
-    *    recomputes. One-shot queries let the ContextCleaner reap the
-    *    blocks; PER-TRIGGER callers must use [[broadcastIfSmallManaged]]
-    *    and release after materializing (the ofManaged convention).
+    *  - no count: [[graft.ops.Checkpoints.local]] + count — the count
+    *    reads the materialized blocks, the downstream join reuses
+    *    them, nothing recomputes; the enclosing scope frees them.
     */
   def broadcastIfSmall(
       df: DataFrame, budgetRows: Long, knownCount: Option[Long] = None): DataFrame =
-    broadcastIfSmallManaged(df, budgetRows, knownCount)._1
-
-  /** [[broadcastIfSmall]] plus the cleanup hook for per-trigger
-    * callers; a no-op hook when `knownCount` skipped the checkpoint.
-    */
-  def broadcastIfSmallManaged(
-      df: DataFrame, budgetRows: Long, knownCount: Option[Long] = None)
-      : (DataFrame, () => Unit) =
     knownCount match {
-      case Some(n) =>
-        (if (n <= budgetRows) broadcast(df) else df, () => ())
+      case Some(n) => if (n <= budgetRows) broadcast(df) else df
       case None =>
-        val m = df.localCheckpoint()
-        (if (m.count() <= budgetRows) broadcast(m) else m,
-          () => graft.ops.Checkpoints.release(m))
+        val m = graft.ops.Checkpoints.local(df)
+        if (m.count() <= budgetRows) broadcast(m) else m
     }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -254,7 +254,6 @@ object Soak {
     spark.read.parquet(s"$sfDir/documents.parquet").count()
 
     val rows = names.map { n =>
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       spark.sharedState.cacheManager.clearCache()
       System.gc()
       drain()
@@ -271,7 +270,10 @@ object Soak {
       // soak absolutes are therefore NOT comparable with ≤r14 soak
       // artifacts (which were count-pruned).
       val outcome =
-        try { Right(SparkEntry.queries(n)(spark, sfDir).queryExecution.toRdd.count()) }
+        try {
+          Right(graft.ops.Checkpoints.scope(
+            SparkEntry.queries(n)(spark, sfDir).queryExecution.toRdd.count()))
+        }
         catch { case e: Throwable => Left(e.toString.take(200)) }
       val sec = (System.nanoTime() - t0) / 1e9
       drain()

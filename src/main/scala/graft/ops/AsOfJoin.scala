@@ -115,7 +115,7 @@ object AsOfJoin {
     // would execute twice — once for the count, once for the join
     // (the PageRank/BpeTrain/ConnectedComponents auto-probe rationale,
     // previously missing from exactly this operator)
-    val rightM = right.localCheckpoint()
+    val rightM = Checkpoints.local(right)
     val maxHist = rightM.groupBy(rightKey).count()
       .agg(max("count")).collect()(0)
     val largest = if (maxHist.isNullAt(0)) 0L else maxHist.getLong(0)

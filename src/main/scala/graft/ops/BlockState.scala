@@ -57,8 +57,8 @@ object BlockState {
     * idempotent OVERWRITE of `blocks/b<id>` AND excludes children at
     * or above the id from the probed state (replay hygiene). Output
     * is q110's exact schema (doc_id, n_blocks, n_rm, clean_text),
-    * batch rows only — `localCheckpoint`ed; a per-trigger caller
-    * should [[Checkpoints.release]] it after materializing.
+    * batch rows only, checkpointed into the caller's
+    * [[Checkpoints.scope]].
     */
   def probe(
       batch: DataFrame,
@@ -73,7 +73,7 @@ object BlockState {
       s"probe at blockTokens=$blockTokens against state frozen at $frozen — " +
         "a different alignment hashes different passages; rebuild with " +
         "BlockState.save or probe at the frozen geometry")
-    val blocks = Curation.blockFrame(batch, blockTokens).localCheckpoint()
+    val blocks = Checkpoints.local(Curation.blockFrame(batch, blockTokens))
     val batchNd = blocks.groupBy(col("bh"))
       .agg(countDistinct(col("doc_id")).as("bdocs"))
     val stateNd = relevantState(spark, dir,
@@ -82,8 +82,7 @@ object BlockState {
     val totals = batchNd.join(stateNd, Seq("bh"), "left")
       .select(col("bh"),
         (col("bdocs") + coalesce(col("cdocs"), lit(0L))).as("ndocs"))
-    val out = Curation.reconstructClean(blocks.join(totals, "bh"), minDocs)
-      .localCheckpoint()
+    val out = Checkpoints.local(Curation.reconstructClean(blocks.join(totals, "bh"), minDocs))
     if (commit) {
       val nd = batchNd.select(col("bh"), col("bdocs").as("ndocs"))
       batchId match {

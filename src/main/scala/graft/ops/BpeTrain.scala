@@ -194,13 +194,13 @@ object BpeTrain {
     strategy match {
       case "local" => trainLocal(wordFreq, rounds, batchK, symbolize)
       case "distributed" =>
-        trainDistributed(wordFreq.localCheckpoint(), rounds, batchK, symbolize)
+        trainDistributed(Checkpoints.local(wordFreq), rounds, batchK, symbolize)
       case "auto" =>
         // materialize the dictionary ONCE: the threshold probe is an
         // action, and without this the upstream corpus-sized word-count
         // aggregation would execute twice (the ConnectedComponents.auto
         // rationale)
-        val wf = wordFreq.localCheckpoint()
+        val wf = Checkpoints.local(wordFreq)
         if (wf.count() <= localThreshold) {
           val r = trainLocal(wf, rounds, batchK, symbolize)
           Checkpoints.release(wf)
@@ -264,9 +264,8 @@ object BpeTrain {
       symbolize: String => Array[String] = symbols): DataFrame = {
     val spark = wordFreq.sparkSession
     import spark.implicits._
-    var vocab: Dataset[(Array[String], Long)] = wordFreq
-      .map { case (w, f) => (symbolize(w), f) }
-      .localCheckpoint()
+    var vocab: Dataset[(Array[String], Long)] = Checkpoints.local(wordFreq
+      .map { case (w, f) => (symbolize(w), f) })
     Checkpoints.release(wordFreq)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var dry = false
@@ -293,11 +292,10 @@ object BpeTrain {
         // round with only GC-dependent cleanup, the exact lifecycle
         // the checkpoint discipline above exists to avoid
         val rules = batch.map { case (a, b, _) => (a, b) }
-        val next = vocab
+        val next = Checkpoints.local(vocab
           .map { case (syms, f) =>
             (rules.foldLeft(syms) { case (s, (a, b)) => applyMerge(s, a, b) }, f)
-          }
-          .localCheckpoint()
+          })
         // release the superseded round's vocab blocks
         Checkpoints.release(vocab)
         vocab = next

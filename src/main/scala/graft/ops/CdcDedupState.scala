@@ -202,8 +202,8 @@ object CdcDedupState {
     val guard = s"$dir/cdc"
     if (updateId <= Maintainer.committedBatch(spark, guard))
       return -1L
-    val m = manifest.localCheckpoint()
-    try {
+    Checkpoints.scope {
+      val m = Checkpoints.local(manifest)
       val n = m.count()
       val oldDocs = m.filter(col("old_text").isNotNull)
         .select(col("doc_id"), col("old_text").as("text"))
@@ -214,14 +214,14 @@ object CdcDedupState {
       // the two except directions are separate plans that would each
       // re-run BOTH sides' shingle + minhash pipelines otherwise.
       if (families(Family.Bands)) {
-        val oldBands = bandsFor(oldDocs).localCheckpoint()
-        val newBands = bandsFor(newDocs).localCheckpoint()
-        try {
+        Checkpoints.scope {
+          val oldBands = Checkpoints.local(bandsFor(oldDocs))
+          val newBands = Checkpoints.local(bandsFor(newDocs))
           newBands.except(oldBands).withColumn("uid", lit(updateId))
             .write.mode("overwrite").parquet(s"$dir/bands/b$updateId")
           oldBands.except(newBands).withColumn("uid", lit(updateId))
             .write.mode("overwrite").parquet(s"$dir/band_dead/b$updateId")
-        } finally Seq(oldBands, newBands).foreach(Checkpoints.release)
+        }
       }
 
       // ---- winnow fps: signed deltas under the FROZEN ladder rung
@@ -257,7 +257,7 @@ object CdcDedupState {
       // marker LAST — the commit point
       Maintainer.writeCommitted(spark, guard, updateId)
       n
-    } finally Checkpoints.release(m)
+    }
   }
 
   /** Build-once-per-content CDC state — [[StateCache.ensure]] (the
@@ -325,8 +325,8 @@ object CdcDedupState {
     val bound = Maintainer.foldBound(spark, s"$dir/cdc")
     val deadRoot = s"$dir/band_dead"
     val applied = Layouts.liveChildrenBefore(spark, deadRoot, bound).map(_.getName)
-    val dead = deadRanks(spark, dir, bound).localCheckpoint()
-    try {
+    Checkpoints.scope {
+      val dead = Checkpoints.local(deadRanks(spark, dir, bound))
       Layouts.foldChildren(spark, s"$dir/bands",
         transform = liveBands(_, dead),
         beforeBatch = bound, force = true)
@@ -342,7 +342,7 @@ object CdcDedupState {
           fs.delete(new org.apache.hadoop.fs.Path(s"$deadRoot/$name"), true)
         }
       }
-    } finally Checkpoints.release(dead)
+    }
     Layouts.foldChildren(spark, s"$dir/fps",
       _.groupBy(col("fp")).agg(sum(col("ndocs")).as("ndocs"))
         .filter(col("ndocs") =!= 0L),

@@ -45,7 +45,7 @@ object ConnectedComponents {
     // and without this the whole upstream pair pipeline (e.g. q21's
     // shingle+minhash run) would execute twice — once for the count,
     // once for the iteration
-    val e = symCanonical(pairs).localCheckpoint()
+    val e = Checkpoints.local(symCanonical(pairs))
     // both branches eagerly materialize their own working copy as
     // their first step, so the probe frame can be released afterwards
     val result =
@@ -149,11 +149,11 @@ object ConnectedComponents {
     val cheapLabels = isRescanCheap(labels)
     val l =
       if (cheapLabels) labels.toDF("v", "cluster_id")
-      else labels.toDF("v", "cluster_id").localCheckpoint()
-    val e = symCanonical(batch).localCheckpoint()
+      else Checkpoints.local(labels.toDF("v", "cluster_id"))
+    val e = Checkpoints.local(symCanonical(batch))
     // materialize the batch-sized rep map ONCE (it feeds both translate
     // joins plus the rep probe below); labels streams through its scan
-    val repMap = batchRepMap(l, e).localCheckpoint()
+    val repMap = Checkpoints.local(batchRepMap(l, e))
     val translated = translateWith(repMap, e)
     // CC over the contracted batch graph: vertices are old
     // representatives and never-labeled ids (the id spaces cannot
@@ -164,7 +164,7 @@ object ConnectedComponents {
     // outer copy first, then release every checkpoint in the inner
     // plan (Checkpoints.release walks all LogicalRDD leaves)
     val ccRaw = auto(translated, localThreshold)
-    val cc = ccRaw.localCheckpoint()
+    val cc = Checkpoints.local(ccRaw)
     Checkpoints.release(ccRaw)
     // the only representatives that can appear in cc are those of the
     // batch's labeled endpoints — i.e. repMap's cluster_ids — so the
@@ -185,7 +185,7 @@ object ConnectedComponents {
     val fresh = cc
       .join(broadcast(repSet.select(col("rep").as("v"))), Seq("v"), "left_anti")
       .select(col("v"), col("cluster_id"))
-    val result = updatedOld.union(fresh).localCheckpoint()
+    val result = Checkpoints.local(updatedOld.union(fresh))
     (if (cheapLabels) Seq(e, cc, repMap) else Seq(l, e, cc, repMap))
       .foreach(Checkpoints.release)
     result
@@ -259,27 +259,27 @@ object ConnectedComponents {
   private def hashMinEdges(edges0: DataFrame): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
-    val edges = edges0.localCheckpoint()
+    val edges = Checkpoints.local(edges0)
     // init = hash-min round 1 fused into the vertex dedup: lbl(v) =
     // min(v, min over neighbors) — one groupBy instead of a distinct
     // plus a full first iteration
-    var labels = edges.groupBy($"a")
+    var labels = Checkpoints.local(edges.groupBy($"a")
       .agg(least($"a", min($"b")).as("lbl"))
-      .select($"a".as("v"), $"lbl").localCheckpoint()
+      .select($"a".as("v"), $"lbl"))
     var sum0 = labels.agg(coalesce(sum($"lbl"), lit(0L))).first().getLong(0)
     var done = false
     while (!done) {
       val prop = edges.join(labels, $"b" === $"v")
         .select($"a".as("v"), $"lbl")
-      val next = labels.union(prop)
-        .groupBy($"v").agg(min($"lbl").as("lbl")).localCheckpoint()
+      val next = Checkpoints.local(labels.union(prop)
+        .groupBy($"v").agg(min($"lbl").as("lbl")))
       val sum1 = next.agg(coalesce(sum($"lbl"), lit(0L))).first().getLong(0)
       Checkpoints.release(labels)
       labels = next
       done = sum1 == sum0
       sum0 = sum1
     }
-    val result = labels.select($"v", $"lbl".as("cluster_id")).localCheckpoint()
+    val result = Checkpoints.local(labels.select($"v", $"lbl".as("cluster_id")))
     Checkpoints.release(labels)
     Checkpoints.release(edges)
     result
@@ -329,15 +329,14 @@ object ConnectedComponents {
   def largeStarSmallStar(pairs: DataFrame, maxRounds: Int = 64): (DataFrame, Int) = {
     val s = pairs.sparkSession
     import s.implicits._
-    var e = symCanonical(pairs)
+    var e = Checkpoints.local(symCanonical(pairs)
       .select(greatest($"a", $"b").as("a"), least($"a", $"b").as("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     var n = e.count()
     var rounds = 0
     var done = n == 0
     while (!done && rounds < maxRounds) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
+      val next = Checkpoints.local(smallStar(largeStar(e)))
       val n1 = next.count()
       done = n1 == n && next.except(e).limit(1).count() == 0
       // release the superseded round's checkpoint blocks — up to
@@ -349,10 +348,9 @@ object ConnectedComponents {
       rounds += 1
     }
     // materialize the labels so the final edge frame can be released too
-    val labels = e.select($"a".as("v"), $"b".as("lbl"))
+    val labels = Checkpoints.local(e.select($"a".as("v"), $"b".as("lbl"))
       .union(e.select($"b".as("v"), $"b".as("lbl")))
-      .groupBy($"v").agg(min($"lbl").as("cluster_id"))
-      .localCheckpoint()
+      .groupBy($"v").agg(min($"lbl").as("cluster_id")))
     Checkpoints.release(e)
     (labels, rounds)
   }

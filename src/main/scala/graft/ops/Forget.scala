@@ -105,11 +105,11 @@ object Forget {
     def clearApplied(): Unit = applied.foreach { name =>
       fs.delete(new org.apache.hadoop.fs.Path(s"${root(stateDir)}/$name"), true)
     }
-    val t = ids(spark, stateDir).localCheckpoint()
-    try {
+    Checkpoints.scope {
+      val t = Checkpoints.local(ids(spark, stateDir))
       val n = t.count()
-      if (n == 0) { clearApplied(); return 0L } // empty requests: reap
-      dataRoots.foreach { r =>
+      // empty requests: nothing to fold, reap below
+      if (n > 0) dataRoots.foreach { r =>
         Layouts.foldChildren(spark, s"$stateDir/$r",
           transform = _.join(t, Seq("doc_id"), "left_anti"),
           beforeBatch = beforeBatch, force = true)
@@ -120,7 +120,7 @@ object Forget {
       // last and ONLY if no data child was excluded from the fold —
       // a skipped (at-or-above-bound) child may hold tombstoned rows
       // that nothing would hide once the tombstones are gone
-      val skippedAny = dataRoots.exists { r =>
+      val skippedAny = n > 0 && dataRoots.exists { r =>
         val all = Layouts.liveChildren(spark, s"$stateDir/$r").map(_.getName)
         val folded = Layouts.liveChildrenBefore(
           spark, s"$stateDir/$r", beforeBatch).map(_.getName)
@@ -128,6 +128,6 @@ object Forget {
       }
       if (!skippedAny) clearApplied()
       n
-    } finally Checkpoints.release(t)
+    }
   }
 }

@@ -33,25 +33,12 @@ object GlobalRank {
   /** `df` plus a `rankCol` column holding the 1-based global rank in
     * `sortCols` order. Eager: phase 2's sizing action runs here.
     *
-    * Resource retention: the localCheckpoint'ed partition blocks and
-    * the offset broadcast live until Spark's ContextCleaner garbage-
-    * collects the returned frame's plan. That is fine for one-shot
-    * query execution (the engine's own use), but a long-lived session
-    * calling this repeatedly should use [[withRankManaged]] and invoke
-    * the cleanup hook once the result has been fully materialized.
-    */
-  def withRank(
-      df: DataFrame,
-      sortCols: Seq[Column],
-      rankCol: String,
-      numPartitions: Int): DataFrame =
-    withRankManaged(df, sortCols, rankCol, numPartitions)._1
-
-  /** [[withRank]] plus an explicit cleanup hook that unpersists the
-    * internal localCheckpoint blocks and destroys the offset broadcast.
-    * Call the hook only AFTER the returned frame has been fully
-    * materialized (collected / written); the frame is not re-runnable
-    * afterwards.
+    * The partition blocks are taken through [[Checkpoints.local]], so
+    * the enclosing [[Checkpoints.scope]] frees them; outside a scope
+    * [[Checkpoints.release]] on the result (or on anything derived
+    * from it) does, once it is fully materialized. The offset
+    * broadcast is left to the ContextCleaner, like every broadcast-join
+    * relation.
     *
     * The range-partition id is BAKED INTO the checkpointed rows as a
     * column, not read from `TaskContext` in the rank pass: a downstream
@@ -62,23 +49,22 @@ object GlobalRank {
     * per-iterator local index plus the per-ROW pid lookup stays correct
     * under any downstream coalescing.
     */
-  def withRankManaged(
+  def withRank(
       df: DataFrame,
       sortCols: Seq[Column],
       rankCol: String,
-      numPartitions: Int): (DataFrame, () => Unit) = {
+      numPartitions: Int): DataFrame = {
     val spark = df.sparkSession
     val pidCol = "__graft_rank_pid"
-    val ranged = df
+    // materialize ONCE: the counts action and the rank pass must see
+    // identical partitions, and neither should re-run the upstream
+    // pipeline
+    val ranged = Checkpoints.local(df
       .repartitionByRange(numPartitions, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       // pid evaluated here, inside the checkpointed plan, while one
       // task still == one range partition
-      .withColumn(pidCol, spark_partition_id())
-      // materialize ONCE: the counts action and the rank pass must see
-      // identical partitions, and neither should re-run the upstream
-      // pipeline
-      .localCheckpoint()
+      .withColumn(pidCol, spark_partition_id()))
     val counts = ranged
       .groupBy(col(pidCol)).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -90,7 +76,7 @@ object GlobalRank {
     val pidIdx = ranged.schema.fieldIndex(pidCol)
     val outSchema = StructType(
       ranged.schema.fields.patch(pidIdx, Nil, 1)).add(rankCol, LongType, nullable = false)
-    val out = ranged.mapPartitions { it =>
+    ranged.mapPartitions { it =>
       // one invocation per range partition (coalesce concatenates
       // parent iterators, it does not merge them), so the local index
       // restarts exactly at each range-partition boundary
@@ -101,16 +87,6 @@ object GlobalRank {
         Row.fromSeq(r.toSeq.patch(pidIdx, Nil, 1) :+ (off + i))
       }
     }(Encoders.row(outSchema))
-    val checkpointed = ranged.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    val cleanup: () => Unit = () => {
-      // raw RDDs (not checkpointed Datasets): RDD.unpersist IS the
-      // real release here — no Checkpoints.release indirection needed
-      checkpointed.foreach(_.unpersist(blocking = false))
-      bc.destroy()
-    }
-    (out, cleanup)
   }
 
   /** Per-GROUP 1-based rank — `row_number() OVER (PARTITION BY group
@@ -125,36 +101,26 @@ object GlobalRank {
     * Contract: the distinct group count must be broadcast-sized (the
     * min-rank frame is |groups| rows); `sortCols` must be a total key
     * within each group (same tie contract as [[withRank]]). Eager,
-    * same retention caveat as [[withRank]] — use the managed variant
-    * from per-trigger paths.
+    * same retention as [[withRank]].
     */
   def withGroupRank(
       df: DataFrame,
       groupCols: Seq[String],
       sortCols: Seq[Column],
       rankCol: String,
-      numPartitions: Int): DataFrame =
-    withGroupRankManaged(df, groupCols, sortCols, rankCol, numPartitions)._1
-
-  def withGroupRankManaged(
-      df: DataFrame,
-      groupCols: Seq[String],
-      sortCols: Seq[Column],
-      rankCol: String,
-      numPartitions: Int): (DataFrame, () => Unit) = {
+      numPartitions: Int): DataFrame = {
     val grk = "__graft_group_grk"
-    val (ranked, cleanup) = withRankManaged(
+    val ranked = withRank(
       df, groupCols.map(c => col(c).asc) ++ sortCols, grk, numPartitions)
     // min-rank agg and the final pass both read withRank's checkpointed
     // blocks — identical partitions, no upstream re-run
     val minRk = ranked
       .groupBy(groupCols.map(col): _*)
       .agg(min(col(grk)).as("__graft_min_grk"))
-    val out = ranked
+    ranked
       .join(broadcast(minRk), groupCols)
       .withColumn(rankCol, col(grk) - col("__graft_min_grk") + lit(1L))
       .drop(grk, "__graft_min_grk")
-    (out, cleanup)
   }
 
   /** Per-GROUP running sum including the current row —
@@ -179,8 +145,8 @@ object GlobalRank {
     * Contract: `valueCol` must be LongType (exact BIGINT algebra — the
     * engine's oracle discipline); `sortCols` must be a total key within
     * each group (ties would make the running sum partition-dependent);
-    * distinct group count broadcast-sized. Eager, same retention caveat
-    * as [[withRank]].
+    * distinct group count broadcast-sized. Eager, same retention as
+    * [[withRank]].
     */
   def withGroupPrefixSum(
       df: DataFrame,
@@ -188,28 +154,17 @@ object GlobalRank {
       sortCols: Seq[Column],
       valueCol: String,
       outCol: String,
-      numPartitions: Int): DataFrame =
-    withGroupPrefixSumManaged(
-      df, groupCols, sortCols, valueCol, outCol, numPartitions)._1
-
-  def withGroupPrefixSumManaged(
-      df: DataFrame,
-      groupCols: Seq[String],
-      sortCols: Seq[Column],
-      valueCol: String,
-      outCol: String,
-      numPartitions: Int): (DataFrame, () => Unit) = {
+      numPartitions: Int): DataFrame = {
     val spark = df.sparkSession
     require(df.schema(valueCol).dataType == LongType,
       s"withGroupPrefixSum sums exact BIGINTs; $valueCol is " +
         df.schema(valueCol).dataType.simpleString)
     val pidCol = "__graft_psum_pid"
     val orderCols = groupCols.map(c => col(c).asc) ++ sortCols
-    val ranged = df
+    val ranged = Checkpoints.local(df
       .repartitionByRange(numPartitions, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
-      .withColumn(pidCol, spark_partition_id())
-      .localCheckpoint()
+      .withColumn(pidCol, spark_partition_id()))
     val groupIdx = groupCols.map(ranged.schema.fieldIndex)
     // per-(pid, group) slice sums; driver-side per-group prefix over
     // ascending pid → the offset each slice starts from
@@ -234,7 +189,7 @@ object GlobalRank {
     val valIdx = ranged.schema.fieldIndex(valueCol)
     val outSchema = StructType(
       ranged.schema.fields.patch(pidIdx, Nil, 1)).add(outCol, LongType, nullable = false)
-    val out = ranged.mapPartitions { it =>
+    ranged.mapPartitions { it =>
       // groups are contiguous within a sorted range partition, so a
       // group change is exactly where the local accumulator resets;
       // one invocation per range partition survives downstream
@@ -249,13 +204,5 @@ object GlobalRank {
         Row.fromSeq(r.toSeq.patch(pidIdx, Nil, 1) :+ (off + acc))
       }
     }(Encoders.row(outSchema))
-    val checkpointed = ranged.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    val cleanup: () => Unit = () => {
-      checkpointed.foreach(_.unpersist(blocking = false))
-      bc.destroy()
-    }
-    (out, cleanup)
   }
 }

@@ -134,7 +134,7 @@ object Hits {
     * group by the target id, hub folds by the source id), so in the
     * broadcast regime every per-round fold grouping is
     * partition-local and the per-round edge-sized exchanges disappear.
-    * The helper, not a plain `repartition(...).localCheckpoint()`, is
+    * The helper, not a plain `Checkpoints.local(repartition(...))`, is
     * what keeps the layout: under AQE the plain checkpoint's LogicalRDD
     * declares no partitioning, so each fold would re-shuffle the edge
     * copy. Fold orders and the IEEE op sequence are the driver tier's
@@ -162,7 +162,7 @@ object Hits {
     // per-round join re-shuffles anyway, so one unlaid copy suffices.
     val eA =
       if (bcastRank) Checkpoints.localByKey(eIds, "id2", parts)
-      else eIds.localCheckpoint()
+      else Checkpoints.local(eIds)
     val eH = if (bcastRank) Checkpoints.localByKey(eA, "id1", parts) else eA
     // shuffle regime: the per-round join re-shuffles the edge frame, so
     // ONE forced kid-only exchange after it satisfies both fold levels
@@ -175,23 +175,22 @@ object Hits {
     // the last auth frame carries the strings out, so the dictionary
     // goes with the loop
     val named = dict.select(col("id"), col("w"))
-    var hub = dict.select(col("id"), (lit(1.0) / lit(n)).as("score"))
-      .localCheckpoint()
+    var hub = Checkpoints.local(dict.select(col("id"), (lit(1.0) / lit(n)).as("score")))
     var auth: DataFrame = null
     for (k <- 1 to rounds) {
       // auth side: in-sums keyed by the target id, leaves in source-id
       // order, key segment = seg2
       val araw = foldEdgesIds(eA, hinted(hub),
         key = "id2", other = "id1", segOf = "seg1", ksegOf = "seg2", shape)
-      val aNew = normalizeIds(if (k == rounds) named else nodes,
-        hinted(araw), foldNormIds(araw)).localCheckpoint()
+      val aNew = Checkpoints.local(normalizeIds(if (k == rounds) named else nodes,
+        hinted(araw), foldNormIds(araw)))
       if (auth != null) Checkpoints.release(auth)
       auth = aNew
       // hub side: out-sums keyed by the source id, leaves in target-id
       // order, key segment = seg1
       val hraw = foldEdgesIds(eH, hinted(auth),
         key = "id1", other = "id2", segOf = "seg2", ksegOf = "seg1", shape)
-      val hNew = normalizeIds(nodes, hinted(hraw), foldNormIds(hraw)).localCheckpoint()
+      val hNew = Checkpoints.local(normalizeIds(nodes, hinted(hraw), foldNormIds(hraw)))
       Checkpoints.release(hub)
       hub = hNew
     }

@@ -219,9 +219,8 @@ object IndexDrift {
       k: Int,
       sampleQueries: Int,
       probeFn: DataFrame => DataFrame): Double = {
-    val queries = TrainSample.sample(
-      corpus.select(col("vec_id"), col("embedding")), sampleQueries)
-      .localCheckpoint()
+    val queries = Checkpoints.local(TrainSample.sample(
+      corpus.select(col("vec_id"), col("embedding")), sampleQueries))
     val got = probeFn(queries)
       .select(col("qid"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -209,7 +209,7 @@ object IvfIndex {
     // every hot cell's training loop re-reads it (seed collect + one
     // pass per Lloyd iteration) — without this the full-corpus argmax
     // scan would re-execute ~H*(iters+1) times
-    val assigned = index(corpus, centroids).localCheckpoint()
+    val assigned = Checkpoints.local(index(corpus, centroids))
     val hot = assigned.groupBy(col("cell")).count()
       .filter(col("count") > maxCell)
       .collect().map(_.getInt(0)).sorted

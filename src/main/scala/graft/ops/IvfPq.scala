@@ -83,18 +83,16 @@ object IvfPq {
     // per round), so an unmaterialized normalize / residual pipeline
     // would re-execute the upstream scan ~2·(iters+1) times per
     // train() (the auto-probe rationale of PageRank/BpeTrain)
-    val normed = trainInput
+    val normed = Checkpoints.local(trainInput
       .as[(Long, Array[Float])]
       .map { case (id, e) => (id, PqIndex.normalize(e)) }
-      .toDF("vec_id", "embedding")
-      .localCheckpoint()
+      .toDF("vec_id", "embedding"))
     val cells = IvfIndex.train(normed, kCells, iters, dim, trainSample)
-    val residuals = normed.as[(Long, Array[Float])]
+    val residuals = Checkpoints.local(normed.as[(Long, Array[Float])]
       .map { case (id, v) =>
         (id, residual(v, cells(IvfIndex.nearestCell(v, cells))))
       }
-      .toDF("vec_id", "embedding")
-      .localCheckpoint()
+      .toDF("vec_id", "embedding"))
     Checkpoints.release(normed)
     val pq = PqIndex.train(residuals, m, kSub, dim, iters, trainSample,
       normalizeInput = false)

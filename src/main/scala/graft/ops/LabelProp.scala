@@ -42,18 +42,17 @@ object LabelProp {
     // supersedes its predecessor (the PageRank id loop's
     // discipline) — without this, round r's lineage would re-run the
     // upstream extraction scan r times per join side
-    val e0 = edges.localCheckpoint()
+    val e0 = Checkpoints.local(edges)
     val noLoops = e0.filter(col("a") =!= col("b"))
-    val sym = noLoops
+    val sym = Checkpoints.local(noLoops
       .select(col("a"), col("b"), col("w"))
       .unionAll(noLoops.select(col("b").as("a"), col("a").as("b"), col("w")))
       .groupBy(col("a"), col("b"))
-      .agg(sum(col("w")).cast("long").as("w"))
-      .localCheckpoint()
+      .agg(sum(col("w")).cast("long").as("w")))
     val nodes = e0.select(col("a").as("host"))
       .unionAll(e0.select(col("b").as("host")))
       .distinct()
-    var lab = nodes.withColumn("label", col("host")).localCheckpoint()
+    var lab = Checkpoints.local(nodes.withColumn("label", col("host")))
     Checkpoints.release(e0)
     for (_ <- 1 to rounds) {
       val contrib = sym
@@ -64,10 +63,9 @@ object LabelProp {
         .groupBy(col("a").as("host"))
         .agg(min(struct((-col("s")).as("ns"), col("label").as("l"))).as("win"))
         .select(col("host"), col("win.l").as("new_label"))
-      val next = lab.join(best, Seq("host"), "left")
+      val next = Checkpoints.local(lab.join(best, Seq("host"), "left")
         .select(col("host"),
-          coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint()
+          coalesce(col("new_label"), col("label")).as("label")))
       Checkpoints.release(lab)
       lab = next
     }

@@ -75,7 +75,7 @@ object LexIndex {
     * released once the child is on disk.
     */
   private def writeChild(postRaw: DataFrame, path: String, child: String): Unit = {
-    val post = postRaw.localCheckpoint()
+    val post = Checkpoints.local(postRaw)
     withStatsRow(post)
       .write.mode("overwrite").parquet(s"$path/chunks/$child")
     Checkpoints.release(post)
@@ -162,12 +162,12 @@ object LexIndex {
     val inFold = Layouts.liveChildrenBefore(
       spark, s"$path/chunks", beforeBatch).map(_.getName)
     if ((all0.toSet -- inFold.toSet).nonEmpty) return // defer whole
-    val t = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, dl BIGINT"))
-      .parquet(applied.map(n => s"$path/forget/$n"): _*)
-      .select(col("doc_id")).distinct().localCheckpoint()
-    try {
+    Checkpoints.scope {
+      val t = Checkpoints.local(spark.read
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(
+          "doc_id BIGINT, dl BIGINT"))
+        .parquet(applied.map(n => s"$path/forget/$n"): _*)
+        .select(col("doc_id")).distinct())
       Layouts.foldChildren(spark, s"$path/chunks",
         all => withStatsRow(
           all.filter(col("kind") === "p")
@@ -194,7 +194,7 @@ object LexIndex {
           fs.delete(new org.apache.hadoop.fs.Path(s"$path/forget/$name"), true)
         }
       }
-    } finally Checkpoints.release(t)
+    }
   }
 
   /** BM25 scores for `terms` served from the index — output

@@ -239,9 +239,8 @@ object Lsh {
     * band frame is localCheckpoint'ed so the self-join sides read
     * materialized partitions instead of re-executing the signature
     * pipeline (AQE does not reuse exchanges across identical self-join
-    * inputs). The result reads that checkpoint: a per-trigger caller
-    * (StreamPhash) releases it with [[Checkpoints.release]] on the
-    * result after materializing.
+    * inputs). The result reads that checkpoint, which belongs to the
+    * caller's [[Checkpoints.scope]].
     *
     * Returns distinct (d1, d2, s1, s2), d1 < d2.
     */
@@ -291,9 +290,8 @@ object Lsh {
       bands.sparkSession.sparkContext.defaultParallelism, col("b"), col("band"))
     val sizes = b0.groupBy(col("b"), col("band"))
       .agg(count(lit(1)).as("__n"))
-    val keyed = subBandKeyed(
-      b0.join(sizes, Seq("b", "band")), bandBits, subBands, subBits, maxBucket)
-      .localCheckpoint()
+    val keyed = Checkpoints.local(subBandKeyed(
+      b0.join(sizes, Seq("b", "band")), bandBits, subBands, subBits, maxBucket))
     keyed.as("x").join(keyed.as("y"),
         col("x.b") === col("y.b") && col("x.band") === col("y.band") &&
           col("x.__j") === col("y.__j") && col("x.__sub") === col("y.__sub") &&

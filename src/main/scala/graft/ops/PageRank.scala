@@ -117,14 +117,13 @@ object PageRank {
   /** The node dictionary: `nodesW` (w, …static per-node cols…) plus
     * `id` = 1-based global rank of `w` in UTF-8 binary order, computed
     * through [[GlobalRank]]'s two-phase rank (no single-partition
-    * window) and localCheckpoint'ed; the rank's internal blocks are
+    * window) and checkpointed; the rank's internal blocks are
     * released as soon as the dictionary is materialized.
     */
   private[ops] def nodeDict(nodesW: DataFrame, parts: Int): DataFrame = {
-    val (ranked, releaseRank) =
-      GlobalRank.withRankManaged(nodesW, Seq(col("w").asc), "id", parts)
-    val dict = ranked.localCheckpoint()
-    releaseRank()
+    val ranked = GlobalRank.withRank(nodesW, Seq(col("w").asc), "id", parts)
+    val dict = Checkpoints.local(ranked)
+    Checkpoints.release(ranked)
     dict
   }
 
@@ -383,7 +382,7 @@ object PageRank {
     * the iteration. The id loops release the checkpoint when done.
     */
   private[ops] def checkpointed(edges: DataFrame)(f: (DataFrame, Long) => DataFrame): DataFrame = {
-    val e = edges.localCheckpoint()
+    val e = Checkpoints.local(edges)
     f(e, e.count())
   }
 
@@ -531,7 +530,7 @@ object PageRank {
     *    (id2, seg), level 2 on id2 — a superset of the partitioning
     *    key, which Spark recognises) stay partition-local: the
     *    per-round edge-sized exchanges disappear outright. A plain
-    *    `repartition(parts, id2).localCheckpoint()` would not do it:
+    *    `Checkpoints.local(repartition(parts, id2))` would not do it:
     *    under AQE the checkpoint's LogicalRDD reads the adaptive root's
     *    `UnknownPartitioning`, and every round would shuffle the edge
     *    frame twice, on (id2, seg) and on id2;
@@ -595,13 +594,13 @@ object PageRank {
     // a setup layout would be dead weight — skip it
     val trans =
       if (bcastRank) Checkpoints.localByKey(transBase, "id2", parts)
-      else transBase.localCheckpoint()
+      else Checkpoints.local(transBase)
     // the frame after round k; the last one also carries the strings
     // (and seed flags) out, so the dictionary goes with the loop
     def carried(k: Int): Seq[Column] =
       (Seq("id", "seg", "is_dang") ++
         (if (k < rounds) Nil else "w" +: seedCond.map(_ => "is_seed").toSeq)).map(col)
-    var pr = nodes.select(carried(0) :+ start.as("pr"): _*).localCheckpoint()
+    var pr = Checkpoints.local(nodes.select(carried(0) :+ start.as("pr"): _*))
     for (k <- 1 to rounds) {
       // dangling mass: the depth-3 tree — (seg) buckets fold in id
       // order, then [[fold23]] replays levels 2+3 in one pass over the
@@ -631,10 +630,9 @@ object PageRank {
         .groupBy(col("id2"))
         .agg(sort_array(collect_list(struct(col("seg"), col("ssum")))).as("xs"))
         .select(col("id2").as("id"), expr(fold23("ssum")).as("insum"))
-      val next = nodes.join(hinted(sums), Seq("id"), "left")
+      val next = Checkpoints.local(nodes.join(hinted(sums), Seq("id"), "left")
         .crossJoin(broadcast(dang))
-        .select(carried(k) :+ update.as("pr"): _*)
-        .localCheckpoint()
+        .select(carried(k) :+ update.as("pr"): _*))
       // release the superseded round's blocks — R rank-frame copies
       // would otherwise stay cached for the session's lifetime
       Checkpoints.release(pr)

@@ -37,11 +37,8 @@ object SemDedup {
     // consumed three times (both self-join sides + the verdict join):
     // materialize once — AQE does not reuse exchanges across identical
     // self-join inputs (the Lsh lesson), so a lazy corpus assignment
-    // would re-run its argmax scan per consumer. Same release caveat
-    // as pruneIncremental: callers may Checkpoints.release the result
-    // after materializing.
-    val a = assigned.select(col("cell"), col("vec_id"), col("embedding"))
-      .localCheckpoint()
+    // would re-run its argmax scan per consumer.
+    val a = Checkpoints.local(assigned.select(col("cell"), col("vec_id"), col("embedding")))
     val pairs = a.as("a")
       .join(a.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
@@ -116,10 +113,8 @@ object SemDedup {
     * An absent or row-less layout is the from-scratch bootstrap, not
     * an error: the corpus leg is empty and only the in-batch rule
     * decides (the [[graft.streaming.StreamCms]] convention). The
-    * batch assignment is `localCheckpoint`ed internally — after fully
-    * materializing the result, call [[Checkpoints.release]] on it
-    * (per-trigger callers like [[graft.streaming.StreamSemDedup]]
-    * must, or every trigger leaks one batch of blocks).
+    * batch assignment is checkpointed into the caller's
+    * [[Checkpoints.scope]].
     */
   def pruneIncremental(
       spark: org.apache.spark.sql.SparkSession,
@@ -130,9 +125,8 @@ object SemDedup {
     graft.functions.CosineSim.register(spark)
     // consumed three times (cell list, corpus-pair side, batch-pair
     // sides) — materialize the assignment once
-    val b = IvfIndex.indexRefined(batch, model)
-      .select(col("cell"), col("vec_id"), col("embedding"))
-      .localCheckpoint()
+    val b = Checkpoints.local(IvfIndex.indexRefined(batch, model)
+      .select(col("cell"), col("vec_id"), col("embedding")))
     val cells = b.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val corpus = readLayout(spark, path)

@@ -49,20 +49,18 @@ object SkyState {
     Layouts.recoverPublished(spark, s"$dir/sky")
     val cur = spark.read.parquet(s"$dir/sky")
     val cols = cur.columns.map(org.apache.spark.sql.functions.col).toSeq
-    // align column order; the managed form because this runs PER
-    // TRIGGER — Skyline.of's internal checkpoint blocks would
-    // otherwise strand one candidate-sized RDD per batch until a
-    // driver GC (the Checkpoints.scala failure mode); the stage write
-    // below materializes everything, after which release is safe and
-    // publish's RENAME can no longer invalidate a lazy reader
-    val (sky, cleanup) = Skyline.ofManaged(
-      cur.select(cols: _*).unionAll(batch.select(cols: _*))
-        .dropDuplicates(keyCol),
-      dims)
-    try {
-      sky.write.mode("overwrite").parquet(s"$dir/__stage")
+    // align column order; the scope because this runs PER TRIGGER —
+    // Skyline.of's candidate checkpoint would otherwise strand one
+    // candidate-sized RDD per batch until a driver GC; the stage write
+    // materializes everything before the scope frees it, so publish's
+    // RENAME can no longer invalidate a lazy reader
+    Checkpoints.scope {
+      Skyline.of(
+        cur.select(cols: _*).unionAll(batch.select(cols: _*))
+          .dropDuplicates(keyCol),
+        dims).write.mode("overwrite").parquet(s"$dir/__stage")
       Layouts.publish(spark, s"$dir/sky", s"$dir/__stage")
-    } finally cleanup()
+    }
   }
 
   /** The current frontier (read side). */

@@ -44,29 +44,20 @@ object Skyline {
   val BroadcastCandRows: Long = 1L << 20
 
   /** The skyline of `df` maximizing every column in `dims` (BIGINT).
-    * Returns `df`'s schema unchanged, skyline rows only. Internal
-    * localCheckpoint blocks live until the ContextCleaner reaps the
-    * returned frame — fine for one-shot queries (the GlobalRank
-    * caveat); repeated callers (streaming maintainers) should use
-    * [[ofManaged]] and release after materializing.
-    */
-  def of(df: DataFrame, dims: Seq[String]): DataFrame =
-    ofManaged(df, dims)._1
-
-  /** [[of]] plus a cleanup hook unpersisting the internal checkpoint
-    * blocks. Call it only AFTER the result has been fully
-    * materialized; the frame is not re-runnable afterwards.
+    * Returns `df`'s schema unchanged, skyline rows only. The candidate
+    * checkpoint belongs to the enclosing [[Checkpoints.scope]] (outside
+    * one, [[Checkpoints.release]] the result once materialized).
     * `budgetRows` exists so tests can force the shrink-round path on
     * small fixtures; production callers keep the default.
     */
-  def ofManaged(
+  def of(
       df: DataFrame,
       dims: Seq[String],
-      budgetRows: Long = BroadcastCandRows): (DataFrame, () => Unit) = {
+      budgetRows: Long = BroadcastCandRows): DataFrame = {
     require(dims.nonEmpty, "skyline needs at least one objective")
     val schema = df.schema
     val idx = dims.map(schema.fieldIndex)
-    var cand = localPrune(df, idx).localCheckpoint()
+    var cand = Checkpoints.local(localPrune(df, idx))
     // crash hygiene: if anything below throws (a prune task failure,
     // a count job loss), the frames checkpointed so far must not
     // strand until a driver GC — release and rethrow
@@ -75,7 +66,7 @@ object Skyline {
       var parts = cand.rdd.getNumPartitions
       while (n > budgetRows && parts > 1) {
         parts = math.max(1, parts / 8)
-        val next = localPrune(cand.coalesce(parts), idx).localCheckpoint()
+        val next = Checkpoints.local(localPrune(cand.coalesce(parts), idx))
         // the next checkpoint is EAGER, so the previous round's
         // blocks are dead the moment it exists — release round by
         // round instead of pinning sum-of-rounds copies of an
@@ -84,16 +75,13 @@ object Skyline {
         cand = next
         n = cand.count()
       }
-      val out =
-        if (n > budgetRows) cand // pruned at ONE partition: exact
-        else {
-          val other = cand.select(dims.map(d => col(d).as(s"__sky_$d")): _*)
-          val geAll = dims.map(d => col(s"__sky_$d") >= col(d)).reduce(_ && _)
-          val gtAny = dims.map(d => col(s"__sky_$d") > col(d)).reduce(_ || _)
-          cand.join(broadcast(other), geAll && gtAny, "left_anti")
-        }
-      val last = cand
-      (out, () => Checkpoints.release(last))
+      if (n > budgetRows) cand // pruned at ONE partition: exact
+      else {
+        val other = cand.select(dims.map(d => col(d).as(s"__sky_$d")): _*)
+        val geAll = dims.map(d => col(s"__sky_$d") >= col(d)).reduce(_ && _)
+        val gtAny = dims.map(d => col(s"__sky_$d") > col(d)).reduce(_ || _)
+        cand.join(broadcast(other), geAll && gtAny, "left_anti")
+      }
     } catch {
       case t: Throwable => Checkpoints.release(cand); throw t
     }

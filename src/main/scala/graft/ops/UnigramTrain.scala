@@ -202,13 +202,13 @@ object UnigramTrain {
       localThreshold: Long = 1000000L): DataFrame = {
     strategy match {
       case "local" => trainLocal(wordFreq.collect(), config, wordFreq)
-      case "distributed" => trainDistributed(wordFreq.localCheckpoint(), config)
+      case "distributed" => trainDistributed(Checkpoints.local(wordFreq), config)
       case "auto" =>
         // materialize ONCE: the threshold probe is an action, and
         // trainDistributed takes the already-checkpointed frame (and
         // releases it) — re-checkpointing would double-persist the
         // dictionary and leak the outer copy (the BpeTrain contract)
-        val wf = wordFreq.localCheckpoint()
+        val wf = Checkpoints.local(wordFreq)
         if (wf.count() <= localThreshold) {
           val r = trainLocal(wf.collect(), config, wf)
           Checkpoints.release(wf)

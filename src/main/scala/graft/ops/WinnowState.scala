@@ -92,9 +92,8 @@ object WinnowState {
       s"batch of $batchMax grams widens the pos ladder beyond the state's " +
         s"frozen rung (posMod=${ladder.posMod}) — rebuild the state with " +
         "WinnowState.save over the full corpus")
-    val sel = Mining
-      .selectedFingerprints(batch, w, ladder.hashHex, ladder.posMod)
-      .localCheckpoint()
+    val sel = Checkpoints.local(Mining
+      .selectedFingerprints(batch, w, ladder.hashHex, ladder.posMod))
     val batchNd = sel.groupBy(col("fp"))
       .agg(countDistinct(col("doc_id")).as("bdocs"))
     // corpus-side counts for exactly the batch's fingerprints: the
@@ -105,13 +104,12 @@ object WinnowState {
     val totals = batchNd.join(stateNd, Seq("fp"), "left")
       .select(col("fp"),
         (col("bdocs") + coalesce(col("cdocs"), lit(0L))).as("ndocs"))
-    val out = sel.join(totals, "fp")
+    val out = Checkpoints.local(sel.join(totals, "fp")
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("long").as("n_fp"),
         sum(when(col("ndocs") >= 2, 1L).otherwise(0L)).cast("long").as("n_dup"))
-      .withColumn("dup_frac", col("n_dup").cast("double") / col("n_fp"))
-      .localCheckpoint()
+      .withColumn("dup_frac", col("n_dup").cast("double") / col("n_fp")))
     sink(out)
     if (commit) {
       val nd = batchNd.select(col("fp"), col("bdocs").as("ndocs"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution
 import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
@@ -281,7 +282,7 @@ object Crawl {
           .filter(col("kind") =!= "skip" && col("nofollow") === 0L)
           .groupBy(col("src_url").as("w1"), col("dst_url").as("w2"))
           .agg(count(lit(1)).cast("long").as("c"))
-        graft.ops.PageRank.run(edges, rounds = 5, localThreshold = 5000L)
+        graft.ops.PageRank.run(edges, rounds = 5)
           .select(col("w").as("url"), col("pr"))
       },
       Some(s"""
@@ -436,7 +437,7 @@ object Crawl {
           .filter(col("kind") =!= "skip" && col("nofollow") === 0L)
           .groupBy(col("src_url").as("w1"), col("dst_url").as("w2"))
           .agg(count(lit(1)).cast("long").as("c"))
-        val pr = graft.ops.PageRank.run(edges, rounds = 5, localThreshold = 5000L)
+        val pr = graft.ops.PageRank.run(edges, rounds = 5)
         val hostMass = pr
           .withColumn("host", expr("regexp_extract(w, '^https?://([^/]+)', 1)"))
           .withColumn("q", expr("CAST(floor(pr * 1e12) AS BIGINT)"))
@@ -667,18 +668,16 @@ object Crawl {
         // edges twice — run + runBiased each materialize their own
         // copy — plus the host edges): checkpointed once instead of
         // re-running the outlink scan three times (optimization round
-        // 15; one-shot release convention)
-        val links = withOutlinks(table(s, dir, "documents"))
-          .localCheckpoint()
+        // 15)
+        val links = Checkpoints.local(withOutlinks(table(s, dir, "documents")))
         // the page-edge aggregation feeds run AND runBiased — snapshot
         // it once so the 4 M-link groupBy runs once, not once per loop
         // (optimization round 16; each loop re-snapshots the cached
         // blocks, which is a copy, not a recompute)
-        val edges = links
+        val edges = Checkpoints.local(links
           .filter(col("kind") =!= "skip" && col("nofollow") === 0L)
           .groupBy(col("src_url").as("w1"), col("dst_url").as("w2"))
-          .agg(count(lit(1)).cast("long").as("c"))
-          .localCheckpoint()
+          .agg(count(lit(1)).cast("long").as("c")))
         val hedges = links
           .filter(col("kind") =!= "skip" && col("nofollow") === 0L)
           .withColumn("a", expr("regexp_extract(src_url, '^https?://([^/]+)', 1)"))
@@ -696,19 +695,22 @@ object Crawl {
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
         val prF = Future(
-          graft.ops.PageRank.run(edges, rounds = 5, localThreshold = 5000L))
+          graft.ops.PageRank.run(edges, rounds = 5))
         val trF = Future(
           graft.ops.PageRank.runBiased(edges, rounds = 5, seedCond = TrustSeedCond))
         val commF = Future(graft.ops.LabelProp.run(hedges, rounds = 3))
         val pr = Await.result(prF, Duration.Inf)
         val tr = Await.result(trF, Duration.Inf)
         val comm = Await.result(commF, Duration.Inf)
+        // the loops ran on pool threads, outside this thread's scope:
+        // adopt their result checkpoints into it
+        Seq(pr, tr, comm).foreach(Checkpoints.own(_))
         // every consumer of the extraction frame and the shared edge
         // snapshot is eager (the three loops just completed), so both
         // release HERE instead of leaning on the ContextCleaner — the
         // round-15 verdict's leaked-links fix (the loops' own result
         // checkpoints are self-contained)
-        Seq(links, edges).foreach(graft.ops.Checkpoints.release)
+        Seq(links, edges).foreach(Checkpoints.release)
         val hostMass = pr
           .join(tr.select(col("w"), col("trust")), Seq("w"))
           .withColumn("host", expr("regexp_extract(w, '^https?://([^/]+)', 1)"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -628,7 +629,7 @@ object Curation {
         val nearDrops = Llm.all.find(_.name == "q45_dedup_clusters").get.run(s, dir)
           .filter($"v" =!= $"cluster_id").select($"v".as("doc_id"))
           .withColumn("near_dup", lit(1L))
-        val blocks = blockFrame(docs, 10).localCheckpoint()
+        val blocks = Checkpoints.local(blockFrame(docs, 10))
         val hot = blocks.groupBy($"bh").agg(countDistinct($"doc_id").as("ndocs"))
           .filter($"ndocs" >= 3).select($"bh")
         val boiler = blocks.join(hot, "bh").select($"doc_id").distinct()
@@ -702,9 +703,8 @@ object Curation {
       (s, dir) => {
         import s.implicits._
         val docs = Llm.docsSpread(s, dir)
-        val audit = curationAudit(docs,
-          Llm.minhashLshPairs(docs, Llm.lshMaxBucket).select($"d1", $"d2"))
-          .localCheckpoint() // consumed by the stage agg AND the kept slice
+        val audit = Checkpoints.local(curationAudit(docs,
+          Llm.minhashLshPairs(docs, Llm.lshMaxBucket).select($"d1", $"d2"))) // consumed by the stage agg AND the kept slice
         val nt = docs.select($"doc_id",
           size(expr("filter(split(text, ' '), x -> x <> '')"))
             .cast("long").as("nt"))
@@ -814,19 +814,16 @@ object Curation {
       (s, dir) => {
         import s.implicits._
         val docs = table(s, dir, "documents")
-        val bsd = blockFrame(docs, 10)
+        val bsd = Checkpoints.local(blockFrame(docs, 10)
           .join(docs.select($"doc_id", $"source"), "doc_id")
           .select($"bh", $"source", $"doc_id")
-          .distinct()
-          .localCheckpoint() // consumed by the pair join AND both carrier passes
-        val bsrc = bsd.select($"bh", $"source").distinct()
-          .localCheckpoint() // both sides of the per-block self-join
-        val prs = bsrc.as("x")
+          .distinct()) // consumed by the pair join AND both carrier passes
+        val bsrc = Checkpoints.local(bsd.select($"bh", $"source").distinct()) // both sides of the per-block self-join
+        val prs = Checkpoints.local(bsrc.as("x")
           .join(bsrc.as("y"),
             col("x.bh") === col("y.bh") && col("x.source") < col("y.source"))
           .select(col("x.bh").as("bh"),
-            col("x.source").as("sa"), col("y.source").as("sb"))
-          .localCheckpoint() // consumed by nsh + the carrier join
+            col("x.source").as("sa"), col("y.source").as("sb"))) // consumed by nsh + the carrier join
         val nsh = prs.groupBy($"sa", $"sb")
           .agg(count(lit(1)).cast("long").as("n_shared"))
         // ONE melt join for both carrier counts (side = which end of
@@ -1108,8 +1105,7 @@ object Curation {
         import s.implicits._
         val docs = Llm.docsSpread(s, dir)
         // one LSH pass serves both configs (B filters by jac)
-        val pairs = Llm.minhashLshPairs(docs, Llm.lshMaxBucket)
-          .localCheckpoint()
+        val pairs = Checkpoints.local(Llm.minhashLshPairs(docs, Llm.lshMaxBucket))
         val a = curationAudit(docs, pairs.select($"d1", $"d2"), 30, 1)
           .select($"doc_id", $"gate_pass".as("gate_a"),
             $"exact_dup_of".as("exa"), $"near_dup_of".as("nra"),
@@ -1211,14 +1207,13 @@ object Curation {
       (s, dir) => {
         import s.implicits._
         val (v1, v2) = diffVersions(Llm.docsSpread(s, dir))
-        val j = v1.join(v2, Seq("doc_id"), "full_outer")
+        val j = Checkpoints.local(v1.join(v2, Seq("doc_id"), "full_outer")
           .withColumn("status",
             when($"a_text".isNull, "added")
               .when($"b_text".isNull, "removed")
               .when($"a_text" =!= $"b_text" || $"a_lang" =!= $"b_lang" ||
                 $"a_source" =!= $"b_source", "changed")
-              .otherwise("unchanged"))
-          .localCheckpoint()
+              .otherwise("unchanged")))
         val v1rows = j.filter($"status" =!= "added")
           .select($"doc_id",
             $"a_text".as("text_md5"), $"a_lang".as("lang_md5"),
@@ -1363,7 +1358,7 @@ object Curation {
     // two consumers (ndocs agg, join back): materialize once so the
     // tokenize+block Generate never re-executes (q88/q93 discipline),
     // laid out by bh so neither consumer re-shuffles
-    val blocks = graft.ops.Checkpoints.localByKey(
+    val blocks = Checkpoints.localByKey(
       blockFrame(docs, blockTokens), "bh", s.sparkContext.defaultParallelism)
     val nd = blocks.groupBy($"bh").agg(countDistinct($"doc_id").as("ndocs"))
     reconstructClean(blocks.join(nd, "bh"), minDocs)

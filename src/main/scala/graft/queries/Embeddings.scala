@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.functions._
 
 /** Embedding-column operators beyond similarity search (q24/q25/q33/
@@ -252,17 +253,15 @@ object Embeddings {
           .select($"embedding".as("ea"))
         // consumed by the greedy's 5 stages AND the pair sims —
         // materialize the k-bounded frame once
-        val cand = e.filter($"vec_id" =!= 0)
+        val cand = Checkpoints.local(e.filter($"vec_id" =!= 0)
           .crossJoin(broadcast(q0))
           .select($"vec_id", expr("cosine_sim(ea, embedding)").as("rel"),
             $"embedding")
-          .orderBy($"rel".desc, $"vec_id".asc).limit(20)
-          .localCheckpoint()
-        val sims = cand.as("a").join(cand.as("b"),
+          .orderBy($"rel".desc, $"vec_id".asc).limit(20))
+        val sims = Checkpoints.local(cand.as("a").join(cand.as("b"),
             col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("c1"), col("b.vec_id").as("c2"),
-            expr("cosine_sim(a.embedding, b.embedding)").as("sim"))
-          .localCheckpoint()
+            expr("cosine_sim(a.embedding, b.embedding)").as("sim")))
         mmrGreedy(cand.select($"vec_id", $"rel"), sims, 5)
       },
       Some(mmrOracleSql)),
@@ -586,11 +585,10 @@ object Embeddings {
       k: Int): org.apache.spark.sql.DataFrame = {
     val s = cand.sparkSession
     import s.implicits._
-    var sel = cand
+    var sel = Checkpoints.local(cand
       .orderBy($"rel".desc, $"vec_id".asc).limit(1)
       .select($"vec_id", $"rel", lit(1L).as("step"),
-        (lit(0.7) * $"rel").as("mmr_score"))
-      .localCheckpoint()
+        (lit(0.7) * $"rel").as("mmr_score")))
     (2 to k).foreach { t =>
       val ms = sims.join(sel.select($"vec_id".as("c2")), "c2")
         .groupBy($"c1").agg(max($"sim").as("ms"))
@@ -602,7 +600,7 @@ object Embeddings {
           (lit(0.7) * $"rel" -
             lit(0.3) * coalesce($"ms", lit(0.0))).as("mmr_score"))
         .orderBy($"mmr_score".desc, $"vec_id".asc).limit(1)
-      sel = sel.unionAll(next).localCheckpoint()
+      sel = Checkpoints.local(sel.unionAll(next))
     }
     sel.select($"step", $"vec_id", $"rel", $"mmr_score")
   }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
-import graft.ops.{AnnIndex, IvfIndex, Multimodal}
+import graft.ops.{AnnIndex, Checkpoints, IvfIndex, Multimodal}
 import org.apache.spark.sql.functions._
 
 /** Extension operators built on imperative per-partition code rather
@@ -351,9 +351,9 @@ object Extensions {
           Multimodal.imagePhash(d.select(
             $"doc_id", encode($"text", "UTF-8").as("media"),
             lit("image/fake").as("mime_hint")))
-        val corpusPh = ph(docs).localCheckpoint()
-        val batchPh = ph(docs.filter($"doc_id" % 25 === 0)
-          .select((-$"doc_id" - 1L).as("doc_id"), $"text")).localCheckpoint()
+        val corpusPh = Checkpoints.local(ph(docs))
+        val batchPh = Checkpoints.local(ph(docs.filter($"doc_id" % 25 === 0)
+          .select((-$"doc_id" - 1L).as("doc_id"), $"text")))
         graft.ops.Lsh.incrementalSimhashCandidates(
             corpusPh.select($"doc_id", $"phash".as("simhash")),
             batchPh.select($"doc_id", $"phash".as("simhash")),
@@ -536,9 +536,9 @@ object Extensions {
           Multimodal.audioFingerprint(d.select(
             $"doc_id", encode($"text", "UTF-8").as("media"),
             lit("audio/fake").as("mime_hint")))
-        val corpusAh = ah(docs).localCheckpoint()
-        val batchAh = ah(docs.filter($"doc_id" % 20 === 0)
-          .select((-$"doc_id" - 1L).as("doc_id"), $"text")).localCheckpoint()
+        val corpusAh = Checkpoints.local(ah(docs))
+        val batchAh = Checkpoints.local(ah(docs.filter($"doc_id" % 20 === 0)
+          .select((-$"doc_id" - 1L).as("doc_id"), $"text")))
         graft.ops.Lsh.incrementalSimhashCandidates(
             corpusAh.select($"doc_id", $"ahash".as("simhash")),
             batchAh.select($"doc_id", $"ahash".as("simhash")),
@@ -665,10 +665,10 @@ object Extensions {
       "q204_media_dedup_apply",
       (s, dir) => {
         import s.implicits._
-        val pairs = all.find(_.name == "q195_image_phash_dup").get
-          .run(s, dir).select($"d1", $"d2").localCheckpoint()
+        val pairs = Checkpoints.local(all.find(_.name == "q195_image_phash_dup").get
+          .run(s, dir).select($"d1", $"d2"))
         val labels = graft.ops.ConnectedComponents.auto(pairs)
-        graft.ops.Checkpoints.release(pairs)
+        Checkpoints.release(pairs)
         val sizes = labels.groupBy($"cluster_id")
           .agg(count(lit(1)).cast("long").as("n_members"))
         val docs = table(s, dir, "documents").select($"doc_id")
@@ -739,8 +739,8 @@ object Extensions {
       "q207_media_split_leakage",
       (s, dir) => {
         import s.implicits._
-        val pairs = all.find(_.name == "q195_image_phash_dup").get
-          .run(s, dir).localCheckpoint()
+        val pairs = Checkpoints.local(all.find(_.name == "q195_image_phash_dup").get
+          .run(s, dir))
         pairs.select($"d1".as("doc_id"), $"d2".as("partner"), $"hamming")
           .unionAll(pairs.select($"d2".as("doc_id"), $"d1".as("partner"), $"hamming"))
           .withColumn("split", TrainPrep.splitOf($"doc_id"))
@@ -806,10 +806,10 @@ object Extensions {
       "q210_media_curation",
       (s, dir) => {
         import s.implicits._
-        val pairs = all.find(_.name == "q195_image_phash_dup").get
-          .run(s, dir).select($"d1", $"d2").localCheckpoint()
+        val pairs = Checkpoints.local(all.find(_.name == "q195_image_phash_dup").get
+          .run(s, dir).select($"d1", $"d2"))
         val labels = graft.ops.ConnectedComponents.auto(pairs)
-        graft.ops.Checkpoints.release(pairs)
+        Checkpoints.release(pairs)
         val clustered = labels.withColumnRenamed("v", "doc_id")
           .withColumn("msplit", TrainPrep.splitOf($"doc_id"))
         val agg = clustered.groupBy($"cluster_id").agg(

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -116,7 +117,7 @@ object Llm {
     require(p > 0 && q > p, s"threshold p/q must be in (0,1): $p/$q")
     val s = corpusPostings.sparkSession
     import s.implicits._
-    val bs = batchSets.localCheckpoint()
+    val bs = Checkpoints.local(batchSets)
     val bkeys = broadcast(bs.select(explode($"gs").as("g")).distinct())
     val bsh = bs.select($"doc_id".as("batch_doc"),
       size($"gs").cast("long").as("n_b"), explode($"gs").as("g"))
@@ -129,9 +130,8 @@ object Llm {
         $"n".as("n_a"), $"g")
       .join(bkeys, Seq("g"), "left_semi")
       .distinct()
-    // one-shot convention: bs's checkpoint blocks are reaped by the
-    // ContextCleaner with the returned frame (per-trigger callers
-    // materialize the result inside their batch before moving on)
+    // bs's checkpoint belongs to the caller's scope (per-trigger
+    // callers materialize the result inside their trigger)
     csh.join(bsh,
         csh("g") === bsh("g") &&
           $"n_a" * q >= $"n_b" * p && $"n_b" * q >= $"n_a" * p &&
@@ -156,7 +156,7 @@ object Llm {
     import s.implicits._
     // localCheckpoint: consumed by the element stream (df + ranks)
     // and both sides of the verify join (cf. scoredCandidates).
-    val sets = sets0.localCheckpoint()
+    val sets = Checkpoints.local(sets0)
     val sh = sets.select($"doc_id", size($"gs").cast("long").as("n"),
       explode($"gs").as("g"))
     val dfreq = sh.groupBy($"g").agg(count(lit(1)).as("df"))
@@ -164,12 +164,11 @@ object Llm {
     // consume the prefix frame — without it each side re-runs
     // the df join + rank window (exchange reuse only covers the
     // window's INPUT, visible as twin Window nodes in the plan)
-    val pref = sh.join(dfreq, "g")
+    val pref = Checkpoints.local(sh.join(dfreq, "g")
       .withColumn("r", row_number()
         .over(Window.partitionBy($"doc_id").orderBy($"df", $"g"))
         .cast("long"))
-      .filter($"r" <= $"n" - expr(s"($p * n + $q - 1) DIV $q") + 1)
-      .localCheckpoint()
+      .filter($"r" <= $"n" - expr(s"($p * n + $q - 1) DIV $q") + 1))
     val cand = pref.as("x").join(pref.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id") &&
           col("x.n") * q >= col("y.n") * p && col("y.n") * q >= col("x.n") * p)
@@ -430,7 +429,7 @@ object Llm {
     // stream + both sides of the candidate-verify join); without it
     // each consumer re-runs the shingling projection (~1s each at
     // sf0.1). |docs| rows × ~140-element arrays — megabytes.
-    val docSets = shingleSets(docs).localCheckpoint()
+    val docSets = Checkpoints.local(shingleSets(docs))
     // Candidates come from a groupBy on (band, bsig) + in-bucket
     // pair expansion, NOT a bands-self-join: the self-join's two
     // identical inputs each re-execute the whole shingle+md5
@@ -469,8 +468,8 @@ object Llm {
     // docSets: verify-side truth (both pair sides); sig: bands +
     // both pair sides — each consumed ≥2× → materialize (the q21
     // localCheckpoint discipline)
-    val docSets = shingleSets(docs).localCheckpoint()
-    val sig = minhashSig(docSets).localCheckpoint()
+    val docSets = Checkpoints.local(shingleSets(docs))
+    val sig = Checkpoints.local(minhashSig(docSets))
     val cand = graft.ops.Lsh.expandPairsCapped(
       bandsOfSig(sig), Seq("band", "bsig"), "doc_id", lshMaxBucket)
     val sigArr = sig.select($"doc_id",
@@ -609,9 +608,8 @@ object Llm {
         // localCheckpoint: consumed by both sides of the shingle-level
         // self-join plus the sizes frame — materialize the (tiny)
         // per-doc set projection once (cf. q21's docSets)
-        val sets = t.select($"doc_id", $"lang", $"lb",
-          expr("array_distinct(transform(sequence(1, length(t100)-2), i -> substring(t100, i, 3)))").as("gs"))
-          .localCheckpoint()
+        val sets = Checkpoints.local(t.select($"doc_id", $"lang", $"lb",
+          expr("array_distinct(transform(sequence(1, length(t100)-2), i -> substring(t100, i, 3)))").as("gs")))
         // intersection sizes via a narrow shingle-level join + partial
         // agg: joining the wide shingle arrays onto every candidate pair
         // shuffles ~100-element array rows and dominated the runtime;
@@ -707,14 +705,13 @@ object Llm {
         // cluster-then-canonicalize, not a pair dump.
         val budget = s.conf.getOption("graft.q38.maxPairs")
           .map(_.toLong).getOrElse(32L << 20)
-        val pairs = cand
+        val pairs = Checkpoints.local(cand
           .withColumn("hamming", expr("CAST(bit_count(s1 ^ s2) AS BIGINT)"))
           .filter($"hamming" <= 3)
-          .select($"d1", $"d2", $"hamming")
-          .localCheckpoint()
+          .select($"d1", $"d2", $"hamming"))
         val n = pairs.count()
         if (n > budget) {
-          graft.ops.Checkpoints.release(pairs)
+          Checkpoints.release(pairs)
           throw new IllegalStateException(
             s"q38 would emit $n near-dup pairs (budget $budget): the " +
               "pair-materializing form is quadratic on dense corpora. " +
@@ -1139,13 +1136,13 @@ object Llm {
         import s.implicits._
         // one checkpoint, two filter consumers: the shingle+minhash
         // pair pipeline must not execute once per split
-        val pairs = Llm.all.find(_.name == "q21_minhash_lsh").get
-          .run(s, dir).select($"d1", $"d2").localCheckpoint()
+        val pairs = Checkpoints.local(Llm.all.find(_.name == "q21_minhash_lsh").get
+          .run(s, dir).select($"d1", $"d2"))
         val oldE = pairs.filter(($"d1" + $"d2") % 3 =!= 0)
         val batch = pairs.filter(($"d1" + $"d2") % 3 === 0)
         val labels = graft.ops.ConnectedComponents.auto(oldE)
         val out = graft.ops.ConnectedComponents.updateLabels(labels, batch)
-        graft.ops.Checkpoints.release(pairs)
+        Checkpoints.release(pairs)
         out
       },
       Some(s"""
@@ -1364,19 +1361,17 @@ object Llm {
         // the densify join; dense feeds both self-join sides — each
         // consumed ≥2× → materialize (the q21 localCheckpoint
         // discipline; both frames are |sources|×64-bounded)
-        val counts = docsSpread(s, dir)
+        val counts = Checkpoints.local(docsSpread(s, dir)
           .select($"source", explode(expr(
             "filter(split(lower(text), '[^a-z]+'), x -> x <> '')")).as("tok"))
           .groupBy($"source",
             (expr(Selection.h60("tok")) % 64).as("i"))
-          .agg(count(lit(1)).cast("long").as("c"))
-          .localCheckpoint()
+          .agg(count(lit(1)).cast("long").as("c")))
         val totals = counts.groupBy($"source").agg(sum($"c").cast("long").as("n"))
-        val dense = totals
+        val dense = Checkpoints.local(totals
           .crossJoin(broadcast(s.range(0, 64).select($"id".as("i"))))
           .join(counts, Seq("source", "i"), "left")
-          .select($"source", $"i", coalesce($"c", lit(0L)).as("c"), $"n")
-          .localCheckpoint()
+          .select($"source", $"i", coalesce($"c", lit(0L)).as("c"), $"n"))
         val joined = dense.as("a")
           .join(dense.as("b"),
             col("a.i") === col("b.i") && col("a.source") < col("b.source"))
@@ -1442,24 +1437,22 @@ object Llm {
         // incl. the distinct doc count) derive from it — materialized
         // for its two consumers, like the densified frame for its
         // self-join sides (the q21/q133 discipline)
-        val pdb = docsSpread(s, dir)
+        val pdb = Checkpoints.local(docsSpread(s, dir)
           .select(($"doc_id" % 10 === 3).cast("int").as("side"), $"lang", $"doc_id",
             explode(expr(
               "filter(split(lower(text), '[^a-z]+'), x -> x <> '')")).as("tok"))
           .groupBy($"side", $"lang", $"doc_id",
             (expr(Selection.h60("tok")) % 64).as("i"))
-          .agg(count(lit(1)).cast("long").as("c"))
-          .localCheckpoint()
+          .agg(count(lit(1)).cast("long").as("c")))
         val counts = pdb.groupBy($"side", $"lang", $"i")
           .agg(sum($"c").cast("long").as("c"))
         val tot = pdb.groupBy($"side", $"lang")
           .agg(sum($"c").cast("long").as("n"),
             expr("count(DISTINCT doc_id)").cast("long").as("n_docs"))
-        val dense = tot
+        val dense = Checkpoints.local(tot
           .crossJoin(broadcast(s.range(0, 64).select($"id".as("i"))))
           .join(counts, Seq("side", "lang", "i"), "left")
-          .select($"side", $"lang", $"i", coalesce($"c", lit(0L)).as("c"), $"n", $"n_docs")
-          .localCheckpoint()
+          .select($"side", $"lang", $"i", coalesce($"c", lit(0L)).as("c"), $"n", $"n_docs"))
         val joined = dense.filter($"side" === 1).as("a")
           .join(dense.filter($"side" === 0).as("b"),
             col("a.lang") === col("b.lang") && col("a.i") === col("b.i"))
@@ -1657,14 +1650,13 @@ object Llm {
         // |buckets|-sized, consumed by the cumulative pass AND the
         // totals — materialize so the corpus scan runs once (q133's
         // counts discipline)
-        val sides = table(s, dir, "documents")
+        val sides = Checkpoints.local(table(s, dir, "documents")
           .select(($"doc_id" % 10 === 3).cast("int").as("side"),
             expr("n_chars div 50").as("bkt"))
           .groupBy($"bkt")
           .agg(
             sum(when($"side" === 1, 1L).otherwise(0L)).cast("long").as("cd"),
-            sum(when($"side" === 0, 1L).otherwise(0L)).cast("long").as("cc"))
-          .localCheckpoint()
+            sum(when($"side" === 0, 1L).otherwise(0L)).cast("long").as("cc")))
         val w = Window.orderBy($"bkt".asc)
         val cum = sides
           .withColumn("fd", sum($"cd").over(w))
@@ -1734,13 +1726,12 @@ object Llm {
         import s.implicits._
         // consumed by CC, the edge-label join, and the direct-edge
         // pass — materialize once (the q21 docSets discipline)
-        val pairs = Llm.all.find(_.name == "q21_minhash_lsh").get
-          .run(s, dir).localCheckpoint()
+        val pairs = Checkpoints.local(Llm.all.find(_.name == "q21_minhash_lsh").get
+          .run(s, dir))
         val labels = graft.ops.ConnectedComponents.auto(
           pairs.select($"d1", $"d2"))
-        val e2 = pairs
-          .join(labels.select($"v".as("d1"), $"cluster_id"), "d1")
-          .localCheckpoint() // consumed by eagg AND direct
+        val e2 = Checkpoints.local(pairs
+          .join(labels.select($"v".as("d1"), $"cluster_id"), "d1")) // consumed by eagg AND direct
         val memb = labels.groupBy($"cluster_id")
           .agg(count(lit(1)).cast("long").as("n_members"))
         val eagg = e2.groupBy($"cluster_id").agg(
@@ -1996,8 +1987,7 @@ object Llm {
       "q192_split_leakage",
       (s, dir) => {
         import s.implicits._
-        val pairs = minhashLshPairs(docsSpread(s, dir), lshMaxBucket)
-          .localCheckpoint()
+        val pairs = Checkpoints.local(minhashLshPairs(docsSpread(s, dir), lshMaxBucket))
         pairs.select($"d1".as("doc_id"), $"d2".as("partner"), $"jac")
           .unionAll(pairs.select($"d2".as("doc_id"), $"d1".as("partner"), $"jac"))
           .withColumn("split", TrainPrep.splitOf($"doc_id"))
@@ -2051,25 +2041,25 @@ object Llm {
         // the EXCLUDED-state probe, the operator's per-batch cost
         val srcFp = graft.ops.Smb.sourceFingerprint(s, s"$dir/documents.parquet")
         val state = graft.ops.StateCache.ensure(s"q165_forget_$srcFp") { st =>
-          val csets = shingleSets(corpus).localCheckpoint()
-          try {
+          Checkpoints.scope {
+            val csets = Checkpoints.local(shingleSets(corpus))
             bandsOf(csets)
               .withColumn("bkey", concat_ws("|", $"band", $"bsig"))
               .select($"bkey", $"doc_id")
               .write.mode("overwrite").parquet(s"$st/bands/base")
             csets.write.mode("overwrite").parquet(s"$st/sets/base")
-          } finally graft.ops.Checkpoints.release(csets)
+          }
           graft.ops.Forget.tombstone(s, st,
             corpus.filter($"doc_id" % 19 === 3).select($"doc_id"), 0L)
         }
-        val bsets = shingleSets(batch).localCheckpoint()
+        val bsets = Checkpoints.local(shingleSets(batch))
         val seenBands = graft.ops.Forget.exclude(
           graft.ops.Layouts.readChildren(s, s"$state/bands",
             "bkey STRING, doc_id BIGINT"), s, state)
         // the incremental path's caller contract: the batch band frame
         // is consumed once per tier decision plus once per tier —
         // materialize it (the StreamCuration discipline)
-        val bbands = bandsOf(bsets).localCheckpoint()
+        val bbands = Checkpoints.local(bandsOf(bsets))
         val cand = graft.ops.Lsh.incrementalCandidatesFrom(
           s, seenBands, bbands, lshMaxBucket)
         val seenSets = graft.ops.Forget.exclude(

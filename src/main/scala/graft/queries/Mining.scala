@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -143,10 +144,9 @@ object Mining {
         // output once to executor-local storage and let the three
         // aggregation passes re-read it map-side (PlanSpec pins that
         // the explode never re-executes).
-        val bg = ws.select($"doc_id", posexplode(expr(
+        val bg = Checkpoints.local(ws.select($"doc_id", posexplode(expr(
           "transform(sequence(1, size(ws)-1), i -> struct(element_at(ws, i) AS w1, element_at(ws, i+1) AS w2))")))
-          .select($"doc_id", ($"pos" + 1).as("pos"), $"col.w1".as("w1"), $"col.w2".as("w2"))
-          .localCheckpoint()
+          .select($"doc_id", ($"pos" + 1).as("pos"), $"col.w1".as("w1"), $"col.w2".as("w2")))
         val c12 = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("c12"))
         val c1 = bg.groupBy($"w1").agg(count(lit(1)).as("c1"))
         bg.join(c12, Seq("w1", "w2")).join(c1, Seq("w1"))
@@ -610,10 +610,9 @@ object Mining {
       "q124_stupid_backoff",
       (s, dir) => {
         import s.implicits._
-        val ws = Llm.docsSpread(s, dir)
+        val ws = Checkpoints.local(Llm.docsSpread(s, dir)
           .select($"doc_id",
-            expr("filter(split(lower(text), '[^a-z]+'), x -> x <> '')").as("ws"))
-          .localCheckpoint()
+            expr("filter(split(lower(text), '[^a-z]+'), x -> x <> '')").as("ws")))
         val corpusWs = ws.filter($"doc_id" % 10 =!= 3)
         val ctoks = corpusWs.select(explode($"ws").as("w"))
         val c1 = ctoks.groupBy($"w").agg(count(lit(1)).cast("long").as("c1"))
@@ -2040,7 +2039,7 @@ object Mining {
     // keep its gh layout declared through the checkpoint so neither
     // consumer re-shuffles it on gh (the q94 treatment)
     graft.functions.Md5GramHashes.register(s)
-    val grams = graft.ops.Checkpoints.localByKey(
+    val grams = Checkpoints.localByKey(
       base.filter(length($"t200") >= 20)
         .select($"doc_id",
           posexplode(expr("md5_gram_hashes(t200, 20, 15)")).as(Seq("p0", "gh")))
@@ -2054,17 +2053,16 @@ object Mining {
     val byP = Window.partitionBy($"doc_id").orderBy($"p".asc)
     val prevEnd = max($"p" + 19)
       .over(byP.rowsBetween(Window.unboundedPreceding, -1))
-    val iv = rm
+    // three consumers (mid segments, tails, stats): materialize the
+    // interval frame (sized by the duplicated mass only) instead of
+    // recomputing the island windows three times
+    val iv = Checkpoints.local(rm
       .withColumn("ni",
         when(prevEnd.isNull || $"p" > prevEnd + 1, 1L).otherwise(0L))
       .withColumn("island",
         sum($"ni").over(byP.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy($"doc_id", $"island")
-      .agg(min($"p").as("rs"), (max($"p") + 19).as("re"))
-      // three consumers (mid segments, tails, stats): materialize the
-      // interval frame (sized by the duplicated mass only) instead of
-      // recomputing the island windows three times
-      .localCheckpoint()
+      .agg(min($"p").as("rs"), (max($"p") + 19).as("re")))
     val byRs = Window.partitionBy($"doc_id").orderBy($"rs".asc)
     val segs = iv.select($"doc_id",
         (coalesce(lag($"re", 1).over(byRs), lit(0L)) + 1).as("ks"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -408,11 +409,10 @@ object Relational {
       "q152_retention_cohorts",
       (s, dir) => {
         import s.implicits._
-        val d = table(s, dir, "events")
+        val d = Checkpoints.local(table(s, dir, "events")
           .select($"user_id",
             expr("unix_micros(ts) div 86400000000").as("day"))
-          .distinct()
-          .localCheckpoint() // consumed by first-day AND the matrix join
+          .distinct()) // consumed by first-day AND the matrix join
         val first = d.groupBy($"user_id").agg(min($"day").as("cohort_day"))
         d.join(first, "user_id")
           .groupBy($"cohort_day", ($"day" - $"cohort_day").as("offset_days"))
@@ -452,10 +452,9 @@ object Relational {
       "q153_rate_anomaly",
       (s, dir) => {
         import s.implicits._
-        val c = table(s, dir, "events")
+        val c = Checkpoints.local(table(s, dir, "events")
           .groupBy($"event_type", tsStr(date_trunc("hour", $"ts")).as("h"))
-          .agg(count(lit(1)).cast("long").as("n"))
-          .localCheckpoint() // consumed by the moments agg AND the test
+          .agg(count(lit(1)).cast("long").as("n"))) // consumed by the moments agg AND the test
         val m = c.groupBy($"event_type").agg(
           count(lit(1)).cast("long").as("hh"),
           sum($"n").cast("long").as("ss"),
@@ -508,7 +507,10 @@ object Relational {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val u = table(s, dir, "events")
+        // consumed by the max-day aggregate AND the crossJoin —
+        // materialize or the events scan+agg runs twice (the
+        // q152/q153 discipline)
+        val u = Checkpoints.local(table(s, dir, "events")
           .select($"user_id",
             expr("unix_micros(ts) div 86400000000").as("day"),
             $"value")
@@ -516,11 +518,7 @@ object Relational {
           .agg(
             max($"day").as("last_day"),
             count(lit(1)).cast("long").as("n_events"),
-            sum(dec($"value")).as("mon"))
-          // consumed by the max-day aggregate AND the crossJoin —
-          // materialize or the events scan+agg runs twice (the
-          // q152/q153 discipline)
-          .localCheckpoint()
+            sum(dec($"value")).as("mon")))
         val mx = u.agg(max($"last_day").as("max_day"))
         val nT = u.agg(count(lit(1)).cast("long").as("n"))
         val base = u.crossJoin(broadcast(mx))
@@ -586,11 +584,10 @@ object Relational {
       "q162_assoc_rules",
       (s, dir) => {
         import s.implicits._
-        val items = table(s, dir, "lineitem")
-          .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
-          // consumed by pairs (both sides), marginals, and the order
-          // count — one distinct shuffle, four consumers
-          .localCheckpoint()
+        // consumed by pairs (both sides), marginals, and the order
+        // count — one distinct shuffle, four consumers
+        val items = Checkpoints.local(table(s, dir, "lineitem")
+          .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct())
         val pairs = items.as("a").join(items.as("b"),
             col("a.o") === col("b.o") && col("a.p") < col("b.p"))
           .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
@@ -752,11 +749,10 @@ object Relational {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val cust = table(s, dir, "orders")
+        // consumed by the count AND the rank — materialize once
+        val cust = Checkpoints.local(table(s, dir, "orders")
           .groupBy($"o_custkey")
-          .agg(sum(dec($"o_totalprice")).as("rev"))
-          // consumed by the count AND the rank — materialize once
-          .localCheckpoint()
+          .agg(sum(dec($"o_totalprice")).as("rev")))
         val nT = cust.agg(count(lit(1)).cast("long").as("n"))
         val d = graft.ops.GlobalRank.withRank(
             cust, Seq($"rev".desc, $"o_custkey".asc), "rk",

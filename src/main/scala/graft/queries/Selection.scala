@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.functions._
 
 /** Data-selection and ranking operators — the passes that decide WHICH
@@ -39,11 +40,10 @@ object Selection {
     import s.implicits._
     // the (doc, word, tf) frame feeds both the length stats and the
     // query-term scoring — materialize once (q88 discipline)
-    val wc = Llm.docsSpread(s, dir)
+    val wc = Checkpoints.local(Llm.docsSpread(s, dir)
       .select($"doc_id", explode(expr(
         "filter(split(lower(text), '[^a-z]+'), x -> x <> '')")).as("w"))
-      .groupBy($"doc_id", $"w").agg(count(lit(1)).cast("long").as("tf"))
-      .localCheckpoint()
+      .groupBy($"doc_id", $"w").agg(count(lit(1)).cast("long").as("tf")))
     val dl = wc.groupBy($"doc_id").agg(sum($"tf").cast("long").as("dl"))
     val stats = dl.agg(
       sum($"dl").cast("long").as("sum_dl"),
@@ -280,12 +280,11 @@ object Selection {
         import s.implicits._
         // the token stream feeds three consumers (target LM, source LM,
         // and the scoring join) — materialize it once (q88 discipline)
-        val toks = Llm.docsSpread(s, dir)
+        val toks = Checkpoints.local(Llm.docsSpread(s, dir)
           .select($"doc_id", $"lang", posexplode(expr(
             "filter(split(lower(text), '[^a-z]+'), x -> x <> '')")))
           .select($"doc_id", $"lang", ($"pos" + 1).cast("long").as("pos"),
-            (expr(h60("col")) % 64).as("bh"))
-          .localCheckpoint()
+            (expr(h60("col")) % 64).as("bh")))
         val tgt = toks.filter($"lang" === "en")
           .groupBy($"bh").agg(count(lit(1)).cast("long").as("ct"))
         val src = toks.groupBy($"bh").agg(count(lit(1)).cast("long").as("cs"))
@@ -366,7 +365,7 @@ object Selection {
             "transform(sequence(1, size(ws)-1), i -> " +
               h60("concat(element_at(ws, i), ' ', element_at(ws, i+1))") + ")")).as("bh"))
           .groupBy($"doc_id", $"bh").agg(count(lit(1)).cast("long").as("cnt"))
-        val bgc = graft.ops.Checkpoints.localByKey(
+        val bgc = Checkpoints.localByKey(
           grams, "bh", s.sparkContext.defaultParallelism)
         val first = bgc.groupBy($"bh").agg(min($"doc_id").as("first_doc"))
         bgc.join(first, "bh")
@@ -1385,10 +1384,9 @@ object Selection {
         // consumers (bigram counts AND the vocabulary count) — the
         // q21 localCheckpoint discipline; without this the scale
         // comment's "read once" would be false by a factor of two
-        val trainToks = toksOf(docs.filter($"doc_id" % 10 < 8)).localCheckpoint()
-        val c2 = bigrams(trainToks)
-          .groupBy($"w1", $"w2").agg(count(lit(1)).cast("long").as("n2"))
-          .localCheckpoint() // feeds c1 AND the scoring join
+        val trainToks = Checkpoints.local(toksOf(docs.filter($"doc_id" % 10 < 8)))
+        val c2 = Checkpoints.local(bigrams(trainToks)
+          .groupBy($"w1", $"w2").agg(count(lit(1)).cast("long").as("n2"))) // feeds c1 AND the scoring join
         val c1 = c2.groupBy($"w1").agg(sum($"n2").cast("long").as("n1"))
         val v = trainToks
           .select(explode($"toks").as("w"))
@@ -1468,9 +1466,8 @@ object Selection {
         val cls = qualityClassifier(docs).select($"doc_id", $"margin")
         val gq = Mining.gopherRules(docs).select($"doc_id", $"pass")
         // consumed by the decile frame AND the totals
-        val j = cls.join(gq, Seq("doc_id"), "left")
-          .select($"doc_id", $"margin", coalesce($"pass", lit(0L)).as("p"))
-          .localCheckpoint()
+        val j = Checkpoints.local(cls.join(gq, Seq("doc_id"), "left")
+          .select($"doc_id", $"margin", coalesce($"pass", lit(0L)).as("p")))
         val t = j.agg(count(lit(1)).cast("long").as("n"),
           sum($"p").cast("long").as("np"))
         val d = graft.ops.GlobalRank.withRank(
@@ -1733,11 +1730,10 @@ object Selection {
         // |langs × sources × buckets|-bounded, so the checkpoint is
         // tiny; its blocks are reaped with the returned frame (the
         // one-shot convention).
-        val cells = docs.join(pass, Seq("doc_id"), "left")
+        val cells = Checkpoints.local(docs.join(pass, Seq("doc_id"), "left")
           .groupBy($"lang", $"source", $"len_bucket")
           .agg(count(lit(1)).cast("long").as("n"),
-            sum(coalesce($"pass", lit(0L))).cast("long").as("n_pass"))
-          .localCheckpoint()
+            sum(coalesce($"pass", lit(0L))).cast("long").as("n_pass")))
         val tot = cells.agg(sum($"n").cast("long").as("n_tot"),
           sum($"n_pass").cast("long").as("pass_tot"))
         val d380 = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
@@ -1863,11 +1859,10 @@ object Selection {
     val wu = Window.partitionBy($"u").orderBy($"sim".desc, $"v".asc)
     val wv = Window.partitionBy($"v").orderBy($"sim".desc, $"u".asc)
     // one sim frame feeds both rank windows and the margin scoring
-    val rk = src.join(tgt, "cell")
+    val rk = Checkpoints.local(src.join(tgt, "cell")
       .select($"u", $"v", expr("cosine_sim(ea, eb)").as("sim"))
       .withColumn("ru", row_number().over(wu))
-      .withColumn("rv", row_number().over(wv))
-      .localCheckpoint()
+      .withColumn("rv", row_number().over(wv)))
     def knnAvg(key: String, rkCol: String, out: String) =
       rk.filter(col(rkCol) <= 4)
         .groupBy(col(key))
@@ -1897,11 +1892,10 @@ object Selection {
       .toDF("doc_id", "idx", "tok")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"doc_id").orderBy($"idx".asc)
-    toks.withColumn("w2", lead($"tok", 1).over(w))
+    Checkpoints.local(toks.withColumn("w2", lead($"tok", 1).over(w))
       .filter($"w2".isNotNull && $"tok" =!= $"w2")
       .select(least($"tok", $"w2").as("a"), greatest($"tok", $"w2").as("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) behind
@@ -1918,9 +1912,8 @@ object Selection {
   private[graft] def labelProp(edges: org.apache.spark.sql.DataFrame, rounds: Int): org.apache.spark.sql.DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e2 = edges.select($"a".as("u"), $"b".as("v"))
-      .unionAll(edges.select($"b".as("u"), $"a".as("v")))
-      .localCheckpoint()
+    val e2 = Checkpoints.local(edges.select($"a".as("u"), $"b".as("v"))
+      .unionAll(edges.select($"b".as("u"), $"a".as("v"))))
     var lbl = e2.select($"v").distinct().select($"v", $"v".as("lbl"))
     (1 to rounds).foreach { _ =>
       lbl = e2.join(lbl.select($"v".as("u"), $"lbl"), "u")
@@ -1944,7 +1937,7 @@ object Selection {
     val edges = bigramEdges(docs)
     val deg = edges.select($"a".as("v")).unionAll(edges.select($"b".as("v")))
       .groupBy($"v").agg(count(lit(1)).cast("long").as("deg"))
-    val dirE = edges
+    val dirE = Checkpoints.local(edges
       .join(deg.select($"v".as("a"), $"deg".as("da")), "a")
       .join(deg.select($"v".as("b"), $"deg".as("db")), "b")
       .select(
@@ -1953,8 +1946,7 @@ object Selection {
             $"da".as("ds"), $"db".as("dd")))
           .otherwise(struct($"b".as("src"), $"a".as("dst"),
             $"db".as("ds"), $"da".as("dd"))).as("e"))
-      .select($"e.src".as("src"), $"e.dst".as("dst"), $"e.dd".as("dd"))
-      .localCheckpoint()
+      .select($"e.src".as("src"), $"e.dst".as("dst"), $"e.dd".as("dd")))
     val wedges = dirE.select($"src", $"dst".as("x"), $"dd".as("dx"))
       .join(dirE.select($"src", $"dst".as("y"), $"dd".as("dy")), "src")
       .filter($"dx" < $"dy" || ($"dx" === $"dy" && $"x" < $"y"))
@@ -1989,11 +1981,10 @@ object Selection {
   private def classifierEvidence(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val toks = docs
+    val toks = Checkpoints.local(docs
       .select($"doc_id", $"lang", explode(expr(
         "filter(split(lower(text), '[^a-z]+'), x -> x <> '')")).as("tok"))
-      .select($"doc_id", $"lang", (expr(h60("tok")) % 256).as("bh"))
-      .localCheckpoint()
+      .select($"doc_id", $"lang", (expr(h60("tok")) % 256).as("bh")))
     val counts = toks.groupBy($"bh").agg(
       count(lit(1)).cast("long").as("c"),
       sum(when($"lang" === "en", 1L).otherwise(0L)).cast("long").as("cp"))
@@ -2071,13 +2062,11 @@ object Selection {
     import org.apache.spark.sql.expressions.Window
     // (doc, word, tf) feeds dl, df, anchor terms AND candidate
     // scoring — materialize once (the q95 discipline)
-    val wc = docs
+    val wc = Checkpoints.local(docs
       .select($"doc_id", explode(expr(
         "filter(split(lower(text), '[^a-z]+'), x -> x <> '')")).as("w"))
-      .groupBy($"doc_id", $"w").agg(count(lit(1)).cast("long").as("tf"))
-      .localCheckpoint()
-    val dl = wc.groupBy($"doc_id").agg(sum($"tf").cast("long").as("dl"))
-      .localCheckpoint() // consumed by stats + the scoring join
+      .groupBy($"doc_id", $"w").agg(count(lit(1)).cast("long").as("tf")))
+    val dl = Checkpoints.local(wc.groupBy($"doc_id").agg(sum($"tf").cast("long").as("dl"))) // consumed by stats + the scoring join
     val stats = dl.agg(
       sum($"dl").cast("long").as("sum_dl"),
       count(lit(1)).cast("long").as("nd"))
@@ -2130,7 +2119,7 @@ object Selection {
         expr("aggregate(xs, CAST(0.0 AS DOUBLE), (a, e) -> a + e.ts)").as("score"))
     // q21's verified LSH pairs: consumed by the exclusion AND the
     // positive pick — materialize once
-    val pairs = Llm.minhashLshPairs(docs, Llm.lshMaxBucket).localCheckpoint()
+    val pairs = Checkpoints.local(Llm.minhashLshPairs(docs, Llm.lshMaxBucket))
     val ndup = pairs.select($"d1".as("anchor_id"), $"d2".as("doc_id"))
       .union(pairs.select($"d2".as("anchor_id"), $"d1".as("doc_id")))
     val fps = docs.select($"doc_id", md5($"text").as("fp"))

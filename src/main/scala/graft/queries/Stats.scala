@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.Sql._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -341,11 +342,10 @@ object Stats {
       "q123_cms_counts",
       (s, dir) => {
         import s.implicits._
-        val toks = graft.queries.Llm.docsSpread(s, dir)
+        val toks = Checkpoints.local(graft.queries.Llm.docsSpread(s, dir)
           .select($"lang".as("key"),
             explode(split(lower($"text"), "[^a-z]+")).as("v"))
-          .filter($"v" =!= "")
-          .localCheckpoint() // feeds counters, probe grid AND exact counts
+          .filter($"v" =!= "")) // feeds counters, probe grid AND exact counts
         val cnts = graft.ops.CmsState.counters(toks, "key", "v", 4, 1024)
         val items = toks.select($"key").distinct()
           .crossJoin(broadcast(
@@ -551,9 +551,8 @@ object Stats {
       "q170_shuffle_skew",
       (s, dir) => {
         import s.implicits._
-        val keys = table(s, dir, "lineitem")
-          .groupBy($"l_suppkey").agg(count(lit(1)).cast("long").as("kn"))
-          .localCheckpoint()
+        val keys = Checkpoints.local(table(s, dir, "lineitem")
+          .groupBy($"l_suppkey").agg(count(lit(1)).cast("long").as("kn")))
         val hashed = keys.withColumn("h", expr(
           "CAST(conv(substr(md5(CAST(l_suppkey AS STRING)), 1, 15), 16, 10) AS BIGINT)"))
           .select($"kn", $"h",
@@ -677,10 +676,9 @@ object Stats {
       "q181_winsorized_stats",
       (s, dir) => {
         import s.implicits._
-        val v = table(s, dir, "lineitem")
+        val v = Checkpoints.local(table(s, dir, "lineitem")
           .select(dec($"l_extendedprice").as("v"),
-            $"l_orderkey", $"l_linenumber")
-          .localCheckpoint()
+            $"l_orderkey", $"l_linenumber"))
         val ranked = graft.ops.GlobalRank.withRank(
           v, Seq($"v".asc, $"l_orderkey".asc, $"l_linenumber".asc),
           "rk", s.sparkContext.defaultParallelism)
@@ -947,20 +945,19 @@ object Stats {
         // rows into |o⋈l|, so cc coalesces to 0 rather than the
         // inner join silently dropping the order and under-predicting
         // the orders-first intermediate
-        val bridge = oc
+        val bridge = Checkpoints.local(oc
           .join(co, Seq("k"), "left")
           .join(lo, oc("o_orderkey") === lo("ok"), "left")
           .select($"k", $"o_orderkey",
             coalesce($"cc", lit(0L)).as("cc"),
-            coalesce($"cl", lit(0L)).as("cl"))
-          .localCheckpoint()
+            coalesce($"cl", lit(0L)).as("cl")))
         val coFirst = summed(
           bridge.select($"cc".as("contrib")), "customer_orders_first")
         val olFirst = summed(
           bridge.select($"cl".as("contrib")), "orders_lineitem_first")
         val fin = summed(
           bridge.select(guardedMul("cc", "cl").as("contrib")), "final")
-        val inter = coFirst.unionAll(olFirst).localCheckpoint()
+        val inter = Checkpoints.local(coFirst.unionAll(olFirst))
         val best = inter.orderBy($"rows".asc, $"order_name".asc).limit(1)
           .select($"order_name".as("advised"), lit(1L).as("one"))
         inter.unionAll(fin.select($"order_name", $"rows"))

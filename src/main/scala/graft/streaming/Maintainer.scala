@@ -5,8 +5,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import scala.collection.mutable.ArrayBuffer
-
 /** The exactly-once trigger skeleton every streaming maintainer runs
   * on — the one place that knows the protocol.
   *
@@ -30,14 +28,17 @@ import scala.collection.mutable.ArrayBuffer
   *     ([[foldCommitted]]) — a crashed attempt's own child must stay
   *     unfolded, or the replay's own-batch exclusion cannot see it
   *     inside a `fold_` name and the batch is judged against itself;
-  *  4. every checkpoint a trigger pins or owns through its
-  *     [[Trigger]] is released when the trigger ends, on success AND
-  *     failure — a retrying trigger that failed would otherwise leak
-  *     one batch of blocks per attempt.
+  *  4. each guarded trigger body runs inside one
+  *     [[Checkpoints.scope]]: every checkpoint the trigger takes
+  *     ([[Checkpoints.local]], its ops' own included) is released
+  *     when the trigger ends, on success AND failure — a retrying
+  *     trigger that failed would otherwise leak one batch of blocks
+  *     per attempt.
   *
   * Maintainers whose state merge is idempotent (HLL max, CMS sums
   * over per-batch children, skyline, lexical postings, decontam
-  * reports) need no marker and use only [[start]] and [[scope]].
+  * reports) need no marker and use only [[start]] and
+  * [[Checkpoints.scope]].
   *
   * Append-only layouts (the IVF / IVF-PQ cells [[StreamIndex]] and
   * [[StreamSemDedup]] maintain) cannot overwrite a per-batch child, so
@@ -46,32 +47,6 @@ import scala.collection.mutable.ArrayBuffer
   * use a transactional table format in production.
   */
 object Maintainer {
-
-  /** One trigger's checkpoint ownership: frames pinned or handed over
-    * here are released when the enclosing [[scope]] closes.
-    */
-  final class Trigger private[Maintainer] () {
-    private val owned = ArrayBuffer.empty[DataFrame]
-
-    /** `localCheckpoint` `df`, released when the trigger ends. */
-    def pin(df: DataFrame): DataFrame = own(df.localCheckpoint())
-
-    /** Take ownership of a frame that already reads checkpoints: every
-      * checkpoint leaf of its plan is released when the trigger ends
-      * ([[Checkpoints.release]] walks the whole plan).
-      */
-    def own(df: DataFrame): DataFrame = { owned += df; df }
-
-    private[Maintainer] def close(): Unit = owned.foreach(Checkpoints.release)
-  }
-
-  /** Run `body` with a fresh [[Trigger]], releasing everything it
-    * pinned or owns on the way out, on success and on failure.
-    */
-  def scope[A](body: Trigger => A): A = {
-    val t = new Trigger
-    try body(t) finally t.close()
-  }
 
   /** Wire `source` to `trigger` through foreachBatch, the sink
     * checkpoint at `checkpoint`.
@@ -85,15 +60,15 @@ object Maintainer {
 
   /** One guarded trigger: skip a replay at or below the marker at
     * `guard`, advance the marker on an empty batch, otherwise run
-    * `body` inside a trigger scope and write the marker LAST. Returns
-    * whether `body` ran.
+    * `body` inside a [[Checkpoints.scope]] and write the marker LAST.
+    * Returns whether `body` ran.
     */
   def once(batch: DataFrame, guard: String, batchId: Long)(
-      body: Trigger => Unit): Boolean = {
+      body: => Unit): Boolean = {
     val spark = batch.sparkSession
     if (batchId <= committedBatch(spark, guard)) return false
     val wrote = !batch.isEmpty
-    if (wrote) scope(body)
+    if (wrote) Checkpoints.scope(body)
     writeCommitted(spark, guard, batchId)
     wrote
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -72,8 +73,8 @@ object StreamAnchors {
       stateDir: String,
       batchId: Long): Boolean = {
     val guard = s"$stateDir/agg"
-    Maintainer.once(batchDocs, guard, batchId) { t =>
-      val delta = graft.queries.Crawl.withOutlinks(t.pin(batchDocs))
+    Maintainer.once(batchDocs, guard, batchId) {
+      val delta = graft.queries.Crawl.withOutlinks(Checkpoints.local(batchDocs))
         .filter(col("kind") =!= "skip")
         .withColumn("src_host",
           expr("regexp_extract(src_url, '^https?://([^/]+)', 1)"))

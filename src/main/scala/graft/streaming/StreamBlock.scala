@@ -57,11 +57,10 @@ object StreamBlock {
       batchId: Long,
       minDocs: Int = 3,
       blockTokens: Int = 10): Boolean =
-    Maintainer.once(batch, s"$stateDir/blocks", batchId) { t =>
-      // probe localCheckpoints its output — owned by the trigger
-      t.own(BlockState.probe(batch, stateDir,
+    Maintainer.once(batch, s"$stateDir/blocks", batchId) {
+      BlockState.probe(batch, stateDir,
           minDocs = minDocs, blockTokens = blockTokens,
-          commit = true, batchId = Some(batchId)))
+          commit = true, batchId = Some(batchId))
         .withColumn("batch_id", lit(batchId))
         .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
     }

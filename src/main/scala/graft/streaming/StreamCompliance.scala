@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -92,11 +93,11 @@ object StreamCompliance {
       batchId: Long): Boolean = {
     val guard = s"$stateDir/audit"
     import spark.implicits._
-    Maintainer.once(batchFetches, guard, batchId) { t =>
-      val b = t.pin(batchFetches)
+    Maintainer.once(batchFetches, guard, batchId) {
+      val b = Checkpoints.local(batchFetches)
       // judged feeds two aggregates (delta + unjudged trailer) —
       // materialize once
-      val j = t.pin(b.join(
+      val j = Checkpoints.local(b.join(
         verdicts.select($"url", $"domain", $"allowed"), Seq("url"), "left"))
       val delta = j.filter($"domain".isNotNull)
         .groupBy($"domain", $"url", $"allowed")

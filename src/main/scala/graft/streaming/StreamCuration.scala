@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{CurationPipeline, Lsh}
+import graft.ops.{Checkpoints, CurationPipeline, Lsh}
 import graft.queries.Llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -93,11 +93,11 @@ object StreamCuration {
       batchId: Long,
       maxBucket: Int = Llm.lshMaxBucket): Boolean = {
     import spark.implicits._
-    Maintainer.once(batchDocs, s"$stateDir/state", batchId) { t =>
-      val docs = t.pin(batchDocs)
+    Maintainer.once(batchDocs, s"$stateDir/state", batchId) {
+      val docs = Checkpoints.local(batchDocs)
       // in-batch signature frames, each consumed more than once
-      val sets = t.pin(Llm.shingleSets(docs))
-      val bands = t.pin(Llm.bandsOf(sets)
+      val sets = Checkpoints.local(Llm.shingleSets(docs))
+      val bands = Checkpoints.local(Llm.bandsOf(sets)
         .withColumn("bkey", concat_ws("|", col("band"), col("bsig"))))
 
       // 1. gate → fingerprint → exact dedup (batch-local min + state).
@@ -121,7 +121,7 @@ object StreamCuration {
       // BIGINT") once to migrate; its null-doc_id rows keep suppressing
       // duplicates but cannot be selectively forgotten (rebuild the
       // root for full forget coverage of pre-upgrade docs).
-      val fp = t.pin(CurationPipeline.qualityGate(docs)
+      val fp = Checkpoints.local(CurationPipeline.qualityGate(docs)
         .withColumn("fp", md5(trim(regexp_replace(lower(col("text")), "[ \\t\\n\\x0B\\f\\r]+", " ")))))
       val seenFps = graft.ops.Forget.exclude(
         readState(spark, s"$stateDir/fps", "fp STRING, doc_id BIGINT", batchId),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -69,13 +70,13 @@ object StreamFrontier {
       batchId: Long): Boolean = {
     val guard = s"$stateDir/seen"
     import spark.implicits._
-    Maintainer.once(batchUrls, guard, batchId) { t =>
+    Maintainer.once(batchUrls, guard, batchId) {
       // within-batch alias collapse: ONE row per canonical key — a
       // row_number, not a min-url filter, because the same url string
       // discovered twice in one batch (two referrer pages) would pass
       // a min filter twice and enter the frontier twice (the r15
       // self-review catch); (url, doc_id) makes the pick deterministic
-      val kept = graft.queries.Mining.withCanonUrl(t.pin(batchUrls))
+      val kept = graft.queries.Mining.withCanonUrl(Checkpoints.local(batchUrls))
         .withColumn("rn", row_number().over(
           Window.partitionBy($"canon_url").orderBy($"url".asc, $"doc_id".asc)))
         .filter($"rn" === 1)
@@ -85,7 +86,7 @@ object StreamFrontier {
       val seenBefore = graft.ops.Layouts.readChildren(
         spark, guard, seenDdl, beforeBatch = Some(batchId))
       // fresh is consumed twice (output + state) — materialize once
-      val fresh = t.pin(kept.join(seenBefore, Seq("canon_url"), "left_anti")
+      val fresh = Checkpoints.local(kept.join(seenBefore, Seq("canon_url"), "left_anti")
         .select($"doc_id", $"url", $"canon_url"))
       fresh.write.mode("overwrite").parquet(s"$outDir/new/b$batchId")
       fresh.select($"canon_url")

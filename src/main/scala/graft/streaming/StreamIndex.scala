@@ -56,6 +56,6 @@ object StreamIndex {
       checkpoint: String,
       append: DataFrame => Unit): StreamingQuery =
     Maintainer.start(source, checkpoint) { (batch, id) =>
-      Maintainer.once(batch, path, id)(_ => append(batch))
+      Maintainer.once(batch, path, id)(append(batch))
     }
 }

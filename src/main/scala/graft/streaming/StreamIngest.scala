@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{Html, Warc}
+import graft.ops.{Checkpoints, Html, Warc}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -66,18 +66,17 @@ object StreamIngest {
   /** The batch parse+extract — ONE shape shared by the per-trigger
     * path and the spec's one-shot equivalence run. Returns (pages,
     * quarantine) for the given (file, bytes) corpus; both read the
-    * one-pass parse pinned in `t`.
+    * one-pass parse, checkpointed into the caller's scope.
     */
-  private[graft] def ingest(
-      t: Maintainer.Trigger, batch: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def ingest(batch: DataFrame): (DataFrame, DataFrame) = {
     val s = batch.sparkSession
     import s.implicits._
     // ONE decompress+frame pass for both consumers: records and the
     // per-file audit trailers come out of the SAME cursor
     // (Warc.recordsAudited) — on gzipped crawls inflation dominates,
     // so a separate audit pass would double ingest CPU. The combined
-    // frame is materialized once, owned by the caller's trigger.
-    val combined = t.pin(Warc.recordsAudited(batch))
+    // frame is materialized once.
+    val combined = Checkpoints.local(Warc.recordsAudited(batch))
     // envelope strip via Warc.http*Col — the guarded form (a record
     // body without an HTTP envelope passes through whole; a naked
     // locate()+substring drops its first 3 chars on no-match)
@@ -104,8 +103,8 @@ object StreamIngest {
       stateDir: String,
       outDir: String,
       batchId: Long): Boolean = {
-    Maintainer.once(batchFiles, s"$stateDir/state", batchId) { t =>
-      val (pages, quarantine) = ingest(t, t.pin(batchFiles))
+    Maintainer.once(batchFiles, s"$stateDir/state", batchId) {
+      val (pages, quarantine) = ingest(Checkpoints.local(batchFiles))
       pages.write.mode("overwrite").parquet(s"$outDir/pages/b$batchId")
       quarantine.write.mode("overwrite").parquet(s"$outDir/quar/b$batchId")
     }

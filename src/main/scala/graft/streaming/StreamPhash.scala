@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{Lsh, Multimodal}
+import graft.ops.{Checkpoints, Lsh, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -103,21 +103,19 @@ object StreamPhash {
       maxBucket: Int = 256,
       fingerprint: DataFrame => DataFrame = Multimodal.imagePhash): Boolean = {
     import spark.implicits._
-    Maintainer.once(batchMedia, s"$stateDir/state", batchId) { t =>
-      val ph = t.pin(fingerprint(batchMedia))
+    Maintainer.once(batchMedia, s"$stateDir/state", batchId) {
+      val ph = Checkpoints.local(fingerprint(batchMedia))
       // forget tombstones honored at probe time
       val seenPh = graft.ops.Forget.exclude(
         graft.ops.Layouts.readChildren(
           spark, s"$stateDir/ph", outDdl, beforeBatch = Some(batchId)),
         spark, stateDir)
 
-      // the candidate frame reads the keyed band checkpoint
-      // simhashCandidates materializes — owned by the trigger
-      val inBatch = t.own(Lsh.simhashCandidates(
+      val inBatch = Lsh.simhashCandidates(
         Multimodal.phashBands(ph),
         bandBits = Multimodal.PhashBandBits,
         subBands = Multimodal.PhashSubBands,
-        subBits = Multimodal.PhashSubBits, maxBucket = maxBucket))
+        subBits = Multimodal.PhashSubBits, maxBucket = maxBucket)
       val cross = Lsh.incrementalSimhashCandidates(
         seenPh.select($"doc_id", $"phash".as("simhash")),
         ph.select($"doc_id", $"phash".as("simhash")),

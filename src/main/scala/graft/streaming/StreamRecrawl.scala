@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,8 +95,8 @@ object StreamRecrawl {
       batchId: Long): Boolean = {
     val guard = s"$stateDir/fetch"
     import spark.implicits._
-    Maintainer.once(batchFetches, guard, batchId) { t =>
-      val b = t.pin(batchFetches)
+    Maintainer.once(batchFetches, guard, batchId) {
+      val b = Checkpoints.local(batchFetches)
       // arrival-contract guard, WITHIN-batch leg: two fetches of one
       // url on the same day make the LAG order (and so n_changes /
       // last_fp) nondeterministic and can produce span=0 with
@@ -136,7 +137,7 @@ object StreamRecrawl {
           $"last_fp".as("s_last_fp"))
       // delta is consumed three times (guard count + state child +
       // schedule output) — materialize once
-      val delta = t.pin(bagg.join(prior, Seq("url"), "left")
+      val delta = Checkpoints.local(bagg.join(prior, Seq("url"), "left")
         .withColumn("chg_add", expr(
           "CAST(internal + CASE WHEN s_last_fp IS NOT NULL" +
             " AND first_fp <> s_last_fp THEN 1 ELSE 0 END AS BIGINT)")))

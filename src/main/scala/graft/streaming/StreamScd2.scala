@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,8 +60,8 @@ object StreamScd2 {
       stateDir: String,
       batchId: Long): Boolean = {
     import spark.implicits._
-    Maintainer.once(batch, s"$stateDir/state", batchId) { t =>
-      val b = t.pin(batch)
+    Maintainer.once(batch, s"$stateDir/state", batchId) {
+      val b = Checkpoints.local(batch)
       require(b.groupBy($"doc_id").count().filter($"count" > 1).isEmpty,
         s"StreamScd2 batch $batchId carries multiple operations for one " +
           "doc_id — compact the CDC feed to one op per doc per batch, or " +

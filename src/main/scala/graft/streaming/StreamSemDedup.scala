@@ -41,22 +41,20 @@ object StreamSemDedup {
       checkpoint: String,
       tau: Double): StreamingQuery =
     Maintainer.start(source, checkpoint) { (batch, id) =>
-      Maintainer.once(batch, path, id)(t => appendSurvivors(t, batch, model, path, tau))
+      Maintainer.once(batch, path, id)(appendSurvivors(batch, model, path, tau))
     }
 
   /** One trigger's work: verdicts against the live layout, survivors
     * appended into their cell directories. The verdict frame already
-    * carries the cell assignment — no second assignment pass; the
-    * batch assignment pruneIncremental checkpointed is owned by `t`.
+    * carries the cell assignment — no second assignment pass.
     */
   private[graft] def appendSurvivors(
-      t: Maintainer.Trigger,
       batch: DataFrame,
       model: IvfIndex.IvfModel,
       path: String,
       tau: Double): Unit = {
     val spark = batch.sparkSession
-    val verdicts = t.own(SemDedup.pruneIncremental(spark, path, model, batch, tau))
+    val verdicts = SemDedup.pruneIncremental(spark, path, model, batch, tau)
     val keep = verdicts
       .filter(col("keep") === 1L)
       .select(col("vec_id"), col("cell"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -63,9 +64,9 @@ object StreamTopK {
       .filter($"tok" =!= "").as[String]
     val summary = graft.queries.Stats.heavyHitters(toks, k)
     val state = readState(spark, stateDir, beforeBatch = Some(batchId))
-    Maintainer.scope { trig =>
+    Checkpoints.scope {
       // two consumers (threshold probe, compress filter)
-      val merged = trig.pin(state.union(summary)
+      val merged = Checkpoints.local(state.union(summary)
         .groupBy($"tok").agg(sum($"est").cast("long").as("est")))
       // (k+1)-th largest count = the MG decrement; 0 when ≤ k survivors.
       // k+1 rows to the driver — k-bounded by contract, like probe cell

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Multimodal
+import graft.ops.{Checkpoints, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -78,8 +78,8 @@ object StreamVideoDup {
       q: Int = 5,
       chunkBytes: Int = 64): Boolean = {
     import spark.implicits._
-    Maintainer.once(batchMedia, s"$stateDir/state", batchId) { t =>
-      val sets = t.pin(Multimodal.videoFrameHashes(batchMedia, chunkBytes)
+    Maintainer.once(batchMedia, s"$stateDir/state", batchId) {
+      val sets = Checkpoints.local(Multimodal.videoFrameHashes(batchMedia, chunkBytes)
         .groupBy($"doc_id")
         .agg(array_distinct(collect_list($"fhash")).as("gs")))
       val statePosts = graft.ops.Forget.exclude(

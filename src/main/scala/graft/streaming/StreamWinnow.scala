@@ -54,12 +54,10 @@ object StreamWinnow {
       outDir: String,
       batchId: Long,
       w: Int): Boolean =
-    Maintainer.once(batch, s"$stateDir/fps", batchId) { t =>
-      // the scored frame is checkpointed: the trigger owns it before
-      // the sink writes it
+    Maintainer.once(batch, s"$stateDir/fps", batchId) {
       WinnowState.probe(batch, stateDir, w, commit = true,
         batchId = Some(batchId),
-        sink = out => t.own(out).withColumn("batch_id", lit(batchId))
+        sink = out => out.withColumn("batch_id", lit(batchId))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId"))
     }
 

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * the frame is provably under budget; a supplied knownCount must
   * decide with ZERO materialization (no checkpoint in the plan); the
   * measured path must decide off a localCheckpoint the downstream
-  * join reuses; the managed variant's hook must release the blocks.
+  * join reuses; the enclosing Checkpoints.scope must release the
+  * blocks.
   */
 class BroadcastGateSpec extends SparkSuite {
 
@@ -44,21 +45,25 @@ class BroadcastGateSpec extends SparkSuite {
     assert(!hinted(over) && !checkpointed(over))
   }
 
-  test("managed hook releases the checkpoint blocks") {
+  test("the enclosing scope releases the measured path's checkpoint blocks") {
     import spark.implicits._
-    val (df, release) = Sql.broadcastIfSmallManaged((1L to 20L).toDF("k"), 100L)
-    assert(df.count() == 20L)
     // track the checkpoint's OWN rdd — global persistent-RDD counts
     // race the ContextCleaner under the shared test session
-    val rdd = df.queryExecution.analyzed.collectLeaves()
-      .collectFirst { case lr: LogicalRDD => lr.rdd }.get
-    assert(rdd.getStorageLevel.useMemory || rdd.getStorageLevel.useDisk)
-    release()
+    val rdd = graft.ops.Checkpoints.scope {
+      val df = Sql.broadcastIfSmall((1L to 20L).toDF("k"), 100L)
+      assert(df.count() == 20L)
+      val rdd = df.queryExecution.analyzed.collectLeaves()
+        .collectFirst { case lr: LogicalRDD => lr.rdd }.get
+      assert(rdd.getStorageLevel.useMemory || rdd.getStorageLevel.useDisk)
+      rdd
+    }
     assert(rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "release() left checkpoint blocks pinned")
-    // knownCount hook is a harmless no-op
-    val (_, noop) = Sql.broadcastIfSmallManaged(
-      (1L to 5L).toDF("k"), 100L, knownCount = Some(5L))
-    noop()
+      "the scope left checkpoint blocks pinned")
+    // the knownCount path checkpoints nothing: a scope around it is a
+    // harmless no-op
+    val known = graft.ops.Checkpoints.scope {
+      Sql.broadcastIfSmall((1L to 5L).toDF("k"), 100L, knownCount = Some(5L))
+    }
+    assert(known.count() == 5L)
   }
 }

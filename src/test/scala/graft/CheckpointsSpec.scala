@@ -69,6 +69,86 @@ class CheckpointsSpec extends SparkSuite {
     assert((ids -- before).isEmpty)
   }
 
+  test("a scope frees what it registered, on success and on throw") {
+    val before = ids
+    val n = Checkpoints.scope {
+      val df = Checkpoints.local(spark.range(300).toDF("x"))
+      assert((ids -- before).size == 1)
+      df.count()
+    }
+    assert(n == 300L)
+    assert((ids -- before).isEmpty, "the scope kept its checkpoint")
+    intercept[IllegalStateException] {
+      Checkpoints.scope {
+        Checkpoints.local(spark.range(10).toDF("x"))
+        assert((ids -- before).size == 1)
+        throw new IllegalStateException("query failed")
+      }
+    }
+    assert((ids -- before).isEmpty, "a throwing scope leaked its checkpoint")
+  }
+
+  test("a nested scope frees only its own registrations") {
+    val before = ids
+    Checkpoints.scope {
+      val outer = Checkpoints.local(spark.range(20).toDF("x"))
+      val outerIds = ids -- before
+      Checkpoints.scope {
+        Checkpoints.local(spark.range(30).toDF("x"))
+        assert((ids -- before).size == 2)
+      }
+      assert(ids -- before == outerIds, "the inner scope freed its parent's checkpoint")
+      assert(outer.count() == 20L)
+    }
+    assert((ids -- before).isEmpty)
+  }
+
+  test("local outside any scope registers nothing; only release frees it") {
+    val before = ids
+    val df = Checkpoints.local(spark.range(40).toDF("x"))
+    // an unrelated scope opened and closed later must not touch it
+    Checkpoints.scope { Checkpoints.local(spark.range(5).toDF("x")) }
+    assert((ids -- before).size == 1, "a scope freed a checkpoint taken outside it")
+    assert(df.count() == 40L)
+    Checkpoints.release(df)
+    assert((ids -- before).isEmpty)
+  }
+
+  test("own adopts a frame checkpointed on another thread") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val before = ids
+    Checkpoints.scope {
+      // the pool thread sees no scope: its checkpoint is registered
+      // nowhere until the spawning thread adopts it
+      val df = Await.result(
+        Future(Checkpoints.local(spark.range(50).toDF("x"))), 1.minute)
+      Checkpoints.scope { () }
+      assert((ids -- before).size == 1)
+      assert(Checkpoints.own(df).count() == 50L)
+    }
+    assert((ids -- before).isEmpty, "own did not hand the checkpoint to the scope")
+  }
+
+  test("checkpoint-heavy queries leave no storage behind their scopes") {
+    val dir = "/root/testdata/sf0.001"
+    // q240 is the fan-out site: its rank loops run on pool threads and
+    // the query adopts their results with Checkpoints.own
+    Seq("q94_ngram_novelty", "q108_exactsubstr_removal", "q110_block_boilerplate",
+      "q223_link_pagerank", "q227_link_hits", "q228_trustrank",
+      "q240_host_trust_audit").foreach { name =>
+      // the snapshot holds its RDDs strongly, so the ContextCleaner
+      // cannot drop an older entry mid-query and the sets compare exactly
+      val before = spark.sparkContext.getPersistentRDDs
+      val rows = Checkpoints.scope(SparkEntry.queries(name)(spark, dir).collect())
+      assert(rows.nonEmpty, s"$name returned no rows")
+      val after = spark.sparkContext.getPersistentRDDs.keySet
+      assert(after == before.keySet,
+        s"$name: left ${after -- before.keySet}, dropped ${before.keySet -- after}")
+    }
+  }
+
   /** Shuffle exchanges of `df`'s executed plan (run an action first). */
   private def exchanges(df: org.apache.spark.sql.DataFrame) =
     executedNodes(df).collect {

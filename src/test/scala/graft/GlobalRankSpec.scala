@@ -117,38 +117,51 @@ class GlobalRankSpec extends SparkSuite {
     }
   }
 
-  test("grouped managed variants clean up checkpoint blocks and broadcasts") {
+  private def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("grouped ranks free their checkpoint blocks when the scope closes") {
     import spark.implicits._
     val df = (0 until 500).map(i => ((i * 67) % 500, s"g${i % 3}", (i % 13).toLong))
       .toDF("id", "grp", "x")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, c1) = graft.ops.GlobalRank.withGroupRankManaged(
-      df, Seq("grp"), Seq($"x".asc, $"id".asc), "rk", numPartitions = 4)
-    val (summed, c2) = graft.ops.GlobalRank.withGroupPrefixSumManaged(
-      df, Seq("grp"), Seq($"id".asc), "x", "cum", numPartitions = 4)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.nonEmpty)
-    assert(ranked.collect().length === 500)
-    assert(summed.collect().length === 500)
-    c1(); c2()
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((added & after).isEmpty,
-      s"checkpoint blocks still registered after cleanup: ${added & after}")
+    val before = persisted
+    val added = graft.ops.Checkpoints.scope {
+      val ranked = graft.ops.GlobalRank.withGroupRank(
+        df, Seq("grp"), Seq($"x".asc, $"id".asc), "rk", numPartitions = 4)
+      val summed = graft.ops.GlobalRank.withGroupPrefixSum(
+        df, Seq("grp"), Seq($"id".asc), "x", "cum", numPartitions = 4)
+      val added = persisted -- before
+      assert(added.size >= 2, "each op should register its own checkpoint")
+      assert(ranked.collect().length === 500)
+      assert(summed.collect().length === 500)
+      added
+    }
+    assert((added & persisted).isEmpty,
+      s"checkpoint blocks still registered after the scope: ${added & persisted}")
   }
 
-  test("managed variant cleans up its checkpoint blocks and broadcast") {
+  test("withRank's blocks are freed by its scope, or by release outside one") {
     import spark.implicits._
     val df = (0 until 1000).map(i => ((i * 67) % 1000, i % 13)).toDF("id", "v")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (ranked, cleanup) = graft.ops.GlobalRank.withRankManaged(
+    def rank() = graft.ops.GlobalRank.withRank(
       df, Seq($"v".asc, $"id".asc), "g_rank", numPartitions = 4)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.nonEmpty, "localCheckpoint should register a persistent RDD")
-    // materialize fully, then release
+    val before = persisted
+    val added = graft.ops.Checkpoints.scope {
+      val ranked = rank()
+      val added = persisted -- before
+      assert(added.nonEmpty, "localCheckpoint should register a persistent RDD")
+      // materialize fully inside the scope
+      assert(ranked.collect().length === 1000)
+      added
+    }
+    assert((added & persisted).isEmpty,
+      s"checkpoint blocks still registered after the scope: ${added & persisted}")
+    // outside a scope, release on the RESULT walks to the rank's leaf
+    val ranked = rank()
+    val added2 = persisted -- before
+    assert(added2.nonEmpty)
     assert(ranked.collect().length === 1000)
-    cleanup()
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((added & after).isEmpty,
-      s"checkpoint blocks still registered after cleanup: ${added & after}")
+    graft.ops.Checkpoints.release(ranked)
+    assert((added2 & persisted).isEmpty,
+      s"release left checkpoint blocks registered: ${added2 & persisted}")
   }
 }

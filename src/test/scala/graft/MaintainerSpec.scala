@@ -5,7 +5,7 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import graft.ops.{BlockState, WinnowState}
+import graft.ops.{BlockState, Checkpoints, WinnowState}
 import graft.streaming._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -60,9 +60,9 @@ class MaintainerSpec extends SparkSuite {
     val guard = s"$root/state"
     val batch = spark.range(0, 40).toDF("id").withColumn("v", col("id") * 3)
     var runs = 0
-    def child(id: Long)(t: Maintainer.Trigger): Unit = {
+    def child(id: Long): Unit = {
       runs += 1
-      t.pin(batch).write.mode("overwrite").parquet(s"$root/out/b$id")
+      Checkpoints.local(batch).write.mode("overwrite").parquet(s"$root/out/b$id")
     }
 
     assert(Maintainer.committedBatch(spark, guard) === -1L)
@@ -79,14 +79,14 @@ class MaintainerSpec extends SparkSuite {
     assert(runs === 1)
     assert(Maintainer.committedBatch(spark, guard) === 1L)
 
-    // a body that throws releases what it pinned, and the marker stays
+    // a body that throws releases what it checkpointed, and the marker stays
     val before = persisted
     var pinned = Seq.empty[Int]
     intercept[IllegalStateException] {
-      Maintainer.once(batch, guard, 2L) { t =>
-        pinned = Seq(t.pin(batch), t.pin(batch.filter(col("id") > 3)))
+      Maintainer.once(batch, guard, 2L) {
+        pinned = Seq(Checkpoints.local(batch), Checkpoints.local(batch.filter(col("id") > 3)))
           .flatMap(checkpointIds)
-        assert(pinned.forall(persisted.contains), "pin must register its checkpoint")
+        assert(pinned.forall(persisted.contains), "local must register its checkpoint")
         throw new IllegalStateException("trigger failed")
       }
     }

@@ -56,11 +56,15 @@ class SkylineSpec extends SparkSuite {
     // single-partition exact pass on every fixture
     val anti = (500L to 560L).map(id => (id, id - 400L, 260L - id, 1L))
     val all = rows ++ anti
-    val (sky, cleanup) = graft.ops.Skyline.ofManaged(
-      all.toDF("id", "x", "y", "z").repartition(16),
-      Seq("x", "y", "z"), budgetRows = 1L)
-    val got = sky.select($"id").collect().map(_.getLong(0)).toSet
-    cleanup()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val got = graft.ops.Checkpoints.scope {
+      graft.ops.Skyline.of(
+        all.toDF("id", "x", "y", "z").repartition(16),
+        Seq("x", "y", "z"), budgetRows = 1L)
+        .select($"id").collect().map(_.getLong(0)).toSet
+    }
     assert(got == brute(all), s"shrink path diverged")
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      "the shrink rounds left a candidate checkpoint behind the scope")
   }
 }

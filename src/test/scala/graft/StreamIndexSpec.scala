@@ -65,7 +65,7 @@ class StreamIndexSpec extends SparkSuite {
     // a replayed batch id is a no-op even with data aboard
     val replay = all.filter($"vec_id" >= 400)
     assert(!Maintainer.once(replay, dir, batchId = 0L)(
-        _ => IvfIndex.appendSaved(replay, cents, dir)),
+        IvfIndex.appendSaved(replay, cents, dir)),
       "replayed batch id must be skipped")
     assert(spark.read.parquet(dir).count() == all.count(),
       "replayed batch appended anyway")

@@ -55,9 +55,9 @@ class StreamIngestSpec extends SparkSuite {
       assert(StreamIngest.processBatch(spark, df(b), stateDir, outDir, i.toLong))
     }
     // one-shot equivalence
-    // the one-shot parse is pinned in its own trigger scope
-    val want = graft.streaming.Maintainer.scope { t =>
-      val (wantPages, wantQuar) = StreamIngest.ingest(t, df(files))
+    // the one-shot parse is checkpointed into its own scope
+    val want = graft.ops.Checkpoints.scope {
+      val (wantPages, wantQuar) = StreamIngest.ingest(df(files))
       val want = wantPages.collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(3), r.getLong(5))).toSet
       assert(pageRows(outDir) === want)
