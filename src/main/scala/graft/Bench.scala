@@ -221,10 +221,10 @@ object Bench {
     // The stdout line of record is captured by the driver as a
     // 2000-char TAIL, and a 105-query map is ~3 KB alone — a full map
     // on stdout guarantees the artifact of record truncates mid-JSON
-    // (round-8: BENCH_r08.json parsed:null). So stdout carries a
-    // compact, self-contained line: real totals, the failure list, and
-    // the slowest warm queries; the complete maps live in the on-disk
-    // artifact it names.
+    // (round-8: evidence/archive/BENCH_r08.json parsed:null). So stdout
+    // carries a compact, self-contained line: real totals, the failure
+    // list, and the slowest warm queries; the complete maps live in the
+    // on-disk artifact it names.
     val slowest = okBest.sortBy(-_._2.sec).take(20)
     val compact =
       s"""{"metric":"total","value":${fmt(totalCold, "%.3f")},"unit":"sec"""" +

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataTypes
+import org.apache.spark.sql.types.{DataTypes, StructType}
 
 /** One engine query: a Spark DataFrame program plus (when SQL-expressible)
   * an equivalent ANSI SQL string the driver runs in DuckDB over the same
@@ -115,7 +115,30 @@ object Sql {
         if (m.count() <= budgetRows) broadcast(m) else m
     }
 
+  /** Read `dir/name.parquet`, inferring its schema once per session.
+    *
+    * Parquet schema inference (`mergeSchemasInParallel`) is a Spark job,
+    * and the input tables do not change during a run, so a per-session
+    * memo keeps the inferred `StructType` and later calls read with
+    * `spark.read.schema(memo)`, which starts no job. An entry is keyed on
+    * the path and is valid only while the path's
+    * [[graft.ops.Smb.sourceFingerprint]] (every leaf file's length and
+    * mtime) is the one it was inferred under, and while `nanosAsLong`
+    * (which `events` turns on) is what it was at inference or the entry
+    * was inferred with it off (see [[readMemo]]): a table rewritten in
+    * place is inferred again; one read before `events` is not. A failed
+    * read (a missing path) caches nothing and throws what an uncached
+    * read throws.
+    *
+    * Each call returns a NEW relation, never a cached `DataFrame`: a
+    * query that reads one table twice needs fresh expression ids on each
+    * side of a self-join. The memo holds sessions weakly, so a stopped
+    * or dropped session (specs make several, `newSession()` included)
+    * takes its entries with it; pool threads (q240) may call this
+    * concurrently.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       // A TIMESTAMP(NANOS) column would make Spark's parquet schema
       // converter throw before we can even look at the schema, so the
@@ -123,10 +146,35 @@ object Sql {
       // encodings. It DELIBERATELY stays set for the whole session: it
       // is consulted at plan-execution time (not here), so a
       // save/restore would break this very scan when it finally runs.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+      spark.conf.set(NanosAsLong, "true")
+      normalizeTs(readMemo(spark, path))
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      readMemo(spark, path)
+    }
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** session → path → (fingerprint, [[NanosAsLong]] at inference, schema) */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
+      String, (String, String, StructType)]]())
+
+  private def readMemo(spark: SparkSession, path: String): DataFrame = {
+    val memo = schemas.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+    val nanos = spark.conf.get(NanosAsLong, "false")
+    val fp = graft.ops.Smb.sourceFingerprint(spark, path)
+    // Inference with nanosAsLong off throws on a TIMESTAMP(NANOS)
+    // column, so a schema it returned has none and holds with the conf
+    // on too: reading events turns the conf on for the session, and the
+    // tables read before it are not inferred again.
+    Option(memo.get(path)) match {
+      case Some((`fp`, at, schema)) if at == "false" || at == nanos =>
+        spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        memo.put(path, (fp, nanos, df.schema))
+        df
     }
   }
 }

@@ -66,8 +66,9 @@ object Mining {
         // compiling this query's big generated kernel every pass, and
         // 8g-heap GC pressure), both root-caused and fixed round 7 —
         // committed same-window numbers: 1.45 s in-suite idle vs
-        // 1.91 s fresh-JVM isolated (BENCH_IDLE_r07.json /
-        // BENCH_ISOLATED.json, SCALING.md "Bench posture").
+        // 1.91 s fresh-JVM isolated
+        // (evidence/archive/BENCH_IDLE_r07.json / BENCH_ISOLATED.json,
+        // SCALING.md "Bench posture").
         graft.functions.Md5GramHashes.register(s)
         val grams = t.select($"doc_id",
           explode(expr("md5_gram_hashes(t200, 20, 15)")).as("gh"))
@@ -1862,44 +1863,56 @@ object Mining {
 
   /** q215's canonicalization as reusable column steps: adds
     * `canon_url` to a frame carrying a `url` column (intermediates
-    * dropped). MUST stay step-for-step mirrored with
+    * dropped, column order kept). MUST stay step-for-step mirrored with
     * [[urlCanonSqlCtes]] — the q215 oracle hash is the mirror's
-    * proof. */
+    * proof. The steps are grouped into the mirror's five dependency
+    * stages (c1…c4, then the final select), one `Project` each, so the
+    * analyser walks five plan levels, not one per step. */
   private[graft] def withCanonUrl(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import scala.collection.immutable.ListMap
     // the native single-pass decoder (one byte scan, codegen'd) — the
     // oracle mirror remains the 84-step replace chain in
     // [[urlCanonSqlCtes]]; PctDecodeSpec pins their equivalence on
     // valid inputs
     graft.functions.PctDecodeUnreserved.register(df.sparkSession)
-    df
-      .withColumn("nofrag", expr("regexp_extract(url, '^([^#]*)', 1)"))
-      .withColumn("scheme",
-        expr("lower(regexp_extract(nofrag, '^([A-Za-z]+)://', 1))"))
-      .withColumn("hostport",
-        expr("lower(regexp_extract(nofrag, '^[A-Za-z]+://([^/?]*)', 1))"))
-      .withColumn("host", expr("regexp_extract(hostport, '^([^:]*)', 1)"))
-      .withColumn("port", expr("regexp_extract(hostport, ':([0-9]+)$', 1)"))
-      .withColumn("portpart", expr(
-        "CASE WHEN port = '' OR (scheme = 'http' AND port = '80')" +
-          " OR (scheme = 'https' AND port = '443')" +
-          " THEN '' ELSE concat(':', port) END"))
-      .withColumn("pathq",
-        expr("regexp_extract(nofrag, '^[A-Za-z]+://[^/?]*(.*)$', 1)"))
-      .withColumn("rawpath", expr("regexp_extract(pathq, '^([^?]*)', 1)"))
-      .withColumn("rawq", expr("regexp_extract(pathq, '[?](.*)$', 1)"))
-      .withColumn("path2", expr(
-        "pct_decode_unreserved(regexp_replace(" +
-          "CASE WHEN rawpath = '' THEN '/' ELSE rawpath END, '//+', '/'))"))
-      .withColumn("q1", expr(
-        "array_join(array_sort(filter(split(rawq, '&'), x -> x <> ''" +
-          " AND NOT (x LIKE 'utm_%' OR x LIKE 'fbclid=%' OR x LIKE 'gclid=%'))), '&')"))
-      .withColumn("canon_url", expr(
-        "concat(scheme, '://', host, portpart, path2," +
-          " CASE WHEN q1 = '' THEN '' ELSE concat('?', q1) END)"))
-      .drop("nofrag", "scheme", "hostport", "host", "port", "portpart",
-        "pathq", "rawpath", "rawq", "path2", "q1")
+    val staged = df
+      .withColumns(ListMap(
+        "nofrag" -> expr("regexp_extract(url, '^([^#]*)', 1)")))
+      .withColumns(ListMap(
+        "scheme" -> expr("lower(regexp_extract(nofrag, '^([A-Za-z]+)://', 1))"),
+        "hostport" -> expr("lower(regexp_extract(nofrag, '^[A-Za-z]+://([^/?]*)', 1))"),
+        "pathq" -> expr("regexp_extract(nofrag, '^[A-Za-z]+://[^/?]*(.*)$', 1)")))
+      .withColumns(ListMap(
+        "host" -> expr("regexp_extract(hostport, '^([^:]*)', 1)"),
+        "port" -> expr("regexp_extract(hostport, ':([0-9]+)$', 1)"),
+        "rawpath" -> expr("regexp_extract(pathq, '^([^?]*)', 1)"),
+        "rawq" -> expr("regexp_extract(pathq, '[?](.*)$', 1)")))
+      .withColumns(ListMap(
+        "portpart" -> expr(
+          "CASE WHEN port = '' OR (scheme = 'http' AND port = '80')" +
+            " OR (scheme = 'https' AND port = '443')" +
+            " THEN '' ELSE concat(':', port) END"),
+        "path2" -> expr(
+          "pct_decode_unreserved(regexp_replace(" +
+            "CASE WHEN rawpath = '' THEN '/' ELSE rawpath END, '//+', '/'))"),
+        "q1" -> expr(
+          "array_join(array_sort(filter(split(rawq, '&'), x -> x <> ''" +
+            " AND NOT (x LIKE 'utm_%' OR x LIKE 'fbclid=%' OR x LIKE 'gclid=%'))), '&')")))
+    val canon = expr(
+      "concat(scheme, '://', host, portpart, path2," +
+        " CASE WHEN q1 = '' THEN '' ELSE concat('?', q1) END)").as("canon_url")
+    // the input's columns minus the temporaries, then canon_url (an
+    // input canon_url is replaced where it stands, as withColumn did)
+    val kept = df.columns.toSeq.filterNot(CanonTemps.contains)
+    staged.select(
+      (if (kept.contains("canon_url")) kept else kept :+ "canon_url").map(c =>
+        if (c == "canon_url") canon else col(s"`${c.replace("`", "``")}`")): _*)
   }
+
+  /** [[withCanonUrl]]'s intermediate columns, dropped from its output. */
+  private val CanonTemps = Set("nofrag", "scheme", "hostport", "host", "port",
+    "portpart", "pathq", "rawpath", "rawq", "path2", "q1")
 
   /** [[withCanonUrl]]'s DuckDB mirror: CTE defs (caller splices after
     * its own WITH items) reading CTE `src` (any columns + `url`) and

@@ -2027,10 +2027,11 @@ object Selection {
     * (rarest first) only while the cumulative df INCLUDING the
     * current term stays under this bound — the per-term analog of
     * the LSH hot-bucket cap, and the fix the sf1 soak prescribed
-    * (SOAK_r10/SCALING.md): on a vocabulary whose df scales linearly
-    * with the corpus, Σ df over 5 terms is Θ(corpus) per anchor and
-    * the candidate join goes quadratic; a CONSTANT budget bounds
-    * every anchor's candidate stream regardless of vocabulary shape.
+    * (evidence/archive/SOAK_r10*.json, SCALING.md): on a vocabulary
+    * whose df scales linearly with the corpus, Σ df over 5 terms is
+    * Θ(corpus) per anchor and the candidate join goes quadratic; a
+    * CONSTANT budget bounds every anchor's candidate stream regardless
+    * of vocabulary shape.
     * The gate is INCLUSIVE (cum < budget, not cum − df < budget):
     * an exclusive form would always admit one arbitrarily-hot term
     * per anchor whenever the preceding cumulative were under budget
